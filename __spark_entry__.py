@@ -84,6 +84,9 @@ def _overlap(*builders: Callable[[], DataFrame]) -> list[DataFrame]:
         return [_run(builders[0])]
     session = SparkSession.getActiveSession()
     wrap = inheritable_thread_target(session) if session else inheritable_thread_target
+    if isinstance(wrap, SparkSession):
+        # threads are not pinned: pyspark hands its argument back unwrapped
+        wrap = inheritable_thread_target
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
         return list(pool.map(wrap(_run), builders))
 

@@ -40,12 +40,13 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.urls import shard_col, with_canonical
+from .functions.urls import host_col, shard_col, with_canonical
 from .operators.fetch import run_fetch
 from .operators.frontier import (
     politeness_select,
@@ -54,7 +55,7 @@ from .operators.frontier import (
 )
 from .operators.seen_set import SeenSet
 from .plans.delta_frontier import DeltaFrontier
-from .plans.tables import SnapshotTable
+from .plans.tables import SnapshotTable, commit_json
 from pyspark.sql.types import StructType
 
 from .schemas import (
@@ -89,6 +90,18 @@ IMAGES_LANDED_COLS = [f.name for f in IMAGES.fields] + [
 IMAGES_LANDED = StructType(
     [next(f for f in FETCH_RESULT.fields if f.name == c) for c in IMAGES_LANDED_COLS]
 )
+PART_COUNTS = "partition_id int, urls_fetched long, urls_ok long, new_urls long, ok_links long"
+
+
+def _partition_counts(batches):
+    """mapInPandas body: per-partition counts of a fetch batch (no shuffle)."""
+    for pdf in batches:
+        yield pdf.groupby("partition_id", as_index=False).agg(
+            urls_fetched=("ok", "size"),
+            urls_ok=("ok", "sum"),
+            new_urls=("n_out", "sum"),
+            ok_links=("ok_links", "sum"),
+        )
 
 
 class CrawlEngine:
@@ -167,7 +180,7 @@ class CrawlEngine:
         )
 
     def _politeness(self) -> DataFrame:
-        return self.spark.read.parquet(self._dim_path("politeness"))
+        return self.spark.read.schema(POLITENESS).parquet(self._dim_path("politeness"))
 
     def _robots(self) -> DataFrame:
         """Grouped robots dim, cached once per engine (reused every round)."""
@@ -175,7 +188,7 @@ class CrawlEngine:
             from .operators.frontier import group_robots
 
             self._robots_grouped = group_robots(
-                self.spark.read.parquet(self._dim_path("robots"))
+                self.spark.read.schema(ROBOTS).parquet(self._dim_path("robots"))
             ).cache()
         return self._robots_grouped
 
@@ -210,39 +223,34 @@ class CrawlEngine:
         /robots.txt fetched during the crawl can declare a Crawl-delay
         (operators.frontier.parse_robots_crawl_delay), which feeds back into
         this dim. Takes effect from the NEXT round (the dim is re-read per
-        round); the cached any-delays flag is dropped so the pushback stage
-        re-arms."""
+        round); the cached dim facts are dropped so they re-derive."""
         self._write_dim("politeness", politeness, POLITENESS)
-        self._any_delays = None
-        self._n_salts = None  # budget-derived salts re-derive from the new dim
+        self._dim_facts = None
 
-    def _has_delays(self) -> bool:
-        """Cached once per engine: whether ANY host has a crawl delay — when
-        none do (common in benchmarks) the per-round pushback stage is
-        skipped entirely (the politeness dim is tiny, one limit-1 scan)."""
-        if getattr(self, "_any_delays", None) is None:
-            self._any_delays = (
-                self._politeness().filter(F.col("crawl_delay_rounds") > 0).limit(1).count() > 0
-            )
-        return self._any_delays
-
-    def _salts(self) -> int:
-        """Cached once per engine (re-derived after update_politeness):
-        POLITENESS salt count from the dim's MAX per-host budget via
-        auto_salt_buckets — keeps a 10^5-budget host's phase-1 cap
-        windows ~4k rows deep (r3 verdict item 7). Fetch-stage spreading
-        is governed separately by fetch_salt_buckets inside
-        salted_repartition. One tiny agg over the coalesce(1) dim, once
-        per crawl."""
-        if getattr(self, "_n_salts", None) is None:
+    def _politeness_facts(self):
+        """One aggregation over the politeness dim, cached per engine
+        (re-derived after update_politeness): ``salts``, the POLITENESS salt
+        count from the dim's MAX budget via auto_salt_buckets (keeps a
+        10^5-budget host's phase-1 windows ~4k rows deep); ``overrides``,
+        whether any budget differs from the default (else the selection's
+        budget join, a broadcast job per round, is the identity and is
+        skipped); ``delays``, whether any host has a crawl delay (else the
+        pushback stage is skipped)."""
+        if getattr(self, "_dim_facts", None) is None:
             from .operators.frontier import auto_salt_buckets
 
-            mx = (
-                self._politeness().agg(F.max("max_fetches_per_round")).collect()[0][0]
-                or 0
-            )
-            self._n_salts = auto_salt_buckets(max(int(mx), self.default_budget))
-        return self._n_salts
+            budget = F.coalesce(F.col("max_fetches_per_round"), F.lit(self.default_budget))
+            row = self._politeness().agg(
+                F.max(budget).alias("max_budget"),
+                F.max((budget != self.default_budget).cast("int")).alias("overrides"),
+                F.max((F.col("crawl_delay_rounds") > 0).cast("int")).alias("delays"),
+            ).collect()[0]
+            self._dim_facts = {
+                "salts": auto_salt_buckets(max(int(row["max_budget"] or 0), self.default_budget)),
+                "overrides": bool(row["overrides"]),
+                "delays": bool(row["delays"]),
+            }
+        return self._dim_facts
 
     # ------------------------------------------------- pagerank priorities
     def _host_ranks(self) -> DataFrame | None:
@@ -301,54 +309,54 @@ class CrawlEngine:
         cutoff = getattr(self, "_recrawl_cutoff", None)
         return None if cutoff is None or cutoff < 0 else cutoff + 1
 
-    def _expire_and_reenqueue(self, r: int) -> None:
-        """Re-crawl policy step (runs before the round reads the frontier):
-        forget the URLs fetched in round r - recrawl_after - 1 (cuckoo
-        prefilter deletes their fingerprints; blooms stay conservative)
-        and re-enqueue them as fresh frontier rows eligible this round."""
-        from .functions.urls import host_col
+    def run_round(self) -> dict:
+        # phases that do not feed the next run in this pool: latency, not
+        # CPU, dominates a small round's Spark jobs
+        with ThreadPoolExecutor(8) as ex:
+            return self._round(ex)
 
-        cutoff = r - self.recrawl_after - 1
-        self._recrawl_cutoff = cutoff
-        if cutoff < 0:
-            return
-        expired = self.seen.expire(self.spark, cutoff)
-        if expired is None:
-            return
-        try:
-            # pagerank mode: re-enqueues use the rank table as of the
-            # PREVIOUS round's edges (this runs before the round fetches;
-            # the simulator applies the same ordering)
+    def _round(self, ex) -> dict:
+        r = self.next_round
+        t0 = time.monotonic()
+        frontier_snap = self.frontier.version()
+        frontier_df = self.frontier.read(self.spark)
+        # the links probe reads the round-start state whatever this round has
+        # committed by then, one plan on every run. Its pending dedupe reads
+        # the raw rows: a tombstoned row's URL was fetched, so it is still
+        # seen, re-enqueued as a live row, or in this round's batch
+        pending = self.frontier.rows.read(self.spark).select("url_hash", "url", "shard")
+        seen_tables = (self.seen.seen.read(self.spark), self.seen.bloom.read(self.spark))
+        expired = None
+        if self.recrawl_after is not None:
+            self._recrawl_cutoff = cutoff = r - self.recrawl_after - 1
+            expired = self.seen.expired_rows(self.spark, cutoff)
+        f_renew = None
+        if expired is not None:
+            # re-crawl policy: the URLs fetched in round r - recrawl_after - 1
+            # re-enter the frontier, eligible now (pagerank mode: ranked by
+            # the previous round's edges, as in the simulator). The round
+            # reads them directly (no delay event or tombstone applies to
+            # them yet); their append and the cuckoo deletes commit after
+            # the fetch. added_in = r - 1: they were present BEFORE round r,
+            # so round-r delay events apply to them, and their old
+            # tombstones (removed_in <= r - 2) do not.
             renew = (
-                self._link_priority(
-                    expired.withColumn("host", host_col(F.col("url")))
-                )
+                self._link_priority(expired.withColumn("host", host_col(F.col("url"))))
                 .withColumn("depth", F.lit(0))
                 .withColumn("not_before_round", F.lit(r))
                 .withColumn("attempts", F.lit(0))
                 .select([f.name for f in FRONTIER.fields])
             )
-            # added_in = r - 1: re-enqueued rows were conceptually present
-            # BEFORE round r, so round-r delay events apply to them (links
-            # minted in round r stay exempt) — and the round-aware
-            # tombstone anti-join (removed_in >= added_in) no longer kills
-            # them: their fetch round is <= r - 2 for recrawl_after >= 1.
-            self.frontier.insert(renew, r - 1)
-        finally:
-            expired.unpersist()
-
-    def run_round(self) -> dict:
-        r = self.next_round
-        t0 = time.monotonic()
-        if self.recrawl_after is not None:
-            self._expire_and_reenqueue(r)
-        frontier_snap = self.frontier.version()
-        frontier_df = self.frontier.read(self.spark)
+            frontier_df = frontier_df.unionByName(renew)
+            pending = pending.unionByName(renew.select("url_hash", "url", "shard"))
 
         eligible = frontier_df.filter(F.col("not_before_round") <= r)
-        n_salts = self._salts()
+        facts = self._politeness_facts()
         selected = politeness_select(
-            eligible, self._politeness(), self.default_budget, n_salts=n_salts
+            eligible,
+            self._politeness() if facts["overrides"] else None,
+            self.default_budget,
+            n_salts=facts["salts"],
         )
 
         # fetch salt intentionally NOT the politeness salt: budgets are
@@ -358,54 +366,61 @@ class CrawlEngine:
             salted_repartition(selected, self.fetch_partitions), r, self.max_depth
         ).persist()
 
-        # ONE aggregation covers every per-round statistic (keeping the
-        # number of Spark jobs per round flat is what makes small rounds
-        # cheap and scaling efficiency honest)
-        totals = fetched.agg(
-            F.count("*").alias("n_fetched"),
-            F.sum((F.col("status") == 200).cast("long")).alias("n_ok"),
-            F.sum(F.size("outlinks")).alias("n_outlinks"),
-        ).collect()[0]
-        n_selected = totals["n_fetched"] or 0
+        # ONE job covers every per-round statistic: per-partition counts,
+        # summed on the driver
+        ok = (F.col("status") == 200).cast("long")
+        n_out = F.coalesce(F.size("outlinks"), F.lit(0)).cast("long")
+        counts = pd.DataFrame(
+            fetched.select("partition_id", ok.alias("ok"), n_out.alias("n_out"), (ok * n_out).alias("ok_links"))
+            .mapInPandas(_partition_counts, PART_COUNTS)
+            .collect(),
+            columns=[c.split()[0] for c in PART_COUNTS.split(", ")],
+        ).groupby("partition_id", as_index=False).sum()
+        n_selected = int(counts["urls_fetched"].sum())
         t_fetch = time.monotonic()
+        if expired is not None:
+            # after the fetch: no job of the round races it for cores
+            f_renew = ex.submit(self.frontier.insert, renew, r - 1)
 
         if n_selected == 0:
             # nothing eligible this round (all delayed); advance the clock
+            if expired is not None:
+                f_renew.result()
+                self.seen.expire(self.spark, cutoff, expired)
             fetched.unpersist()
             self.next_round = r + 1
             self._commit_checkpoint()
             return {"round": r, "selected": 0, "fetched": 0, "ok": 0, "new_urls": 0}
 
-        # 1+2. everything that depends ONLY on the cached fetch batch runs
-        # concurrently: images append ∥ seen-set add ∥ frontier tombstones ∥
-        # metrics (the Spark scheduler accepts jobs from multiple threads;
-        # latency, not CPU, dominates these at small round sizes — keeping
-        # them off the critical path is what the scaling efficiency measures)
-        from concurrent.futures import ThreadPoolExecutor
+        self.metrics.append(
+            counts.drop(columns="ok_links").assign(
+                round=r,
+                urls_selected=n_selected,
+                rows_landed=counts["urls_ok"],
+                wall_ms=int((time.monotonic() - t0) * 1000),
+                input_snapshot=f"frontier@{frontier_snap}",
+            ),
+            {"round": r},
+        )
+        # compaction rides the round's writes: the seen add writes the
+        # folded exact set, and the frontier fold takes the round's links
+        compact = self.frontier.compaction_due(r, n_selected)
 
         landed = fetched.filter(F.col("status") == 200).select(IMAGES_LANDED_COLS)
-        part_metrics = (
-            fetched.groupBy("partition_id")
-            .agg(
-                F.count("*").alias("urls_fetched"),
-                F.sum((F.col("status") == 200).cast("long")).alias("urls_ok"),
-                F.sum(F.size("outlinks")).alias("new_urls"),
-                F.sum((F.col("status") == 200).cast("long")).alias("rows_landed"),
-            )
-            .withColumn("round", F.lit(r))
-            .withColumn("urls_selected", F.lit(n_selected))
-            .withColumn("wall_ms", F.lit(int((time.monotonic() - t0) * 1000)))
-            .withColumn("input_snapshot", F.lit(f"frontier@{frontier_snap}"))
-            .select([f.name for f in ROUND_METRICS.fields])
-            .coalesce(1)
+        fetched_keys = fetched.select(
+            "url_hash", "url", shard_col(F.col("url_hash"), self.n_shards).alias("shard")
         )
-        def _links_job() -> int:
-            # 3. discovered outlinks -> new frontier rows. Runs CONCURRENTLY
-            # with the seen update: the probe may bind either the pre- or
-            # post-update seen/bloom snapshots — every combination is exact
-            # because links equal to a just-fetched URL are removed by the
-            # explicit anti-join against the (broadcast-small) fetch batch,
-            # and no other URL's membership changes within the round.
+
+        def _seen_job() -> None:
+            if expired is not None:  # before the add: both rewrite the filter
+                self.seen.expire(self.spark, cutoff, expired)
+            self.seen.add(self.spark, fetched_keys, r, n_selected, compact, self._seen_min_round())
+
+        def _links_job() -> DataFrame:
+            # discovered outlinks -> new frontier rows, CONCURRENTLY with the
+            # seen update. The round-start seen set is exact: expired rows are
+            # skipped by round_added, the fetch batch is blocked, and no other
+            # URL's membership changes within the round
             links = (
                 fetched.filter(F.col("status") == 200)
                 .select(
@@ -430,94 +445,58 @@ class CrawlEngine:
                 )
                 self.host_edges.append(new_edges, {"round": r})
             links = self._link_priority(links.drop("__src_host"))
-            links = links.join(
-                fetched.select("url_hash", "url"), ["url_hash", "url"], "left_anti"
-            )
-            # within-round URL dedupe (min depth) folds into the probe's
-            # shard cogroup — url determines shard, so it is shard-local
-            links = self.seen.filter_unseen(
-                self.spark, links, dedupe_min_depth=True,
-                min_round_added=self._seen_min_round(),
-            )
-            # within-frontier dedupe: a link already pending must not
-            # re-enter (frontier_df is bound to the round-start snapshot).
-            # The anti-join's frontier side is PRUNED to the link batch's
-            # hit shards (r4): the rows store is hive-partitioned by shard,
-            # so the shard IN-list is a file-level partition prune — the
-            # last O(frontier)-per-round read becomes O(hit shards). The
-            # links cache + shard collect are one small job over O(round)
-            # rows; at 2^14 shards a small round hits a handful of shards.
-            links_cached = links.persist()
-            try:
-                hit_shards = [
-                    row["shard"] for row in links_cached.select("shard").distinct().collect()
-                ]
-                if hit_shards:
-                    pending = frontier_df.filter(F.col("shard").isin(hit_shards)).select(
-                        "url_hash", "url"
-                    )
-                    fresh = links_cached.join(pending, ["url_hash", "url"], "left_anti")
-                    new_rows = (
-                        fresh.withColumn("not_before_round", F.lit(r + 1))
-                        .withColumn("attempts", F.lit(0))
-                        .select([f.name for f in FRONTIER.fields])
-                    )
-                    n_ins = self.frontier.insert(new_rows, r)
-                else:
-                    n_ins = 0
-            finally:
-                # unpersist on every path — an exception in the collect /
-                # anti-join / insert must not leak the cache for the session
-                links_cached.unpersist()
-            return n_ins
-
-        with ThreadPoolExecutor(6) as ex:
-            f_images = ex.submit(self.images.append, landed, {"round": r})
-            f_seen = ex.submit(
-                self.seen.add,
+            # one probe dedupes within the batch (min depth), against the
+            # seen set, and against the pending frontier + fetch batch
+            fresh = self.seen.filter_unseen(
                 self.spark,
-                fetched.select(
-                    "url",
-                    "url_hash",
-                    shard_col(F.col("url_hash"), self.n_shards).alias("shard"),
-                ),
-                r,
-                n_selected,
+                links,
+                dedupe_min_depth=True,
+                min_round_added=self._seen_min_round(),
+                blocked=fetched_keys.unionByName(pending),
+                tables=seen_tables,
             )
-            f_rm = ex.submit(self.frontier.remove, fetched, r, n_selected)
-            f_metrics = ex.submit(self.metrics.append, part_metrics, {"round": r})
-            f_insert = ex.submit(_links_job)
-            f_delay = None
-            if self._has_delays():
-                delayed_hosts = (
-                    fetched.select("host")
-                    .distinct()
-                    .join(self._politeness().filter(F.col("crawl_delay_rounds") > 0), "host")
-                    .select("host", "crawl_delay_rounds")
-                )
-                f_delay = ex.submit(self.frontier.delay_hosts, delayed_hosts, r)
-            images_snap = f_images.result()
-            t_images = time.monotonic()
-            f_seen.result()
-            f_rm.result()
-            f_metrics.result()
-            t_seen = time.monotonic()
-            f_insert.result()
-            if f_delay is not None:
-                f_delay.result()
-        if self.frontier.maybe_compact(self.spark, r):
-            # same cadence: fold the seen table's per-round appends so the
-            # probe's union-of-snapshots read stays bounded (seen_set.compact);
-            # re-crawl mode also physically drops logically-expired rows here
-            self.seen.compact(self.spark, min_round_added=self._seen_min_round())
+            new_rows = fresh.withColumns({"not_before_round": F.lit(r + 1), "attempts": F.lit(0)})
+            new_rows = new_rows.select([f.name for f in FRONTIER.fields])
+            if not compact:
+                if f_renew is not None:
+                    f_renew.result()  # both append to the frontier rows table
+                self.frontier.insert(new_rows, r)
+            return new_rows
+
+        f_images = ex.submit(self.images.append, landed, {"round": r})
+        f_seen = ex.submit(_seen_job)
+        f_rm = ex.submit(self.frontier.remove, fetched, r, n_selected)
+        # a round whose landed pages link nowhere has no links job
+        f_links = ex.submit(_links_job) if counts["ok_links"].sum() else None
+        f_delay = None
+        if facts["delays"]:
+            delayed_hosts = (
+                fetched.select("host")
+                .distinct()
+                .join(self._politeness().filter(F.col("crawl_delay_rounds") > 0), "host")
+                .select("host", "crawl_delay_rounds")
+            )
+            f_delay = ex.submit(self.frontier.delay_hosts, delayed_hosts, r)
+        images_snap = f_images.result()
+        t_images = time.monotonic()
+        f_seen.result()
+        f_rm.result()
+        t_seen = time.monotonic()
+        new_rows = f_links.result() if f_links is not None else None
+        for f in (f_delay, f_renew):
+            if f is not None:
+                f.result()
+        if compact:
+            # after every append, tombstone and delay event of the round
+            self.frontier.compact(self.spark, r, new_rows)
         t_frontier = time.monotonic()
 
         stats = {
             "round": r,
             "selected": n_selected,
             "fetched": n_selected,
-            "ok": int(totals["n_ok"] or 0),
-            "new_urls": int(totals["n_outlinks"] or 0),  # discovered (pre-dedupe)
+            "ok": int(counts["urls_ok"].sum()),
+            "new_urls": int(counts["new_urls"].sum()),  # discovered (pre-dedupe)
             "images_snapshot": images_snap,
             "wall_s": time.monotonic() - t0,
             "phases": {
@@ -576,10 +555,7 @@ class CrawlEngine:
         if self.host_edges is not None:
             state["host_edges"] = self.host_edges.current_snapshot
             state["priority_mode"] = self.priority_mode
-        tmp = self._ckpt_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._ckpt_path())
+        commit_json(self._ckpt_path(), state)
 
     @classmethod
     def resume(cls, spark: SparkSession, base_path: str, **kwargs) -> "CrawlEngine":

@@ -18,21 +18,34 @@ Convergence is detected by counting changed labels (one action per round).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+_BYTE_UNITS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30, "gb": 30, "t": 40, "tb": 40}
+LOCAL_CC_EDGE_CAP = 1 << 20  # edges: bounds the driver collect whatever the threshold
+
+
+def _size_bytes(value: str) -> int:
+    """A Spark byte-size string ('10485760', '10485760b', '20m', '1g',
+    '-1') in bytes, with Spark's binary units; anything else raises."""
+    m = re.fullmatch(r"\s*(-?\d+)\s*([a-z]*)\s*", value.lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) << _BYTE_UNITS[m.group(2)]
 
 
 def _local_cc_max_edges(spark) -> int:
     """Edge-count ceiling for the driver-side union-find path: tied to
     the session's broadcast threshold (the same "small enough to hold on
     the driver" judgment Spark itself makes for joins), at ~64 bytes per
-    collected edge row. autoBroadcastJoinThreshold=-1 disables it."""
-    try:
-        thresh = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
-    except ValueError:
-        thresh = 10 * 1024 * 1024
-    return max(thresh, 0) // 64
+    collected edge row, and capped at LOCAL_CC_EDGE_CAP edges.
+    autoBroadcastJoinThreshold=-1 disables it."""
+    thresh = _size_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
+    return min(max(thresh, 0) // 64, LOCAL_CC_EDGE_CAP)
 
 
 def connected_components(

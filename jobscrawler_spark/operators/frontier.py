@@ -156,16 +156,20 @@ def politeness_select(
     """Per-host top-budget selection ordered by (priority, url).
 
     ``politeness`` dim: (host, max_fetches_per_round, crawl_delay_rounds).
-    Hosts missing from the dim get ``default_budget``. Budget 0 hosts are
-    never selected. Applied BEFORE salting so salts can't violate budgets.
+    Hosts missing from the dim get ``default_budget``; ``None`` means every
+    host does (no budget join). Budget 0 hosts are never selected.
+    Applied BEFORE salting so salts can't violate budgets.
     ``n_salts`` defaults to auto_salt_buckets(default_budget); the engine
     passes the dim's max budget through auto_salt_buckets instead.
     """
     if n_salts is None:
         n_salts = auto_salt_buckets(default_budget)
-    cand = candidates.join(
-        F.broadcast(politeness.select("host", "max_fetches_per_round")), "host", "left"
-    ).withColumn("__budget", F.coalesce(F.col("max_fetches_per_round"), F.lit(default_budget)))
+    if politeness is None:
+        cand = candidates.withColumn("__budget", F.lit(default_budget))
+    else:
+        cand = candidates.join(
+            F.broadcast(politeness.select("host", "max_fetches_per_round")), "host", "left"
+        ).withColumn("__budget", F.coalesce(F.col("max_fetches_per_round"), F.lit(default_budget)))
 
     # phase 1: cheap local cap per (host, salt) — bounds the skewed host's
     # contribution to the exact window below

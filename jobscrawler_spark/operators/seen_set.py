@@ -13,8 +13,9 @@ the engine's core operator at frontier scale:
   (no false negatives), a bloom hit falls through to an exact anti-join
   on ``(url_hash, url)`` — url included so a 64-bit hash collision can
   never evict a URL. Exactness is what the north rule demands.
-- bloom build/update/probe run as grouped-map / cogrouped-map pandas ops,
-  so bloom bits cross the Arrow boundary once per SHARD, never per row.
+- bloom build/update/probe run as grouped-map pandas ops over the rows
+  and the bloom table in one shuffle (``_with_bloom``), so bloom bits
+  cross the Arrow boundary once per SHARD, never per row.
 
 At 10^10 URLs: N_SHARDS becomes 2^14, each shard ~6e5 items -> ~1.2 MB of
 bloom bits at 16 bits/item; probe stays a co-partitioned join on `shard`.
@@ -22,10 +23,14 @@ bloom bits at 16 bits/item; probe stays a co-partitioned join on `shard`.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from ..plans.tables import SnapshotTable
 from ..schemas import SEEN_BLOOM, SEEN_SET
@@ -185,6 +190,27 @@ class _CuckooBackend:
 PREFILTERS = {"bloom": _BloomBackend, "cuckoo": _CuckooBackend}
 
 
+def _built_row(backend, shard: int, hashes: np.ndarray) -> pd.DataFrame:
+    """A fresh bloom-table row for ``hashes``, doubling the size until the
+    backend can hold them (cuckoo builds may fail over capacity)."""
+    size = backend.size_for(len(hashes))
+    bits = backend.build(hashes, size)
+    while bits is None:
+        size <<= 1
+        bits = backend.build(hashes, size)
+    return pd.DataFrame(
+        [{"shard": shard, "bits": bits, "n_items": len(hashes), "n_bits": size, "n_hashes": N_HASHES}]
+    )
+
+
+def _shard_summary(batches):
+    """mapInPandas body: per batch, each shard present and whether any of
+    its rows is a bloom hit — the probe's one collect, with no shuffle."""
+    for pdf in batches:
+        hit = pdf.groupby("shard")["__maybe"].any()
+        yield pd.DataFrame({"shard": hit.index.astype("int32"), "hit": hit.to_numpy()})
+
+
 # ---------------------------------------------------------------------------
 # SeenSet
 # ---------------------------------------------------------------------------
@@ -215,226 +241,201 @@ class SeenSet:
         new_urls: DataFrame,
         round_no: int,
         n_new: int | None = None,
+        compact: bool = False,
+        min_round_added: int | None = None,
     ) -> None:
         """Append (url_hash, url, shard) rows and fold them into the shard
-        blooms via a cogrouped-map (old bloom row + new hashes per shard).
+        blooms via a grouped map (old bloom row + new hashes per shard).
 
-        ``n_new`` skips the count action when the caller already knows it
-        (the engine does — one aggregation over the fetched batch covers
-        every per-round statistic).
+        ``n_new`` (the caller usually knows it) skips a count; it is kept
+        per round in the manifest, where ``expire`` finds it. ``compact``
+        writes the exact set as one ``compact`` overwrite that includes the
+        new rows, so compaction rides the round's write.
         """
-        rows = new_urls.select("url_hash", "url", "shard").withColumn(
-            "round_added", F.lit(round_no)
-        ).select([f.name for f in SEEN_SET.fields])
-        if self.partition_writes:
-            # cluster rows by shard BEFORE the hive-partitioned write: each
-            # task then writes whole shards (≈ n_shards files per round)
-            # instead of every task spraying a file into every shard dir
-            rows = rows.repartition(F.col("shard"))
-        rows = rows.persist()
+        rows = new_urls.select("url_hash", "url", "shard", F.lit(round_no).alias("round_added"))
         if n_new is None:
             n_new = rows.count()
         if n_new == 0:
-            rows.unpersist()
             return
-
-        old_bloom = self.bloom.read(spark)
         backend = self.backend
 
         def update(key, new_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
             if new_pdf.empty:
-                # cogroup visits the union of keys: a shard present only in
-                # old_bloom has nothing to fold in and is already carried by
-                # the `untouched` anti-join union below — emitting a row here
-                # would duplicate it (one extra full bit-array per idle round)
-                return bloom_pdf.iloc[0:0]
-            shard = int(key[0])
+                return bloom_pdf  # idle shard: carry its row unchanged
             hashes = new_pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
             if bloom_pdf.empty:
-                size = backend.size_for(len(hashes))
-                bits = backend.build(hashes, size)
-                while bits is None:  # cuckoo over capacity: double and retry
-                    size <<= 1
-                    bits = backend.build(hashes, size)
-                n_items = len(hashes)
-            else:
-                row = bloom_pdf.iloc[0]
-                size = int(row["n_bits"])
-                n_items = int(row["n_items"]) + len(hashes)
-                bits = (
-                    None
-                    if backend.needs_rebuild(n_items, size)
-                    else backend.fold(bytes(row["bits"]), size, hashes)
-                )
-                if bits is None:
-                    # grown past capacity: caller must rebuild this shard
-                    # from the exact set; flag with n_bits=0
-                    return pd.DataFrame(
-                        [{"shard": shard, "bits": b"", "n_items": n_items, "n_bits": 0, "n_hashes": N_HASHES}]
-                    )
-            return pd.DataFrame(
-                [{"shard": shard, "bits": bits, "n_items": n_items, "n_bits": size, "n_hashes": N_HASHES}]
+                return _built_row(backend, int(key[0]), hashes)
+            row = bloom_pdf.iloc[0]
+            size = int(row["n_bits"])
+            n_items = int(row["n_items"]) + len(hashes)
+            bits = (
+                None
+                if backend.needs_rebuild(n_items, size)
+                else backend.fold(bytes(row["bits"]), size, hashes)
             )
+            if bits is None:
+                # grown past capacity: caller must rebuild this shard from
+                # the exact set; flag with n_bits=0
+                size, bits = 0, b""
+            return bloom_pdf.assign(bits=[bits], n_items=n_items, n_bits=size)
 
-        updated = (
-            rows.groupBy("shard")
-            .cogroup(old_bloom.groupBy("shard"))
-            .applyInPandas(update, schema=SEEN_BLOOM)
-        )
-        # shards with no new rows keep their old bloom row
-        untouched = old_bloom.join(rows.select("shard").distinct(), "shard", "left_anti")
-        merged = updated.unionByName(untouched).persist()
+        updated = self._with_bloom(spark, rows, update, SEEN_BLOOM)
 
-        # the exact-set append and the bloom fold are independent jobs over
-        # the cached rows — run them concurrently (scheduler latency, not
-        # CPU, dominates them at small round sizes)
-        def _bloom_job() -> list[int]:
-            shards = [
-                r["shard"]
-                for r in merged.filter(F.col("n_bits") == 0).select("shard").collect()
-            ]
-            self.bloom.overwrite(merged, meta={"round": round_no})
-            return shards
-
-        from concurrent.futures import ThreadPoolExecutor
-
+        # the exact-set write and the bloom fold are independent jobs: run
+        # them concurrently (latency, not CPU, dominates small rounds)
         with ThreadPoolExecutor(2) as ex:
-            f_append = ex.submit(
-                self.seen.append,
-                rows,
-                {"round": round_no, "rows": n_new},
-                # hive-partitioned: the probe prunes to hit shards
-                "shard" if self.partition_writes else None,
-            )
-            f_bloom = ex.submit(_bloom_job)
-            f_append.result()
-            needs_rebuild = f_bloom.result()
-        merged.unpersist()
-        rows.unpersist()
+            if compact:
+                f_seen = ex.submit(self.compact, spark, min_round_added, rows, {round_no: n_new})
+            else:
+                f_seen = ex.submit(
+                    self.seen.append,
+                    self._clustered(rows),
+                    {"round": round_no, "rows": n_new},
+                    # hive-partitioned: the probe prunes to hit shards
+                    "shard" if self.partition_writes else None,
+                )
+            f_bloom = ex.submit(self.bloom.overwrite, updated, {"round": round_no})
+            f_seen.result()
+            f_bloom.result()
+        # capacity flags: header columns read on the driver, no Spark job
+        flags = self.bloom.read_local(["shard", "n_bits"])
+        needs_rebuild = [int(x) for x in flags.loc[flags["n_bits"] == 0, "shard"]]
         if needs_rebuild:
             self._rebuild_shards(spark, needs_rebuild)
 
-    def expire(self, spark: SparkSession, round_added: int):
-        """Forget the URLs fetched in exactly ``round_added`` (the engine's
-        re-crawl-after-N-rounds policy calls this once per round, so each
-        round value is processed exactly once). Returns the expired rows
-        (url_hash, url, shard — PERSISTED; caller unpersists) or None when
-        there are none.
+    def _with_bloom(self, spark: SparkSession, df: DataFrame, fn, schema, bloom=None) -> DataFrame:
+        """``fn(key, data_pdf, bloom_pdf)`` per shard over ``df`` and the
+        bloom rows (default: current) in ONE shuffle: a tagged union feeds
+        one groupBy (a cogroup shuffles each side as a stage, i.e. a Spark
+        job, of its own). Missing columns are filled with typed zeros, not
+        nulls: a null would turn the int64 hash column into float64 in pandas."""
+        bloom = self.bloom.read(spark) if bloom is None else bloom
+        data_cols, bloom_cols = df.columns, bloom.columns
 
-        Expiry is LOGICAL on the exact set: rows stay until compact()
-        drops them, and probes pass ``min_round_added`` to ignore them —
-        an O(seen) rewrite per round would be the scale-killer. The
-        PREFILTER however is updated eagerly where the backend supports
-        it: the cuckoo filter DELETES the expired fingerprints per shard
-        (cogrouped map, O(expired + touched shards) — the deletable
-        capability blooms lack, operators/cuckoo.py); the bloom backend
-        stays stale-conservative (a stale bit costs one exact-backstop
-        probe, never a wrong answer). The expired-row scan prunes by
-        parquet round_added min/max stats: each per-round append snapshot
-        holds a single round value."""
-        if self.seen.current_snapshot is None:
+        def pad(side: DataFrame, other: DataFrame, is_bloom: bool) -> DataFrame:
+            fill = [
+                (F.lit(0) if isinstance(f.dataType, NumericType) else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in other.schema.fields
+                if f.name not in side.columns
+            ]
+            return side.select("*", *fill, F.lit(is_bloom).alias("__bloom"))
+
+        def apply(key, pdf):
+            is_bloom = pdf["__bloom"].to_numpy(dtype=bool)
+            return fn(key, pdf.loc[~is_bloom, data_cols], pdf.loc[is_bloom, bloom_cols])
+
+        tagged = pad(df, bloom, False).unionByName(pad(bloom, df, True))
+        return tagged.groupBy("shard").applyInPandas(apply, schema=schema)
+
+    def _round_rows(self) -> dict[int, int]:
+        """Live exact-set rows per round_added, from the manifest: appends
+        record their round's row count, compactions the counts they kept."""
+        counts: dict[int, int] = {}
+        for s in self.seen._snaps_at(None):
+            meta = s["meta"]
+            if "round_rows" in meta:
+                counts.update({int(k): v for k, v in meta["round_rows"].items()})
+            else:
+                counts[meta["round"]] = counts.get(meta["round"], 0) + meta["rows"]
+        return counts
+
+    def expired_rows(self, spark: SparkSession, round_added: int) -> DataFrame | None:
+        """The exact-set rows (url_hash, url, shard) added in
+        ``round_added``, or None when the manifest's per-round row counts
+        say there are none — no Spark job either way."""
+        if not self._round_rows().get(round_added):
             return None
-        expired = (
+        return (
             self.seen.read(spark)
             .filter(F.col("round_added") == round_added)
             .select("url_hash", "url", "shard")
-            .persist()
         )
-        if expired.count() == 0:
-            expired.unpersist()
-            return None
+
+    def expire(self, spark: SparkSession, round_added: int, expired: DataFrame | None = None):
+        """Forget the URLs fetched in exactly ``round_added`` (the engine's
+        re-crawl policy calls this once per round value); returns their
+        ``expired_rows``, which a caller that already holds them passes as
+        ``expired``.
+
+        Expiry is LOGICAL on the exact set: rows stay until compact()
+        drops them, and probes pass ``min_round_added`` to ignore them (an
+        O(seen) rewrite per round would be the scale-killer). The cuckoo
+        prefilter DELETES the expired fingerprints eagerly (grouped map,
+        O(expired + shards)); a bloom stays stale-conservative: a stale bit
+        costs one exact-backstop probe, never a wrong answer."""
+        if expired is None:
+            expired = self.expired_rows(spark, round_added)
         backend = self.backend
-        if not backend.can_delete or self.bloom.current_snapshot is None:
+        if expired is None or not backend.can_delete or self.bloom.is_empty():
             return expired  # bloom: leave the filter stale-conservative
-        old_bloom = self.bloom.read(spark)
 
         def drop(key, exp_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
             if exp_pdf.empty or bloom_pdf.empty:
-                return bloom_pdf.iloc[0:0]
+                return bloom_pdf  # idle shard: carry its row unchanged
             row = bloom_pdf.iloc[0]
             size = int(row["n_bits"])
             if size == 0:
-                return bloom_pdf  # capacity-flag row: rebuild will rebuild from the exact set
+                return bloom_pdf  # capacity flag: the rebuild reads the exact set
             hashes = exp_pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
             bits, n_removed = backend.remove(bytes(row["bits"]), size, hashes)
-            return pd.DataFrame(
-                [
-                    {
-                        "shard": int(key[0]),
-                        "bits": bits,
-                        "n_items": int(row["n_items"]) - n_removed,
-                        "n_bits": size,
-                        "n_hashes": int(row["n_hashes"]),
-                    }
-                ]
-            )
+            return bloom_pdf.assign(bits=[bits], n_items=int(row["n_items"]) - n_removed)
 
-        updated = (
-            expired.groupBy("shard")
-            .cogroup(old_bloom.groupBy("shard"))
-            .applyInPandas(drop, schema=SEEN_BLOOM)
-        )
-        untouched = old_bloom.join(expired.select("shard").distinct(), "shard", "left_anti")
-        self.bloom.overwrite(
-            updated.unionByName(untouched), meta={"expired_round": round_added}
-        )
+        updated = self._with_bloom(spark, expired, drop, SEEN_BLOOM)
+        self.bloom.overwrite(updated, meta={"expired_round": round_added})
         return expired
 
-    def compact(self, spark: SparkSession, min_round_added: int | None = None) -> None:
-        """Fold the per-round appended snapshots into one overwrite.
+    def compact(
+        self,
+        spark: SparkSession,
+        min_round_added: int | None = None,
+        new_rows: DataFrame | None = None,
+        new_counts: dict | None = None,
+    ) -> None:
+        """Fold the per-round appended snapshots (plus ``new_rows``, whose
+        per-round counts are ``new_counts`` — ``add`` passes its round's
+        rows here) into one overwrite.
 
-        The snapshot layer reads a partitioned table as a UNION of
-        per-snapshot scans (hive layouts cannot share one multi-root
-        read), so probe-plan size grows linearly with appended rounds —
-        measured +0.15 s/round at sandbox scale. The engine compacts on
-        the frontier's compact_every cadence, bounding the union at
-        compact_every snapshots. (Real Iceberg makes this unnecessary:
-        its manifests give appends a single-scan read; this is the
-        emulation layer's equivalent maintenance action.)
+        A partitioned table reads as a UNION of per-snapshot scans, so the
+        probe plan grows with appended rounds; the engine compacts on the
+        frontier's cadence (real Iceberg manifests make this unneeded).
 
         ``min_round_added`` (re-crawl mode): physically drop the
-        logically-expired rows while we are rewriting anyway — expiry
-        itself never pays an O(seen) write. The fold is sorted by
-        round_added within partitions so the expiry scan's
-        ``round_added == cutoff`` filter keeps parquet row-group min/max
-        pruning over the compacted base too (pre-compaction appends
-        prune for free: one round value per snapshot)."""
-        if self.seen.current_snapshot is None:
+        logically-expired rows while rewriting anyway. The fold is sorted
+        by round_added within partitions, so the expiry scan's
+        ``round_added == cutoff`` filter keeps parquet min/max pruning. The
+        kept rounds' row counts carry forward in the manifest."""
+        if self.seen.current_snapshot is None and new_rows is None:
             return
+        kept = {
+            r: n
+            for r, n in {**self._round_rows(), **(new_counts or {})}.items()
+            if min_round_added is None or r >= min_round_added
+        }
         rows = self.seen.read(spark)
+        if new_rows is not None:
+            rows = rows.unionByName(new_rows)
         if min_round_added is not None:
             rows = rows.filter(F.col("round_added") >= min_round_added)
-        if self.partition_writes:
-            rows = rows.repartition(F.col("shard"))
-        rows = rows.sortWithinPartitions("round_added")
         self.seen.overwrite(
-            rows,
-            meta={"compact": True},
+            self._clustered(rows).sortWithinPartitions("round_added"),
+            meta={"compact": True, "round_rows": kept},
             partition_by="shard" if self.partition_writes else None,
         )
+
+    def _clustered(self, rows: DataFrame) -> DataFrame:
+        """Cluster rows by shard before a hive-partitioned write: each task
+        then writes whole shards, not a file per task per shard."""
+        return rows.repartition(F.col("shard")) if self.partition_writes else rows
 
     def _rebuild_shards(self, spark: SparkSession, shards: list[int]) -> None:
         full = self.seen.read(spark).filter(F.col("shard").isin(shards))
         backend = self.backend
 
-        def rebuild(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def rebuild(key, pdf):
             hashes = pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-            size = backend.size_for(len(hashes))
-            bits = backend.build(hashes, size)
-            while bits is None:
-                size <<= 1
-                bits = backend.build(hashes, size)
-            return pd.DataFrame(
-                [
-                    {
-                        "shard": int(key[0]),
-                        "bits": bits,
-                        "n_items": len(hashes),
-                        "n_bits": size,
-                        "n_hashes": N_HASHES,
-                    }
-                ]
-            )
+            return _built_row(backend, int(key[0]), hashes)
 
         rebuilt = full.groupBy("shard").applyInPandas(rebuild, schema=SEEN_BLOOM)
         others = self.bloom.read(spark).filter(~F.col("shard").isin(shards))
@@ -447,43 +448,28 @@ class SeenSet:
         candidates: DataFrame,
         dedupe_min_depth: bool = False,
         min_round_added: int | None = None,
+        blocked: DataFrame | None = None,
+        tables: tuple[DataFrame, DataFrame] | None = None,
     ) -> DataFrame:
-        """Rows of ``candidates`` whose (url_hash, url) is not in the set.
+        """Rows of ``candidates`` whose (url_hash, url) is neither in the
+        set nor among the ``blocked`` (url_hash, url, shard) rows — the
+        engine passes its pending frontier and fetch batch there.
 
-        Plan: cogrouped bloom probe per shard (bloom misses exit early) ->
-        exact left-anti join for bloom hits only.
+        Plan: bloom probe per shard (one shuffle of candidates and bloom
+        rows) -> ONE collect of the probe's per-shard summary -> one exact
+        left-anti join against the seen rows of the bloom-HIT shards and
+        the blocked rows of the candidate shards. The seen table (and the
+        engine's frontier store) are hive-partitioned by shard, so at
+        10^10 rows that join reads only the shards a batch touches.
 
         ``dedupe_min_depth``: url determines shard, so within-batch URL
-        dedupe (keeping min depth) is shard-local — folding it into the
-        probe saves the caller a full shuffle.
-
-        ``min_round_added`` (re-crawl mode): seen rows with
-        round_added < min_round_added are logically expired and do NOT
-        block — the filter rides the exact backstop's pruned scan; a
-        stale bloom hit on an expired URL just falls through to it.
+        dedupe (keeping min depth) is shard-local and rides the probe.
+        ``min_round_added`` (re-crawl mode): seen rows with an older
+        round_added are logically expired and do NOT block.
+        ``tables``: (exact set, bloom) frames read earlier, to pin the probe
+        to one state while concurrent writes replace both (default: now).
         """
-        if self.seen.current_snapshot is None and self.bloom.current_snapshot is None:
-            # empty set (bootstrap / first round): nothing can be seen, so
-            # skip the bloom cogroup + hit-shard collect entirely; only the
-            # within-batch min-depth dedupe remains (one shuffle on url).
-            # Under the engine's concurrent round this is the same answer
-            # as binding the pre-update snapshots — exact by the round
-            # invariant (just-fetched URLs are anti-joined separately).
-            if not dedupe_min_depth:
-                return candidates
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("url").orderBy("depth")
-            return (
-                candidates.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        seen_df = self.seen.read(spark)
-        if min_round_added is not None:
-            seen_df = seen_df.filter(F.col("round_added") >= min_round_added)
-        bloom_df = self.bloom.read(spark)
-
+        seen_df, bloom_df = tables or (self.seen.read(spark), None)
         cand_cols = candidates.columns
         backend = self.backend  # local bind: the probe closure ships to executors
         out_schema = ", ".join(
@@ -502,45 +488,41 @@ class SeenSet:
             row = bloom_pdf.iloc[0]
             n_bits = int(row["n_bits"])
             if n_bits == 0:
-                # capacity-flag row (add() commits it before _rebuild_shards
-                # issues the corrected overwrite — a concurrent probe may
-                # bind that intermediate snapshot): no filter bits exist, so
-                # everything is "maybe" and the exact anti-join decides.
-                # Exactness holds; only this shard's prefilter saving is lost
-                # for the one probe that raced the rebuild.
+                # capacity-flag row (a concurrent probe may bind the add's
+                # snapshot before _rebuild_shards replaces it): no bits, so
+                # everything is "maybe" and the exact anti-join decides
                 return cand_pdf.assign(__maybe=True)
             hashes = cand_pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
             maybe = backend.test(bytes(row["bits"]), hashes, n_bits)
             return cand_pdf.assign(__maybe=maybe)
 
-        # cache the probe output (hit_shards collect + the returned branches
-        # both consume it); the PREVIOUS round's cache is dropped here so a
-        # long crawl holds exactly one probed cache, not one per round
+        # cached for the summary collect and the anti-join; the previous
+        # call's cache is dropped, so a crawl holds one
         prev = getattr(self, "_last_probed", None)
         if prev is not None:
             prev.unpersist()
-        probed = (
-            candidates.groupBy("shard")
-            .cogroup(bloom_df.groupBy("shard"))
-            .applyInPandas(probe, schema=out_schema)
-        ).persist()
+        probed = self._with_bloom(spark, candidates, probe, out_schema, bloom_df).persist()
         self._last_probed = probed
-
-        sure_unseen = probed.filter(~F.col("__maybe")).drop("__maybe")
-        maybe = probed.filter(F.col("__maybe")).drop("__maybe")
-        # exact backstop: join on url too — hash collisions must not evict.
-        # The seen table is hive-partitioned by shard, so pruning the scan
-        # to the bloom-HIT shards is a file-level prune: at 10^10 rows the
-        # backstop reads only the handful of shards with hits instead of
-        # shuffling the whole table; zero hits skip the join entirely.
-        hit_shards = [r["shard"] for r in maybe.select("shard").distinct().collect()]
-        if not hit_shards:
-            return sure_unseen.select(cand_cols)
-        seen_subset = seen_df.filter(F.col("shard").isin(hit_shards))
-        checked = maybe.join(
-            seen_subset.select("url_hash", "url"), on=["url_hash", "url"], how="left_anti"
+        summary = (
+            probed.select("shard", "__maybe")
+            .mapInPandas(_shard_summary, "shard int, hit boolean")
+            .collect()
         )
-        return sure_unseen.unionByName(checked).select(cand_cols)
+        shards = sorted({r["shard"] for r in summary})
+        hit_shards = sorted({r["shard"] for r in summary if r["hit"]})
+        known = []
+        if hit_shards:
+            seen_df = seen_df.filter(F.col("shard").isin(hit_shards))
+            if min_round_added is not None:
+                seen_df = seen_df.filter(F.col("round_added") >= min_round_added)
+            known.append(seen_df.select("url_hash", "url"))
+        if blocked is not None and shards:
+            known.append(blocked.filter(F.col("shard").isin(shards)).select("url_hash", "url"))
+        out = probed.drop("__maybe")
+        if known:
+            # exact: join on url too — hash collisions must not evict
+            out = out.join(reduce(DataFrame.unionByName, known), ["url_hash", "url"], "left_anti")
+        return out.select(cand_cols)
 
     def all_urls(self, spark: SparkSession) -> DataFrame:
         return self.seen.read(spark)

@@ -148,7 +148,7 @@ class OracleCrawler:
         # re-crawl policy: at round start, URLs fetched in round
         # r - recrawl_after - 1 are forgotten and re-enqueued (depth 0,
         # link-rule priority, eligible immediately) — mirrors
-        # CrawlEngine._expire_and_reenqueue exactly
+        # the expiry + re-enqueue at the start of CrawlEngine.run_round
         if self.recrawl_after is not None:
             cutoff = r - self.recrawl_after - 1
             if cutoff >= 0:

@@ -28,11 +28,12 @@ Read path: ``rows`` ⟕anti ``tombstones`` (tombstone side broadcast — its
 size is bounded by compact_every × round size), then a broadcast join of
 the per-host event arrays and
 ``not_before_round = greatest(stored, max(until where event_round > added_in))``
-— all Catalyst, no shuffle beyond the pruned-by-broadcast anti-join.
+— all Catalyst, no shuffle beyond the pruned-by-broadcast anti-join. A join
+whose delta table the manifest shows empty is skipped (no Spark job).
 
 Compaction every ``compact_every`` rounds folds tombstones and events into
-a fresh base overwrite and clears both delta tables. Crash-safety: a crash
-between the three compaction writes is harmless — re-applying tombstones
+a fresh base overwrite and clears both delta tables (manifest-only
+commits). Crash-safety: a crash between the three compaction writes is harmless — re-applying tombstones
 of already-removed rows is a no-op, and re-applying events to compacted
 rows (added_in = compaction round ≥ every event_round) selects nothing;
 resume rolls all three tables back to the checkpoint anyway.
@@ -110,55 +111,47 @@ class DeltaFrontier:
             meta={"stage": "bootstrap"},
             partition_by=self._pby(),
         )
-        self.rm.overwrite(spark.createDataFrame([], FRONTIER_RM), meta={"stage": "bootstrap"})
-        self.delay.overwrite(
-            spark.createDataFrame([], FRONTIER_DELAY), meta={"stage": "bootstrap"}
-        )
+        self.rm.clear(meta={"stage": "bootstrap"})
+        self.delay.clear(meta={"stage": "bootstrap"})
 
     # -- merge-on-read -------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame:
         """The effective frontier (FRONTIER columns, pushbacks folded in)."""
-        rm = self.rm.read(spark).select(
-            F.col("url_hash").alias("__rm_hash"),
-            F.col("url").alias("__rm_url"),
-            "removed_in",
-        )
-        if self.tombstone_rows() <= self.max_tombstone_rows:
-            rm = F.broadcast(rm)
-        # else: shuffle anti-join — same result, no driver-side collect of
-        # an over-bound tombstone set (compaction fires at this round's end)
-        rows = self.rows.read(spark)
-        # ROUND-AWARE removal (r5 re-crawl support): a tombstone only kills
-        # rows inserted at or before it (removed_in >= added_in), so a URL
-        # re-enqueued by seen-set expiry AFTER its fetch survives its own
-        # old tombstone. Without re-crawl the condition is always true
-        # (a row is always inserted before it is fetched) — plan unchanged:
-        # still a hash anti-join on the equi keys with a residual filter.
-        live = rows.join(
-            rm,
-            (rows["url_hash"] == F.col("__rm_hash"))
-            & (rows["url"] == F.col("__rm_url"))
-            & (F.col("removed_in") >= rows["added_in"]),
-            "left_anti",
-        )
-        ev = (
-            self.delay.read(spark)
-            .groupBy("host")
-            .agg(F.collect_list(F.struct("event_round", "until")).alias("__ev"))
-        )
-        applicable = F.filter(
-            F.coalesce(F.col("__ev"), F.array()),
-            lambda e: e["event_round"] > F.col("added_in"),
-        )
-        until = F.array_max(F.transform(applicable, lambda e: e["until"]))
-        return (
-            live.join(F.broadcast(ev), "host", "left")
-            .withColumn(
+        live = self.rows.read(spark)
+        if not self.rm.is_empty():
+            rm = self.rm.read(spark).select(
+                F.col("url_hash").alias("__rm_hash"),
+                F.col("url").alias("__rm_url"),
+                "removed_in",
+            )
+            if self.tombstone_rows() <= self.max_tombstone_rows:
+                rm = F.broadcast(rm)  # else a shuffle anti-join: same rows
+            # ROUND-AWARE removal (r5 re-crawl): a tombstone only kills rows
+            # inserted at or before it, so a URL re-enqueued by seen-set
+            # expiry after its fetch survives its own old tombstone
+            live = live.join(
+                rm,
+                (live["url_hash"] == F.col("__rm_hash"))
+                & (live["url"] == F.col("__rm_url"))
+                & (F.col("removed_in") >= live["added_in"]),
+                "left_anti",
+            )
+        if not self.delay.is_empty():
+            ev = (
+                self.delay.read(spark)
+                .groupBy("host")
+                .agg(F.collect_list(F.struct("event_round", "until")).alias("__ev"))
+            )
+            applicable = F.filter(
+                F.coalesce(F.col("__ev"), F.array()),
+                lambda e: e["event_round"] > F.col("added_in"),
+            )
+            until = F.array_max(F.transform(applicable, lambda e: e["until"]))
+            live = live.join(F.broadcast(ev), "host", "left").withColumn(
                 "not_before_round",
                 F.greatest(F.col("not_before_round"), F.coalesce(until, F.lit(-1))),
             )
-            .select(FRONTIER_COLS)
-        )
+        return live.select(FRONTIER_COLS)
 
     # -- per-round deltas (each O(round size), not O(frontier size)) ---------
     def remove(self, fetched: DataFrame, round_no: int, n_rows: int | None = None) -> int:
@@ -184,7 +177,7 @@ class DeltaFrontier:
 
     def insert(self, new_rows: DataFrame, round_no: int) -> int:
         """Append FRONTIER-shaped rows discovered during ``round_no``
-        (they are exempt from round_no's own pushback events)."""
+        (exempt from round_no's own pushback events)."""
         return self.rows.append(
             self._clustered(
                 new_rows.select(FRONTIER_COLS).withColumn("added_in", F.lit(round_no))
@@ -194,26 +187,26 @@ class DeltaFrontier:
         )
 
     # -- compaction ----------------------------------------------------------
-    def maybe_compact(self, spark: SparkSession, round_no: int) -> bool:
-        """Compact on the round cadence OR as soon as accumulated tombstone
-        mass exceeds the broadcast-safe bound — whichever comes first."""
+    def compaction_due(self, round_no: int, pending_rows: int = 0) -> bool:
+        """Compact on the round cadence OR once tombstone mass (plus
+        ``pending_rows`` about to be added) exceeds the broadcast-safe bound."""
         by_cadence = self.compact_every > 0 and (round_no + 1) % self.compact_every == 0
-        by_mass = self.tombstone_rows() > self.max_tombstone_rows
-        if not (by_cadence or by_mass):
-            return False
-        self.compact(spark, round_no)
-        return True
+        return by_cadence or self.tombstone_rows() + pending_rows > self.max_tombstone_rows
 
-    def compact(self, spark: SparkSession, round_no: int) -> None:
-        """Fold deltas into a fresh base; clear the delta tables."""
-        eff = self.read(spark).withColumn("added_in", F.lit(round_no))
+    def compact(self, spark: SparkSession, round_no: int, new_rows: DataFrame | None = None) -> None:
+        """Fold deltas into a fresh base; clear the delta tables.
+        ``new_rows`` (FRONTIER-shaped, from ``round_no``) fold in directly
+        instead of being appended first."""
+        eff = self.read(spark)
+        if new_rows is not None:
+            eff = eff.unionByName(new_rows.select(FRONTIER_COLS))
         self.rows.overwrite(
-            self._clustered(eff), meta={"compact": round_no}, partition_by=self._pby()
+            self._clustered(eff.withColumn("added_in", F.lit(round_no))),
+            meta={"compact": round_no},
+            partition_by=self._pby(),
         )
-        self.rm.overwrite(spark.createDataFrame([], FRONTIER_RM), meta={"compact": round_no})
-        self.delay.overwrite(
-            spark.createDataFrame([], FRONTIER_DELAY), meta={"compact": round_no}
-        )
+        self.rm.clear(meta={"compact": round_no})
+        self.delay.clear(meta={"compact": round_no})
 
     # -- checkpoint surface ---------------------------------------------------
     def state(self) -> dict:

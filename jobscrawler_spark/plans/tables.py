@@ -5,8 +5,10 @@ minimal table layer with the same contract the north rule needs:
 
 - **atomic append / overwrite**: data files are written to a fresh
   ``snap-NNNNN`` directory first; the manifest (``_snapshots.json``) is then
-  swapped atomically (tmp + rename). Readers only ever see committed
-  snapshots.
+  swapped atomically and durably. Readers only ever see committed
+  snapshots. A ``clear`` is a manifest-only overwrite.
+- **declared schema**: writes conform to it and reads pin it (no
+  schema-inference job).
 - **time travel**: ``read(spark, snapshot_id=k)`` reconstructs the table as
   of snapshot k — the checkpoint/resume path replays from recorded ids.
 - **lineage**: each snapshot records its mode, row estimate and caller
@@ -26,11 +28,34 @@ import json
 import os
 import shutil
 import uuid
+from functools import reduce
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 _MANIFEST = "_snapshots.json"
+
+
+def commit_json(path: str, obj) -> None:
+    """Atomically and durably replace ``path`` with ``obj`` as JSON: fsync
+    the temp file, rename, fsync the directory — power loss leaves the old
+    file or the new one, never a torn one."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    fd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 class SnapshotTable:
@@ -51,10 +76,7 @@ class SnapshotTable:
             return json.load(f)["snapshots"]
 
     def _commit(self, snapshots: list[dict]) -> None:
-        tmp = self._manifest_path() + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"snapshots": snapshots}, f, indent=1)
-        os.replace(tmp, self._manifest_path())
+        commit_json(self._manifest_path(), {"snapshots": snapshots})
 
     # -- public api --------------------------------------------------------
     @property
@@ -66,31 +88,51 @@ class SnapshotTable:
         return self._load()
 
     def _write(
-        self, df: DataFrame, mode: str, meta: dict | None, partition_by: str | None = None
+        self,
+        df: DataFrame | pd.DataFrame | None,
+        mode: str,
+        meta: dict | None,
+        partition_by: str | None = None,
     ) -> int:
+        """Commit ``df`` as the next snapshot. A (small) pandas frame is
+        written with pyarrow — no Spark job; ``None`` commits a
+        manifest-only snapshot."""
         snaps = self._load()
         sid = (snaps[-1]["id"] + 1) if snaps else 0
         rel = f"snap-{sid:05d}"
         out = os.path.join(self.path, rel)
-        w = df.write.mode("overwrite")
-        if partition_by is not None:
-            # hive layout: a filter on the partition column prunes files —
-            # the seen table uses this so the exact-probe backstop scans
-            # only the bloom-hit shards (SCALING.md "Seen-set")
-            w = w.partitionBy(partition_by)
-        w.parquet(out)
+        has_data = False
+        if isinstance(df, pd.DataFrame) and not df.empty:
+            os.makedirs(out)
+            table = pa.Table.from_pandas(df, to_arrow_schema(self.schema), preserve_index=False)
+            pq.write_table(table, os.path.join(out, "part-00000.parquet"))
+            has_data = True
+        elif isinstance(df, DataFrame):
+            w = self._conform(df).write.mode("overwrite")
+            if partition_by is not None:
+                # hive layout: a filter on the partition column prunes files
+                # (SCALING.md "Seen-set")
+                w = w.partitionBy(partition_by)
+            w.parquet(out)
+            # recorded once here, so reads skip fileless snapshots
+            has_data = self._has_data_files(out)
         snap = {"id": sid, "dir": rel, "mode": mode, "meta": meta or {}}
         if partition_by is not None:
             snap["partition_by"] = partition_by
-        # record emptiness ONCE at commit time (one walk of the fresh dir):
-        # read() then skips fileless snapshots from the manifest instead of
-        # os.walking every snapshot dir on every read — for append-heavy
-        # partitioned tables (seen/frontier) that walk was O(snapshots x
-        # files) driver-side stat calls per round (ADVICE r4)
-        snap["has_data"] = self._has_data_files(out)
+        snap["has_data"] = has_data
         snaps.append(snap)
         self._commit(snaps)
         return sid
+
+    def _conform(self, df: DataFrame) -> DataFrame:
+        """The declared columns by name, cast to the declared types (reads
+        pin the schema, so files must match it); a missing one raises."""
+        if self.schema is None:
+            return df
+        missing = [f.name for f in self.schema.fields if f.name not in df.columns]
+        if missing:
+            raise ValueError(f"write to {self.path} lacks declared columns {missing}")
+        return df.select([F.col(f.name).cast(f.dataType).alias(f.name) for f in self.schema.fields])
 
     def append(
         self, df: DataFrame, meta: dict | None = None, partition_by: str | None = None
@@ -101,6 +143,11 @@ class SnapshotTable:
         self, df: DataFrame, meta: dict | None = None, partition_by: str | None = None
     ) -> int:
         return self._write(df, "overwrite", meta, partition_by)
+
+    def clear(self, meta: dict | None = None) -> int:
+        """Empty the table with a manifest-only overwrite: no Spark job and
+        no data dir, yet rollback/time travel treat it like any snapshot."""
+        return self._write(None, "overwrite", meta)
 
     def _snaps_at(self, snapshot_id: int | None) -> list[dict]:
         snaps = self._load()
@@ -113,56 +160,56 @@ class SnapshotTable:
             live.append(s)
         return live
 
-    def _dirs_at(self, snapshot_id: int | None) -> list[str]:
-        return [os.path.join(self.path, s["dir"]) for s in self._snaps_at(snapshot_id)]
+    def _data_dirs(self, snapshot_id: int | None = None) -> list[str]:
+        """Dirs of the live snapshots that hold data, from the manifest."""
+        return [
+            os.path.join(self.path, s["dir"]) for s in self._snaps_at(snapshot_id) if s["has_data"]
+        ]
+
+    def is_empty(self) -> bool:
+        return not self._data_dirs()
 
     def _is_partitioned(self) -> bool:
         return any("partition_by" in s for s in self._load())
 
     @staticmethod
     def _has_data_files(d: str) -> bool:
-        """True if the snapshot dir contains at least one parquet data
-        file. An EMPTY DataFrame written with partitionBy() produces only
-        _SUCCESS (no files, no schema) — reading such a dir alone raises
-        UNABLE_TO_INFER_SCHEMA, and a crawl can legitimately commit one
-        (a round whose discovered links were all already pending). Empty
-        snapshots are valid commits; reads just skip their dirs."""
+        """True if the snapshot dir holds a parquet data file. An EMPTY
+        DataFrame written with partitionBy() produces only _SUCCESS, and a
+        crawl legitimately commits one; reads skip such snapshots."""
         for root, _dirs, files in os.walk(d):
             if any(f.endswith(".parquet") for f in files):
                 return True
         return False
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        # emptiness comes from the manifest (recorded at write time); the
-        # os.walk is only the fallback for manifests written before the
-        # has_data field existed
-        dirs = [
-            os.path.join(self.path, s["dir"])
-            for s in self._snaps_at(snapshot_id)
-            if s.get("has_data", None) is True
-            or (
-                s.get("has_data", None) is None
-                and self._has_data_files(os.path.join(self.path, s["dir"]))
-            )
-        ]
+        dirs = self._data_dirs(snapshot_id)
         if not dirs:
             if self.schema is None:
                 raise ValueError(f"empty table {self.path} with no schema")
-            return spark.createDataFrame([], self.schema)
+            # folds to an empty local relation: plans over it run no job
+            return spark.range(1).select(
+                [F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema.fields]
+            ).limit(0)
+        # the declared schema (partition column included): no inference job
+        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
         if len(dirs) > 1 and self._is_partitioned():
             # hive-partitioned snapshots cannot share one multi-root read
             # (partition discovery needs a common base); union per-snapshot
             # reads — partition pruning still applies within each
-            df = None
-            for d in dirs:
-                part = spark.read.parquet(d)
-                df = part if df is None else df.unionByName(part)
+            df = reduce(DataFrame.unionByName, [reader.parquet(d) for d in dirs])
         else:
-            df = spark.read.parquet(*dirs)
+            df = reader.parquet(*dirs)
         if self.schema is not None:
             # stable column order regardless of file layout
-            df = df.select(*[f.name for f in self.schema.fields])
+            df = df.select(self.schema.fieldNames())
         return df
+
+    def read_local(self, columns: list[str]) -> pd.DataFrame:
+        """``columns`` of the live rows, read on the driver with pyarrow —
+        no Spark job; for small data (the bloom table's header columns)."""
+        parts = [pq.read_table(d, columns=columns) for d in self._data_dirs()]
+        return pa.concat_tables(parts).to_pandas() if parts else pd.DataFrame(columns=columns)
 
     def rollback_to(self, snapshot_id: int | None) -> None:
         """Drop snapshots newer than ``snapshot_id`` (None = drop all).

@@ -46,3 +46,27 @@ def test_local_path_string_ids(spark):
     comp = dict(local)
     assert comp["img~c"] == "img~a"
     assert comp["zz"] == "aa"
+
+
+def test_local_path_threshold_parses_sizes_and_caps(spark):
+    """The local-path ceiling follows the session's broadcast threshold in
+    any Spark byte-size form, and the driver collect stays capped."""
+    from jobscrawler_spark.operators.components import (
+        LOCAL_CC_EDGE_CAP,
+        _local_cc_max_edges,
+    )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for value, edges in [
+            ("10485760b", 10485760 // 64),
+            ("20m", (20 << 20) // 64),
+            ("1m", (1 << 20) // 64),
+            ("-1", 0),
+            ("8g", LOCAL_CC_EDGE_CAP),
+        ]:
+            spark.conf.set(key, value)
+            assert _local_cc_max_edges(spark) == edges, value
+    finally:
+        spark.conf.set(key, old)

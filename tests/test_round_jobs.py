@@ -1,0 +1,191 @@
+"""A crawl round's Spark job budget, its driver-written metrics, expiry
+of a round that fetched nothing, and its parallel phases' table writes.
+
+The job guard runs a tiny cuckoo re-crawl crawl (``recrawl_after=1``,
+``compact_every=2``) — every per-round path runs: seen-set expiry with
+cuckoo deletes and re-enqueue, the probe, the seen-set fold, and the
+compaction folds — and counts the Spark jobs each round submits from the
+status tracker. The crawl must still equal the oracle's.
+"""
+
+import collections
+import threading
+import time
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from jobscrawler_spark.engine import CrawlEngine
+from jobscrawler_spark.generators import gen_hosts, gen_robots, gen_seeds
+from jobscrawler_spark.oracle.simulator import OracleCrawler
+from jobscrawler_spark.plans.tables import SnapshotTable
+from jobscrawler_spark.schemas import ROUND_METRICS
+
+# measured on this crawl: 20-24 jobs per round, the most in round 3, which
+# both expires and compacts; before the job cuts it was 43-80 per round
+MAX_JOBS_PER_ROUND = 24
+ROUNDS = 4
+ARGS = dict(
+    n_shards=4,
+    default_budget=3,
+    max_depth=1,
+    fetch_partitions=4,
+    prefilter="cuckoo",
+    recrawl_after=1,
+    compact_every=2,
+)
+
+
+def _politeness(n_hosts: int, budget: int, delay: int) -> pd.DataFrame:
+    return pd.DataFrame(
+        {"host": gen_hosts(n_hosts), "max_fetches_per_round": budget, "crawl_delay_rounds": delay}
+    )
+
+
+def _oracle(seeds, pol, rob, rounds: int, **kw) -> OracleCrawler:
+    o = OracleCrawler(pol, rob, **kw)
+    o.bootstrap(seeds)
+    o.run(rounds)
+    return o
+
+
+def _live_seen(eng: CrawlEngine, spark) -> list[str]:
+    """The seen set minus the rows re-crawl expiry already forgot."""
+    cutoff = eng._recrawl_cutoff
+    return sorted(
+        r["url"]
+        for r in eng.seen.all_urls(spark).filter(F.col("round_added") > cutoff).collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def crawl(spark, tmp_path_factory):
+    seeds, pol, rob = gen_seeds(n=120, n_hosts=8, seed=11), _politeness(8, 3, 0), gen_robots(8, 11)
+    eng = CrawlEngine(spark, str(tmp_path_factory.mktemp("jobs")), **ARGS)
+    eng.bootstrap(seeds, pol, rob)
+    sc = spark.sparkContext
+    # the engine sets no job group: every job it submits, from any thread,
+    # is listed under the null group
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    stats, jobs = [], []
+    for _ in range(ROUNDS):
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        stats.append(eng.run_round())
+        jobs.append(len(set(sc.statusTracker().getJobIdsForGroup(None)) - before))
+    ora = _oracle(
+        seeds, pol, rob, ROUNDS, default_budget=3, max_depth=1, n_shards=4, recrawl_after=1
+    )
+    return eng, stats, jobs, ora
+
+
+def test_round_job_budget_and_oracle(spark, crawl):
+    eng, stats, jobs, ora = crawl
+    assert all(s["selected"] > 0 for s in stats)
+    assert max(jobs) <= MAX_JOBS_PER_ROUND, jobs
+    log = [(r["round"], r["priority"], r["url"]) for r in eng.fetch_log().collect()]
+    assert log == [(d["round"], d["priority"], d["url"]) for d in ora.landed]
+    assert _live_seen(eng, spark) == sorted(ora.seen)
+
+
+def test_metrics_snapshot_matches_round_stats(spark, crawl):
+    """The driver-written metrics table keeps ROUND_METRICS and the values
+    the per-partition groupBy used to produce: Σ urls_fetched = selected,
+    Σ rows_landed = ok, and rows_landed per (round, partition_id) equals
+    the landed images of that fetch partition."""
+    eng, stats, _, _ = crawl
+    m = eng.metrics.read(spark)
+    assert [(f.name, f.dataType) for f in m.schema.fields] == [
+        (f.name, f.dataType) for f in ROUND_METRICS.fields
+    ]
+    rows = m.collect()
+    for s in stats:
+        mine = [r for r in rows if r["round"] == s["round"]]
+        assert sum(r["urls_fetched"] for r in mine) == s["selected"]
+        assert sum(r["rows_landed"] for r in mine) == s["ok"]
+        assert sum(r["urls_ok"] for r in mine) == s["ok"]
+        assert sum(r["new_urls"] for r in mine) == s["new_urls"]
+        assert {r["urls_selected"] for r in mine} == {s["selected"]}
+        assert all(r["input_snapshot"].startswith("frontier@rows@") for r in mine)
+    landed = {
+        (r["round"], r["partition_id"]): r["count"]
+        for r in eng.images.read(spark).groupBy("round", "partition_id").count().collect()
+    }
+    assert landed == {
+        (r["round"], r["partition_id"]): r["rows_landed"] for r in rows if r["rows_landed"]
+    }
+
+
+def test_expire_of_a_round_that_fetched_nothing(spark, tmp_path):
+    """Every host has a crawl delay and no page links anywhere, so round 1
+    is all-delayed and fetches nothing. Expiring it (round 3) is known
+    empty from the manifest; the crawl still equals the oracle's."""
+    seeds, pol, rob = gen_seeds(n=40, n_hosts=4, seed=5), _politeness(4, 4, 1), gen_robots(4, 5)
+    args = dict(n_shards=4, default_budget=4, max_depth=0, fetch_partitions=4, prefilter="cuckoo")
+    eng = CrawlEngine(spark, str(tmp_path / "delayed"), recrawl_after=1, **args)
+    eng.bootstrap(seeds, pol, rob)
+    stats = eng.run(5)
+    assert stats[1]["selected"] == 0 and stats[2]["selected"] > 0
+    assert eng.seen.expire(spark, 1) is None
+    ora = _oracle(seeds, pol, rob, 5, default_budget=4, max_depth=0, n_shards=4, recrawl_after=1)
+    log = [(r["round"], r["url"]) for r in eng.fetch_log().select("round", "url").collect()]
+    assert log == [(d["round"], d["url"]) for d in ora.landed]
+    assert _live_seen(eng, spark) == sorted(ora.seen)
+
+
+def test_round_writes_never_share_a_table(spark, tmp_path, monkeypatch):
+    """A round's parallel phases never write one table at the same time (a
+    snapshot write is load manifest -> write dir -> commit, unlocked: two
+    at once would share a snapshot dir and lose one commit). The
+    re-enqueue append is held until the round's link probe has returned,
+    so a links append not ordered after it would overlap it."""
+    seeds, pol, rob = gen_seeds(n=60, n_hosts=6, seed=3), _politeness(6, 3, 0), gen_robots(6, 3)
+    args = {**ARGS, "compact_every": 0}  # links go through insert every round
+    eng = CrawlEngine(spark, str(tmp_path / "writes"), **args)
+    eng.bootstrap(seeds, pol, rob)
+
+    write, probe = SnapshotTable._write, eng.seen.filter_unseen
+    lock, active, overlaps, appends = threading.Lock(), {}, [], []
+    probed = collections.defaultdict(threading.Event)  # per round
+
+    def tracked_probe(*args, **kw):
+        out = probe(*args, **kw)
+        probed[eng.next_round].set()
+        return out
+
+    def tracked_write(self, df, mode, meta, partition_by=None):
+        renew = False
+        if self.path == eng.frontier.rows.path and mode == "append":
+            renew = meta["round"] < eng.next_round
+            appends.append((eng.next_round, "renew" if renew else "links"))
+        with lock:
+            active[self.path] = active.get(self.path, 0) + 1
+            if active[self.path] > 1:
+                overlaps.append(self.path)
+        try:
+            if renew:
+                probed[eng.next_round].wait(60)
+                time.sleep(1)  # room for an unordered links append to start
+            return write(self, df, mode, meta, partition_by)
+        finally:
+            with lock:
+                active[self.path] -= 1
+
+    monkeypatch.setattr(SnapshotTable, "_write", tracked_write)
+    monkeypatch.setattr(eng.seen, "filter_unseen", tracked_probe)
+    stats = eng.run(3)
+    monkeypatch.undo()
+
+    assert (2, "renew") in appends and (2, "links") in appends, appends
+    assert overlaps == []
+    ora = _oracle(
+        seeds, pol, rob, 3, default_budget=3, max_depth=1, n_shards=4, recrawl_after=1
+    )
+    assert [s["selected"] for s in stats] == [
+        sum(fr == r for fr, _ in ora.fetch_log) for r in range(3)
+    ]
+    log = [(r["round"], r["priority"], r["url"]) for r in eng.fetch_log().collect()]
+    assert log == [(d["round"], d["priority"], d["url"]) for d in ora.landed]
+    assert _live_seen(eng, spark) == sorted(ora.seen)
+    frontier = sorted(r["url"] for r in eng.frontier.read(spark).collect())
+    assert frontier == sorted(ora.frontier)

@@ -43,6 +43,20 @@ def test_add_then_filter_exact(spark, tmp_path):
     assert got == want
 
 
+def test_filter_unseen_probes_pinned_tables(spark, tmp_path):
+    """A probe given the tables read before a later add answers for that
+    earlier state, whatever the add has committed since."""
+    s = SeenSet(str(tmp_path / "seen"), n_shards=4)
+    s.add(spark, _urls(spark, 0, 100, n_shards=4), round_no=0)
+    pinned = (s.seen.read(spark), s.bloom.read(spark))
+    s.add(spark, _urls(spark, 100, 200, n_shards=4), round_no=1)
+    cand = _urls(spark, 50, 250, n_shards=4)
+    got = {r["url"] for r in s.filter_unseen(spark, cand, tables=pinned).collect()}
+    assert got == {f"http://h{(i % 5):02d}.example.com/p/{i}" for i in range(100, 250)}
+    now = {r["url"] for r in s.filter_unseen(spark, cand).collect()}
+    assert now == {f"http://h{(i % 5):02d}.example.com/p/{i}" for i in range(200, 250)}
+
+
 def test_incremental_adds_and_rebuild(spark, tmp_path):
     s = SeenSet(str(tmp_path / "seen"), n_shards=4)
     for rnd, (lo, hi) in enumerate([(0, 200), (200, 500), (500, 2000)]):

@@ -168,3 +168,119 @@ def test_snapshot_diff_plan_is_single_keyed_join(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+
+
+# ------------------------------------------- declared schema + manifest
+
+
+def _jobs_during(spark, fn):
+    """(result of fn(), Spark jobs it submitted) — counted from the status
+    tracker under a job group scoped to this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup("tables-test", "jobs submitted by one call")
+    try:
+        out = fn()
+        return out, sc.statusTracker().getJobIdsForGroup("tables-test")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_partitioned_read_runs_no_job_and_keeps_types(spark, tmp_path):
+    """Reads pin the declared schema (partition column included): a
+    partitioned table of several snapshots, one of them empty, plans
+    without a single schema-inference job and reads back the declared
+    types — the writes were conformed (long -> int cast) on the way in."""
+    from pyspark.sql.types import LongType
+
+    schema = StructType(
+        [StructField("k", StringType()), StructField("v", LongType()), StructField("shard", IntegerType())]
+    )
+    t = SnapshotTable(str(tmp_path / "t"), schema)
+    t.overwrite(spark.createDataFrame([("a", 1, 1), ("b", 2, 2)], schema), partition_by="shard")
+    t.append(spark.createDataFrame([], schema), partition_by="shard")
+    # written with wider/narrower physical types: conformed to the declaration
+    t.append(
+        spark.createDataFrame([("c", 3, 1)], "k string, v int, shard long"), partition_by="shard"
+    )
+
+    df, jobs = _jobs_during(spark, lambda: t.read(spark))
+    assert jobs == []
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in schema.fields
+    ]
+    assert sorted(tuple(r) for r in df.collect()) == [("a", 1, 1), ("b", 2, 2), ("c", 3, 1)]
+
+
+def test_write_missing_declared_column_fails_loudly(spark, tmp_path):
+    import pytest
+
+    t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
+    with pytest.raises(ValueError, match=r"\['v'\]"):
+        t.append(spark.createDataFrame([(1,)], "k int"))
+    assert t.current_snapshot is None  # nothing committed
+
+
+def test_clear_is_manifest_only_and_round_trips(spark, tmp_path):
+    import os
+
+    t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
+    s0 = t.append(_df(spark, [(1, "a")]))
+    s1, jobs = _jobs_during(spark, lambda: t.clear({"stage": "cleared"}))
+    assert jobs == []
+    assert not os.path.exists(os.path.join(t.path, t.snapshots()[-1]["dir"]))
+    assert t.is_empty() and t.read(spark).count() == 0
+    assert t.read(spark, snapshot_id=s0).count() == 1  # time travel past it
+    t.append(_df(spark, [(2, "b")]))
+    assert [r["k"] for r in t.read(spark).collect()] == [2]
+    t.rollback_to(s1)
+    assert t.current_snapshot == s1 and t.read(spark).count() == 0
+    t.rollback_to(s0)
+    assert [r["k"] for r in t.read(spark).collect()] == [1]
+    s3 = t.clear()
+    t.expire_before(s3)
+    assert [s["id"] for s in t.snapshots()] == [s3] and t.read(spark).count() == 0
+
+
+def test_cleared_delta_tables_survive_resume(spark, tmp_path):
+    """Bootstrap and every compaction clear the tombstone and delay tables
+    with manifest-only commits; a resumed engine rolls back to them and
+    crawls on exactly as the oracle does."""
+    from jobscrawler_spark.engine import CrawlEngine
+    from jobscrawler_spark.generators import gen_politeness, gen_robots, gen_seeds
+    from jobscrawler_spark.oracle.simulator import OracleCrawler
+
+    seeds, pol, rob = gen_seeds(n=80, n_hosts=6, seed=3), gen_politeness(6, 3), gen_robots(6, 3)
+    args = dict(n_shards=4, default_budget=4, max_depth=1, fetch_partitions=4)
+    base = str(tmp_path / "crawl")
+    eng = CrawlEngine(spark, base, compact_every=1, **args)
+    eng.bootstrap(seeds, pol, rob)
+    eng.run(1)
+    for table in (eng.frontier.rm, eng.frontier.delay):
+        last = table.snapshots()[-1]
+        assert last["mode"] == "overwrite" and last["has_data"] is False
+    pending = {r["url"] for r in eng.frontier.read(spark).collect()}
+
+    eng2 = CrawlEngine.resume(spark, base, compact_every=1, **args)
+    assert {r["url"] for r in eng2.frontier.read(spark).collect()} == pending
+    eng2.run(1)
+    ora = OracleCrawler(pol, rob, default_budget=4, max_depth=1, n_shards=4)
+    ora.bootstrap(seeds)
+    ora.run(2)
+    got = [(r["round"], r["url"]) for r in eng2.fetch_log().select("round", "url").collect()]
+    assert got == [(d["round"], d["url"]) for d in ora.landed]
+    assert {r["url"] for r in eng2.seen.all_urls(spark).collect()} == ora.seen
+
+
+def test_commit_json_leaves_no_temp_files(tmp_path):
+    import json
+    import os
+
+    from jobscrawler_spark.plans.tables import commit_json
+
+    path = str(tmp_path / "state.json")
+    commit_json(path, {"a": 1})
+    commit_json(path, {"a": 2})
+    with open(path) as f:
+        assert json.load(f) == {"a": 2}
+    assert os.listdir(tmp_path) == ["state.json"]

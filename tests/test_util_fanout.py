@@ -47,3 +47,14 @@ def test_overlap_propagates_builder_errors(spark):
 
     with pytest.raises(RuntimeError, match="builder failed"):
         E._overlap(lambda: spark.range(3), boom)
+
+
+def test_overlap_without_pinned_threads(spark, monkeypatch):
+    """With PYSPARK_PIN_THREAD off, pyspark's inheritable_thread_target
+    hands its argument back unwrapped — for a session argument, the session
+    itself. _overlap must still run each builder, not call the session."""
+    import pyspark
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda f=None: f)
+    da, db = E._overlap(lambda: spark.range(0, 3), lambda: spark.range(0, 5))
+    assert (da.count(), db.count()) == (3, 5)
