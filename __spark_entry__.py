@@ -3333,9 +3333,8 @@ def q_crawl_recrawl(spark, sf):
     """S2/K1/P5/W4 + the r5 re-crawl policy composed (gate renamed from
     crawl_round, whose single round is a strict subset of this run):
     FOUR bounded crawl rounds (mapInPandas fetch) with recrawl_after=1 —
-    URLs fetched in round f are forgotten (cuckoo-deletable seen set;
-    here the default bloom stays stale-conservative) and re-enqueued at
-    round f + 2. Returns the fetch log (round, url): the one observable
+    URLs fetched in round f are forgotten (their seen-set rows and
+    filter segments stop counting) and re-enqueued at round f + 2. Returns the fetch log (round, url): the one observable
     that selection order, politeness budgets, the seen-set block and the
     expiry/re-enqueue policy all fold into. HASH-GREEN: the oracle
     inlines the single-threaded simulator's log

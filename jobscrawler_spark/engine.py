@@ -117,8 +117,6 @@ class CrawlEngine:
         compact_every: int = 8,
         max_tombstone_rows: int = 10_000_000,
         prefilter: str = "bloom",  # or "cuckoo" (north_star's alternative)
-        seen_partition_writes: bool = True,
-        frontier_partition_writes: bool = True,
         recrawl_after: int | None = None,
         priority_mode: str = "hash",
     ):
@@ -140,13 +138,10 @@ class CrawlEngine:
             f"{base_path}/frontier",
             compact_every=compact_every,
             max_tombstone_rows=max_tombstone_rows,
-            partition_writes=frontier_partition_writes,
         )
         self.images = SnapshotTable(f"{base_path}/images", IMAGES_LANDED)
         self.metrics = SnapshotTable(f"{base_path}/metrics", ROUND_METRICS)
-        self.seen = SeenSet(
-            base_path, n_shards, prefilter=prefilter, partition_writes=seen_partition_writes
-        )
+        self.seen = SeenSet(base_path, n_shards, prefilter=prefilter)
         # re-crawl policy (r5): URLs fetched in round f are forgotten and
         # re-enqueued at the start of round f + recrawl_after + 1. Derived
         # purely from the round number, so resume needs no extra state.
@@ -329,17 +324,17 @@ class CrawlEngine:
         expired = None
         if self.recrawl_after is not None:
             self._recrawl_cutoff = cutoff = r - self.recrawl_after - 1
-            expired = self.seen.expired_rows(self.spark, cutoff)
+            expired = self.seen.expire(self.spark, cutoff)
         f_renew = None
         if expired is not None:
             # re-crawl policy: the URLs fetched in round r - recrawl_after - 1
             # re-enter the frontier, eligible now (pagerank mode: ranked by
             # the previous round's edges, as in the simulator). The round
             # reads them directly (no delay event or tombstone applies to
-            # them yet); their append and the cuckoo deletes commit after
-            # the fetch. added_in = r - 1: they were present BEFORE round r,
-            # so round-r delay events apply to them, and their old
-            # tombstones (removed_in <= r - 2) do not.
+            # them yet); their append commits after the fetch. added_in =
+            # r - 1: they were present BEFORE round r, so round-r delay
+            # events apply to them, and their old tombstones
+            # (removed_in <= r - 2) do not.
             renew = (
                 self._link_priority(expired.withColumn("host", host_col(F.col("url"))))
                 .withColumn("depth", F.lit(0))
@@ -386,7 +381,6 @@ class CrawlEngine:
             # nothing eligible this round (all delayed); advance the clock
             if expired is not None:
                 f_renew.result()
-                self.seen.expire(self.spark, cutoff, expired)
             fetched.unpersist()
             self.next_round = r + 1
             self._commit_checkpoint()
@@ -410,11 +404,6 @@ class CrawlEngine:
         fetched_keys = fetched.select(
             "url_hash", "url", shard_col(F.col("url_hash"), self.n_shards).alias("shard")
         )
-
-        def _seen_job() -> None:
-            if expired is not None:  # before the add: both rewrite the filter
-                self.seen.expire(self.spark, cutoff, expired)
-            self.seen.add(self.spark, fetched_keys, r, n_selected, compact, self._seen_min_round())
 
         def _links_job() -> DataFrame:
             # discovered outlinks -> new frontier rows, CONCURRENTLY with the
@@ -464,7 +453,9 @@ class CrawlEngine:
             return new_rows
 
         f_images = ex.submit(self.images.append, landed, {"round": r})
-        f_seen = ex.submit(_seen_job)
+        f_seen = ex.submit(
+            self.seen.add, self.spark, fetched_keys, r, n_selected, compact, self._seen_min_round()
+        )
         f_rm = ex.submit(self.frontier.remove, fetched, r, n_selected)
         # a round whose landed pages link nowhere has no links job
         f_links = ex.submit(_links_job) if counts["ok_links"].sum() else None
@@ -512,7 +503,7 @@ class CrawlEngine:
         self._commit_checkpoint()
         if self.expire_history:
             # drop snapshots unreachable since each table's last overwrite
-            # (frontier compaction / bloom fold); resume only ever rolls back
+            # (frontier / seen-set compaction); resume only ever rolls back
             # to the LATEST checkpoint, so expiry is safe
             self.frontier.expire_history()
             if self.seen.bloom.current_snapshot is not None:

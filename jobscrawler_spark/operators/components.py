@@ -83,15 +83,18 @@ def connected_components(
     # materialize anyway, so the scaled-out path pays one bookkeeping
     # action, never an extra pass; past the threshold the distributed
     # loop below runs unchanged.
-    node_t = e.schema[0].dataType
+    # the distributed path's schema: node keeps the edge columns'
+    # nullability (through the union), component comes out of a min
+    # aggregate, which is always nullable
+    node_f = sym.schema["a"]
     if sym.count() <= _local_cc_max_edges(edges.sparkSession):
         comp = components_py([(r["a"], r["b"]) for r in sym.collect()])
         return edges.sparkSession.createDataFrame(
             list(comp.items()),
             T.StructType(
                 [
-                    T.StructField("node", node_t),
-                    T.StructField("component", node_t),
+                    T.StructField("node", node_f.dataType, node_f.nullable),
+                    T.StructField("component", node_f.dataType, True),
                 ]
             ),
         )

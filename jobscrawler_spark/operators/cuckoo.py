@@ -3,8 +3,8 @@
 Partial-key cuckoo filter (Fan et al., CoNEXT'14 construction): 16-bit
 fingerprints, 4 slots per bucket, the second candidate bucket derived as
 ``b1 XOR (fp * 0x5bd1e995)`` so it is computable from (bucket, fp) alone.
-Compared to the bloom prefilter it supports DELETION and has a lower
-false-positive rate (~2*slots/2^16 ≈ 0.012%) at ~95% achievable load.
+Compared to the bloom prefilter it has a lower false-positive rate
+(~2*slots/2^16 ≈ 0.012%) at ~95% achievable load.
 
 Determinism contract (the whole engine's hashes must replay identically):
 items are inserted in SORTED hash order and the eviction victim slot is
@@ -53,8 +53,7 @@ def size_for(n_items: int, headroom: float = 1.6) -> int:
 
 def build(hashes: np.ndarray, n_buckets: int) -> bytes | None:
     """Serialize a filter containing ``hashes``; None when insertion fails
-    (over capacity — caller resizes and rebuilds, mirroring the bloom's
-    rebuild-flag protocol)."""
+    (over capacity — the caller resizes and rebuilds)."""
     table = np.zeros((n_buckets, SLOTS), dtype=np.uint16)
     if insert(table, np.sort(hashes.astype(np.uint64))):
         return table.tobytes()
@@ -108,23 +107,3 @@ def contains(table: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     in1 = (table[b1] == fps[:, None]).any(axis=1)
     in2 = (table[b2] == fps[:, None]).any(axis=1)
     return in1 | in2
-
-
-def delete(table: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """Remove one fingerprint copy per hash (only valid for items actually
-    inserted — the cuckoo filter's capability the bloom lacks). Returns a
-    boolean array: True where a fingerprint was found and removed."""
-    n_buckets = table.shape[0]
-    h = hashes.astype(np.uint64)
-    fps = _fingerprints(h)
-    b1s = _bucket1(h, n_buckets)
-    b2s = _alt_bucket(b1s, fps, n_buckets)
-    out = np.zeros(len(h), dtype=bool)
-    for i, (fp, b1, b2) in enumerate(zip(fps, b1s, b2s)):
-        for cand in (int(b1), int(b2)):
-            slots = np.flatnonzero(table[cand] == fp)
-            if len(slots):
-                table[cand, slots[0]] = 0
-                out[i] = True
-                break
-    return out

@@ -60,7 +60,6 @@ class DeltaFrontier:
         base_path: str,
         compact_every: int = 8,
         max_tombstone_rows: int = 10_000_000,
-        partition_writes: bool = True,
     ):
         """``max_tombstone_rows`` is the broadcast-safety bound: at ~30 B/row
         10^7 tombstones are ~300 MB — near the practical broadcast ceiling.
@@ -70,27 +69,23 @@ class DeltaFrontier:
         from tombstone mass, not a fixed round count — a huge round budget
         can no longer push the broadcast past the driver limit).
 
-        ``partition_writes`` (r4): hive-partition the ``rows`` store by
-        ``shard`` (as the seen set does), so shard-filtered reads — the
-        engine's per-round pending-dedupe anti-join prunes to the link
-        batch's hit shards — are FILE-LEVEL prunes instead of full-frontier
-        scans (the last O(frontier)-per-round read path at 10^10 rows).
-        A/B lever for the write cost; correctness is layout-independent."""
+        The ``rows`` store is hive-partitioned by ``shard`` (as the seen
+        set is), so shard-filtered reads — the engine's per-round
+        pending-dedupe anti-join prunes to the link batch's hit shards —
+        are FILE-LEVEL prunes instead of full-frontier scans (the last
+        O(frontier)-per-round read path at 10^10 rows)."""
         self.rows = SnapshotTable(f"{base_path}/rows", FRONTIER_STORED)
         self.rm = SnapshotTable(f"{base_path}/tombstones", FRONTIER_RM)
         self.delay = SnapshotTable(f"{base_path}/delays", FRONTIER_DELAY)
         self.compact_every = compact_every
         self.max_tombstone_rows = max_tombstone_rows
-        self.partition_writes = partition_writes
 
-    def _clustered(self, df: DataFrame) -> DataFrame:
+    @staticmethod
+    def _clustered(df: DataFrame) -> DataFrame:
         """Cluster rows by shard before a hive-partitioned write so each
         task writes whole shards instead of spraying a file per shard dir
         (the seen set's measured ~0.4 s/round layout, SCALING.md)."""
-        return df.repartition(F.col("shard")) if self.partition_writes else df
-
-    def _pby(self) -> str | None:
-        return "shard" if self.partition_writes else None
+        return df.repartition(F.col("shard"))
 
     def tombstone_rows(self) -> int:
         """Tombstone rows since the last compaction, from snapshot metadata
@@ -109,7 +104,7 @@ class DeltaFrontier:
         self.rows.overwrite(
             self._clustered(frontier_rows.withColumn("added_in", F.lit(-1))),
             meta={"stage": "bootstrap"},
-            partition_by=self._pby(),
+            partition_by="shard",
         )
         self.rm.clear(meta={"stage": "bootstrap"})
         self.delay.clear(meta={"stage": "bootstrap"})
@@ -183,7 +178,7 @@ class DeltaFrontier:
                 new_rows.select(FRONTIER_COLS).withColumn("added_in", F.lit(round_no))
             ),
             meta={"round": round_no},
-            partition_by=self._pby(),
+            partition_by="shard",
         )
 
     # -- compaction ----------------------------------------------------------
@@ -203,7 +198,7 @@ class DeltaFrontier:
         self.rows.overwrite(
             self._clustered(eff.withColumn("added_in", F.lit(round_no))),
             meta={"compact": round_no},
-            partition_by=self._pby(),
+            partition_by="shard",
         )
         self.rm.clear(meta={"compact": round_no})
         self.delay.clear(meta={"compact": round_no})

@@ -205,12 +205,6 @@ class SnapshotTable:
             df = df.select(self.schema.fieldNames())
         return df
 
-    def read_local(self, columns: list[str]) -> pd.DataFrame:
-        """``columns`` of the live rows, read on the driver with pyarrow —
-        no Spark job; for small data (the bloom table's header columns)."""
-        parts = [pq.read_table(d, columns=columns) for d in self._data_dirs()]
-        return pa.concat_tables(parts).to_pandas() if parts else pd.DataFrame(columns=columns)
-
     def rollback_to(self, snapshot_id: int | None) -> None:
         """Drop snapshots newer than ``snapshot_id`` (None = drop all).
 

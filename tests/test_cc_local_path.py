@@ -4,6 +4,7 @@ pointer-doubling loop (both = min reachable id), for int and string ids."""
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from jobscrawler_spark.operators.components import connected_components
 
@@ -21,15 +22,24 @@ def _labels(df):
 
 
 def test_local_path_equals_distributed(spark, edges_df):
-    local = _labels(connected_components(edges_df))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        dist = _labels(connected_components(edges_df))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert local == dist
-    assert local  # non-empty, sanity
+    """Same rows and the same schema, nullability included, for nullable
+    and non-nullable edge columns."""
+    strict = spark.createDataFrame(
+        edges_df.collect(),
+        StructType([StructField(c, LongType(), False) for c in ("src", "dst")]),
+    )
+    for edges in (edges_df, strict):
+        local = connected_components(edges)
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            dist = connected_components(edges)
+            dist_rows = _labels(dist)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert _labels(local) == dist_rows
+        assert dist_rows  # non-empty, sanity
+        assert local.schema == dist.schema
 
 
 def test_local_path_string_ids(spark):

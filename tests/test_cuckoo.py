@@ -1,6 +1,6 @@
-"""Cuckoo-filter prefilter: no false negatives, low FP rate, DELETION (the
-capability the bloom lacks), build determinism, and full engine-vs-oracle
-equivalence with prefilter='cuckoo'."""
+"""Cuckoo-filter prefilter: no false negatives, low FP rate, incremental
+insert, build determinism, and full engine-vs-oracle equivalence with
+prefilter='cuckoo'."""
 
 import numpy as np
 
@@ -33,12 +33,6 @@ def test_incremental_insert_and_delete():
     table = CK.load(CK.build(a, size), size)
     assert CK.insert(table, np.sort(b))
     assert CK.contains(table, a).all() and CK.contains(table, b).all()
-    # delete half of a: those go away, the rest (and b) stay
-    removed = CK.delete(table, a[:250])
-    assert removed.all()
-    assert CK.contains(table, a[250:]).all() and CK.contains(table, b).all()
-    still = CK.contains(table, a[:250]).mean()
-    assert still < 0.05  # only residual FP hits remain
 
 
 def test_build_is_deterministic_over_set_order():
@@ -50,8 +44,8 @@ def test_build_is_deterministic_over_set_order():
 
 
 def test_over_capacity_flags_and_rebuild(spark, tmp_path):
-    """Overfilling a shard must flag + rebuild bigger (same protocol as the
-    bloom), with no false negatives end to end."""
+    """A round 9x the previous one gets a segment sized for it (a build
+    that fails over capacity doubles), with no false negatives end to end."""
     s = SeenSet(str(tmp_path / "seen"), n_shards=2, prefilter="cuckoo")
     for rnd, (lo, hi) in enumerate([(0, 200), (200, 2000)]):
         df = spark.createDataFrame(

@@ -185,21 +185,3 @@ def test_frontier_store_shard_partitioned_and_pruned(spark, tmp_path):
     # and the filtered read returns exactly the matching shards
     got = {r["shard"] for r in pruned.select("shard").distinct().collect()}
     assert got <= {1, 2}
-
-
-def test_frontier_flat_layout_lever_equivalent(spark, tmp_path):
-    """frontier_partition_writes=False (the A/B cost lever) must produce
-    the identical crawl: same fetch order, seen set, and frontier state."""
-    seeds, pol, rob = _fixtures()
-    eng = CrawlEngine(
-        spark, str(tmp_path / "flat"), frontier_partition_writes=False, **ARGS
-    )
-    eng.bootstrap(seeds, pol, rob)
-    eng.run(3)
-    ora = _oracle(seeds, pol, rob, 3)
-    assert {r["url"] for r in eng.seen.all_urls(spark).collect()} == ora.seen
-    got = [(r["round"], r["url"]) for r in eng.fetch_log().select("round", "url").collect()]
-    assert got == [(d["round"], d["url"]) for d in ora.landed]
-    assert not any(
-        "partition_by" in s for s in eng.frontier.rows.snapshots()
-    )

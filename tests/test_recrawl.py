@@ -1,19 +1,17 @@
 """Re-crawl-after-N-rounds policy (r5): seen-set expiry + re-enqueue.
 
-Exercises the cuckoo prefilter's DELETION path in the engine (the
-capability the bloom lacks — r4 verdict task 6) and pins exact
-equivalence of the policy against the single-threaded oracle simulator
-for BOTH prefilter backends.
+Exercises logical expiry in the engine (expired rounds' exact rows stop
+blocking and their prefilter segments are dropped from the probe) and
+pins exact equivalence of the policy against the single-threaded oracle
+simulator for BOTH prefilter backends.
 """
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from jobscrawler_spark.engine import CrawlEngine
 from jobscrawler_spark.generators import gen_politeness, gen_robots, gen_seeds
-from jobscrawler_spark.operators import cuckoo
 from jobscrawler_spark.operators.seen_set import SeenSet
 from jobscrawler_spark.oracle.simulator import OracleCrawler
 
@@ -73,9 +71,8 @@ def _run_oracle(pol) -> tuple[list, list]:
 @pytest.mark.parametrize("prefilter", ["cuckoo", "bloom"])
 def test_recrawl_matches_oracle(spark, tmp_path, prefilter):
     """Engine fetch log + effective seen set == simulator, with URLs
-    actually re-fetched (the policy fires, it is not vacuous). The cuckoo
-    run deletes fingerprints eagerly; the bloom run leaves the filter
-    stale-conservative — both must produce identical crawl results."""
+    actually re-fetched (the policy fires, it is not vacuous). Both
+    backends must produce identical crawl results."""
     pol = _no_delay_politeness(6, 13)
     log, seen = _run_engine(spark, tmp_path, prefilter, pol)
     olog, oseen = _run_oracle(pol)
@@ -107,9 +104,9 @@ def test_recrawl_with_delays_matches_oracle(spark, tmp_path):
 
 
 def test_seen_set_expire_deletes_cuckoo_fingerprints(spark, tmp_path):
-    """Unit: expire() removes the expired URLs' fingerprints from the
-    cuckoo shard filters (verified on the stored bits directly) and the
-    probe then lets those URLs through without the exact backstop."""
+    """Unit: expire() returns the expired round's rows, and a probe past
+    it drops that round's cuckoo segments, so those URLs clear the
+    prefilter without the exact backstop."""
     from jobscrawler_spark.functions.urls import with_canonical
 
     ss = SeenSet(str(tmp_path / "seen"), n_shards=4, prefilter="cuckoo")
@@ -135,20 +132,6 @@ def test_seen_set_expire_deletes_cuckoo_fingerprints(spark, tmp_path):
         r["url"] for r in df.select("url").distinct().collect()
     )
 
-    # stored cuckoo bits no longer contain the expired fingerprints...
-    blooms = {r["shard"]: r for r in ss.bloom.read(spark).collect()}
-    for r in exp_rows:
-        b = blooms[r["shard"]]
-        table = cuckoo.load(bytes(b["bits"]), int(b["n_bits"]))
-        h = np.array([r["url_hash"]], dtype=np.int64).view(np.uint64)
-        assert not cuckoo.contains(table, h)[0], r["url"]
-    # ...while round-1 URLs remain present
-    for r in df1.select("url_hash", "shard").collect():
-        b = blooms[r["shard"]]
-        table = cuckoo.load(bytes(b["bits"]), int(b["n_bits"]))
-        h = np.array([r["url_hash"]], dtype=np.int64).view(np.uint64)
-        assert cuckoo.contains(table, h)[0]
-
     # probe: expired URLs pass as unseen again; round-1 URLs still blocked
     cand = df.select("url", "url_hash", "shard").unionByName(
         df1.select("url", "url_hash", "shard")
@@ -156,6 +139,10 @@ def test_seen_set_expire_deletes_cuckoo_fingerprints(spark, tmp_path):
     out = ss.filter_unseen(spark, cand, min_round_added=1)
     got = sorted(r["url"] for r in out.collect())
     assert got == sorted(r["url"] for r in df.select("url").collect())
+    # the prefilter already clears expired URLs; round-1 URLs are maybe-seen
+    maybe = {r["url"]: r["__maybe"] for r in ss._last_probed.collect()}
+    assert not any(maybe[r["url"]] for r in exp_rows)
+    assert all(maybe[r["url"]] for r in df1.select("url").collect())
 
     # compact with min_round_added physically drops the expired rows
     ss.compact(spark, min_round_added=1)

@@ -1,6 +1,6 @@
 """Seen-set invariants: bloom has no false negatives (a seen URL is never
 reported unseen), the exact backstop removes bloom false positives, and
-growth past capacity triggers shard rebuild."""
+each add appends per-shard filter segments without touching earlier ones."""
 
 import numpy as np
 import pytest
@@ -72,9 +72,8 @@ def test_incremental_adds_and_rebuild(spark, tmp_path):
 
 
 def test_idle_shards_keep_single_bloom_row(spark, tmp_path):
-    """A shard untouched by later rounds must keep exactly ONE bloom row:
-    the cogroup update visits bloom-only shards too, and emitting a row
-    there would duplicate the `untouched` anti-join union every round."""
+    """A shard untouched by later rounds keeps exactly ONE segment: an add
+    appends one segment per shard its rows touch, and none for the rest."""
     s = SeenSet(str(tmp_path / "seen"), n_shards=2)
 
     def forged(url, h, shard):
@@ -87,7 +86,7 @@ def test_idle_shards_keep_single_bloom_row(spark, tmp_path):
     for rnd in range(1, 4):  # three rounds that only ever touch shard 1
         s.add(spark, forged(f"http://x.example.com/{rnd}", 100 + rnd, 1), round_no=rnd)
     rows = s.bloom.read(spark).groupBy("shard").count().collect()
-    assert {r["shard"]: r["count"] for r in rows} == {0: 1, 1: 1}
+    assert {r["shard"]: r["count"] for r in rows} == {0: 1, 1: 3}
     # and probing still sees everything
     assert s.filter_unseen(spark, forged("http://x.example.com/0", 11, 0)).count() == 0
 
@@ -121,36 +120,11 @@ def _range_urls(spark, lo, hi, n_shards=1):
 
 @pytest.mark.parametrize("prefilter", ["bloom", "cuckoo"])
 def test_growth_rebuilds_stay_exact(spark, tmp_path, prefilter):
-    """Adversarial growth: ONE shard driven through >=3 capacity rebuilds
-    (tiny min size + headroom 2 instead of 8, so the test stays small).
-    After EVERY add the probe must stay exact — including the adds that
-    crossed a rebuild — the rebuild path must actually have fired >=3
-    times, and the bloom table keeps exactly one row for the shard."""
-    from jobscrawler_spark.operators import cuckoo
-
-    def small_size(n_items, min_bits=256):
-        target = max(n_items * SS.BITS_PER_ITEM, min_bits)
-        n = min_bits
-        while n < target:
-            n <<= 1
-        return n
-
-    if prefilter == "bloom":
-
-        class SmallBackend(SS._BloomBackend):
-            size_for = staticmethod(lambda n: small_size(n * 2))
-            needs_rebuild = staticmethod(lambda n, size: small_size(n) > size)
-
-    else:
-
-        class SmallBackend(SS._CuckooBackend):
-            size_for = staticmethod(lambda n: cuckoo.size_for(max(n, 1) * 2))
-            needs_rebuild = staticmethod(
-                lambda n, size: n > int(0.9 * size * cuckoo.SLOTS)
-            )
-
+    """Adversarial growth: ONE shard takes rounds that grow ~3x each, so
+    each round's segment is sized for its own rows and the shard's
+    segments differ in size by orders of magnitude. After EVERY add the
+    probe must stay exact."""
     s = SeenSet(str(tmp_path / f"seen_{prefilter}"), n_shards=1, prefilter=prefilter)
-    s.backend = SmallBackend  # locally-defined class ships by value
     batches = [(0, 10), (10, 40), (40, 140), (140, 540), (540, 1500), (1500, 5000)]
     for rnd, (lo, hi) in enumerate(batches):
         s.add(spark, _range_urls(spark, lo, hi), round_no=rnd)
@@ -158,35 +132,42 @@ def test_growth_rebuilds_stay_exact(spark, tmp_path, prefilter):
         got = {r["url"] for r in s.filter_unseen(spark, probe).collect()}
         want = {f"http://g{i % 5}.example.com/p/{i}" for i in range(hi, hi + 25)}
         assert got == want, f"inexact after batch {rnd} ({prefilter})"
-    rebuilds = [sn for sn in s.bloom.snapshots() if "rebuilt" in sn["meta"]]
-    assert len(rebuilds) >= 3, [sn["meta"] for sn in s.bloom.snapshots()]
-    rows = s.bloom.read(spark).collect()
-    assert len(rows) == 1
-    assert rows[0]["n_items"] == 5000 and rows[0]["n_bits"] > 0
 
 
-def test_probe_treats_capacity_flag_row_as_all_maybe(spark, tmp_path):
-    """A concurrent add() commits a bloom snapshot whose over-capacity
-    shards carry the (n_bits=0, bits=b'') flag BEFORE _rebuild_shards
-    overwrites it; a probe binding that intermediate snapshot must treat
-    the shard as all-maybe (exact anti-join decides) — not crash on a
-    mod-0 probe (ADVICE r2 high)."""
-    import pandas as pd
+def test_add_appends_segments_of_its_round_only(spark, tmp_path):
+    """An add appends one segment per shard its rows touch, tagged with its
+    round and holding exactly its rows, as a new snapshot; every earlier
+    segment's data files stay byte-for-byte as they were."""
+    import hashlib
+    import os
 
-    s = SeenSet(str(tmp_path / "seen"), n_shards=2)
-    s.add(spark, _urls(spark, 0, 100, n_shards=2), round_no=0)
-    # forge the intermediate state: overwrite shard 0's row with the flag
-    bloom = s.bloom.read(spark).toPandas()
-    flagged = bloom.copy()
-    flagged.loc[flagged["shard"] == 0, "bits"] = b""
-    flagged.loc[flagged["shard"] == 0, "n_bits"] = 0
-    s.bloom.overwrite(
-        spark.createDataFrame(flagged, s.bloom.read(spark).schema), meta={"forged": True}
-    )
-    out = s.filter_unseen(spark, _urls(spark, 0, 150, n_shards=2))
-    got = sorted(r["url"] for r in out.collect())
-    want = sorted(f"http://h{(i % 5):02d}.example.com/p/{i}" for i in range(100, 150))
-    assert got == want
+    import pyarrow.parquet as pq
+
+    s = SeenSet(str(tmp_path / "seen"), n_shards=4)
+    s.add(spark, _urls(spark, 0, 200, n_shards=4), round_no=0)
+
+    def data_files() -> dict[str, str]:
+        out = {}
+        for root, _dirs, names in os.walk(s.bloom.path):
+            for n in names:
+                if n.endswith(".parquet"):
+                    with open(os.path.join(root, n), "rb") as f:
+                        out[os.path.join(root, n)] = hashlib.sha256(f.read()).hexdigest()
+        return out
+
+    before = data_files()
+    new = _urls(spark, 200, 260, n_shards=4).filter(F.col("shard").isin(1, 2))
+    s.add(spark, new, round_no=1)
+
+    snaps = s.bloom.snapshots()
+    assert [sn["mode"] for sn in snaps] == ["append", "append"]
+    seg = pq.read_table(os.path.join(s.bloom.path, snaps[-1]["dir"])).to_pandas()
+    assert sorted(seg["shard"]) == [1, 2]
+    assert set(seg["round_added"]) == {1}
+    assert seg["n_items"].sum() == new.count()
+    after = data_files()
+    assert {p: h for p, h in after.items() if p in before} == before
+    assert set(r["round_added"] for r in s.bloom.read(spark).collect()) == {0, 1}
 
 
 def test_seen_table_partitioned_and_probe_prunes(spark, tmp_path):
