@@ -2,7 +2,7 @@
 
 Round structure (SURVEY.md §3.1 re-expressed as a Spark dataflow):
 
-    frontier (delta: base ⟕anti tombstones + host-delay events)
+    frontier (delta: base ∪ re-enqueued rows ⟕anti tombstones + host-delay events)
              ── eligible(not_before_round <= r)
              ── politeness budget window (per-host top-k, W4)
              ── salted repartition (skew kill)
@@ -10,9 +10,9 @@ Round structure (SURVEY.md §3.1 re-expressed as a Spark dataflow):
              ├─→ images table   (status==200 rows, input_hint shape + lineage)
              ├─→ seen-set add   (ALL fetched URLs — 403s are not refetched)
              ├─→ outlinks: canonicalize → robots gate → dedupe → anti-join
-             │   seen ∪ frontier → frontier INSERT delta (depth+1, round r+1)
+             │   seen ∪ frontier → ONE frontier INSERT (depth+1) + re-enqueued rows
              ├─→ frontier REMOVE delta (fetched URLs) + host delay events;
-             │   compaction folds deltas every K rounds (O(round) writes,
+             │   compaction folds them + the INSERT's rows every K rounds (O(round) writes,
              │   never an O(frontier) rewrite — SCALING.md "Frontier")
              └─→ per-partition metrics row(s)
 
@@ -54,7 +54,7 @@ from .operators.frontier import (
     salted_repartition,
 )
 from .operators.seen_set import SeenSet
-from .plans.delta_frontier import DeltaFrontier
+from .plans.delta_frontier import STORED_COLS, DeltaFrontier
 from .plans.tables import SnapshotTable, commit_json
 from pyspark.sql.types import StructType
 
@@ -314,36 +314,34 @@ class CrawlEngine:
         r = self.next_round
         t0 = time.monotonic()
         frontier_snap = self.frontier.version()
-        frontier_df = self.frontier.read(self.spark)
         # the links probe reads the round-start state whatever this round has
         # committed by then, one plan on every run. Its pending dedupe reads
         # the raw rows: a tombstoned row's URL was fetched, so it is still
         # seen, re-enqueued as a live row, or in this round's batch
         pending = self.frontier.rows.read(self.spark).select("url_hash", "url", "shard")
         seen_tables = (self.seen.seen.read(self.spark), self.seen.bloom.read(self.spark))
-        expired = None
+        expired = renew = None
         if self.recrawl_after is not None:
             self._recrawl_cutoff = cutoff = r - self.recrawl_after - 1
             expired = self.seen.expire(self.spark, cutoff)
-        f_renew = None
         if expired is not None:
             # re-crawl policy: the URLs fetched in round r - recrawl_after - 1
             # re-enter the frontier, eligible now (pagerank mode: ranked by
-            # the previous round's edges, as in the simulator). The round
-            # reads them directly (no delay event or tombstone applies to
-            # them yet); their append commits after the fetch. added_in =
-            # r - 1: they were present BEFORE round r, so round-r delay
-            # events apply to them, and their old tombstones
-            # (removed_in <= r - 2) do not.
+            # the previous round's edges, as in the simulator). added_in =
+            # round_added + recrawl_after = r - 1, from the data (see
+            # DeltaFrontier.read): they were present BEFORE round r, so
+            # round-r delay events apply to them, and their old tombstones
+            # (removed_in <= r - 2) do not. Merged on read, written with the links.
             renew = (
                 self._link_priority(expired.withColumn("host", host_col(F.col("url"))))
                 .withColumn("depth", F.lit(0))
                 .withColumn("not_before_round", F.lit(r))
                 .withColumn("attempts", F.lit(0))
-                .select([f.name for f in FRONTIER.fields])
+                .withColumn("added_in", F.col("round_added") + self.recrawl_after)
+                .select(STORED_COLS)
             )
-            frontier_df = frontier_df.unionByName(renew)
             pending = pending.unionByName(renew.select("url_hash", "url", "shard"))
+        frontier_df = self.frontier.read(self.spark, renew)
 
         eligible = frontier_df.filter(F.col("not_before_round") <= r)
         facts = self._politeness_facts()
@@ -373,14 +371,11 @@ class CrawlEngine:
         ).groupby("partition_id", as_index=False).sum()
         n_selected = int(counts["urls_fetched"].sum())
         t_fetch = time.monotonic()
-        if expired is not None:
-            # after the fetch: no job of the round races it for cores
-            f_renew = ex.submit(self.frontier.insert, renew, r - 1)
 
         if n_selected == 0:
             # nothing eligible this round (all delayed); advance the clock
-            if expired is not None:
-                f_renew.result()
+            if renew is not None:
+                self.frontier.insert(renew, r)
             fetched.unpersist()
             self.next_round = r + 1
             self._commit_checkpoint()
@@ -397,7 +392,7 @@ class CrawlEngine:
             {"round": r},
         )
         # compaction rides the round's writes: the seen add writes the
-        # folded exact set, and the frontier fold takes the round's links
+        # folded exact set, and the frontier fold takes the round's rows
         compact = self.frontier.compaction_due(r, n_selected)
 
         landed = fetched.filter(F.col("status") == 200).select(IMAGES_LANDED_COLS)
@@ -416,6 +411,7 @@ class CrawlEngine:
                     F.col("host").alias("__src_host"),
                     F.explode("outlinks").alias("url"),
                     (F.col("depth") + 1).alias("depth"),
+                    F.col("round").alias("added_in"),  # from the data: see DeltaFrontier.read
                 )
             )
             links = with_canonical(links, n_shards=self.n_shards)
@@ -444,21 +440,28 @@ class CrawlEngine:
                 blocked=fetched_keys.unionByName(pending),
                 tables=seen_tables,
             )
-            new_rows = fresh.withColumns({"not_before_round": F.lit(r + 1), "attempts": F.lit(0)})
-            new_rows = new_rows.select([f.name for f in FRONTIER.fields])
-            if not compact:
-                if f_renew is not None:
-                    f_renew.result()  # both append to the frontier rows table
-                self.frontier.insert(new_rows, r)
-            return new_rows
+            new_rows = fresh.withColumns(
+                {"not_before_round": F.lit(r + 1), "attempts": F.lit(0)}
+            )
+            return new_rows.select(STORED_COLS)
+
+        def _frontier_job() -> DataFrame | None:
+            # the round's one write to the frontier rows: its links (none
+            # when no landed page links anywhere) with the re-enqueued rows,
+            # appended — or, in a compaction round, returned for the fold
+            rows = _links_job() if counts["ok_links"].sum() else None
+            if renew is not None:
+                rows = renew if rows is None else rows.unionByName(renew)
+            if rows is not None and not compact:
+                self.frontier.insert(rows, r)
+            return rows
 
         f_images = ex.submit(self.images.append, landed, {"round": r})
         f_seen = ex.submit(
             self.seen.add, self.spark, fetched_keys, r, n_selected, compact, self._seen_min_round()
         )
         f_rm = ex.submit(self.frontier.remove, fetched, r, n_selected)
-        # a round whose landed pages link nowhere has no links job
-        f_links = ex.submit(_links_job) if counts["ok_links"].sum() else None
+        f_frontier = ex.submit(_frontier_job)
         f_delay = None
         if facts["delays"]:
             delayed_hosts = (
@@ -473,13 +476,12 @@ class CrawlEngine:
         f_seen.result()
         f_rm.result()
         t_seen = time.monotonic()
-        new_rows = f_links.result() if f_links is not None else None
-        for f in (f_delay, f_renew):
-            if f is not None:
-                f.result()
+        rows = f_frontier.result()
+        if f_delay is not None:
+            f_delay.result()
         if compact:
-            # after every append, tombstone and delay event of the round
-            self.frontier.compact(self.spark, r, new_rows)
+            # after the round's tombstones and delay events, which the fold applies
+            self.frontier.compact(self.spark, r, rows)
         t_frontier = time.monotonic()
 
         stats = {
@@ -704,13 +706,15 @@ class CrawlEngine:
     def compact_takedowns(self) -> None:
         """Physically drop tombstoned rows from the landed table, the
         phash band store, and the dedup label store (one overwrite
-        snapshot each, superseded dirs expired), then clear the takedown
-        set — disk returns to O(live content) and reads stop paying the
-        anti-join. Serving output is unchanged (test-pinned)."""
+        snapshot each), recommit the checkpoint, then clear the takedown
+        set and expire the superseded dirs — disk returns to O(live
+        content) and reads stop paying the anti-join. Serving output is
+        unchanged (test-pinned), also after a crash at any step."""
         dead = self._takedown_ids()
         if dead is None:
             return
         dead = dead.localCheckpoint()
+        written = []
         for store, key in (
             (self.images, "image_id"),
             (SnapshotTable(f"{self.base}/phash_bands"), "image_id"),
@@ -757,17 +761,15 @@ class CrawlEngine:
             meta = {"stage": "takedown_compact"}
             if upto >= 0:
                 meta["upto_round"] = upto
-            sid = store.overwrite(live, meta=meta)
-            store.expire_before(sid)
-        tstore = self._takedown_store()
-        tsid = tstore.overwrite(dead.limit(0), meta={"stage": "cleared"})
-        tstore.expire_before(tsid)
-        # recommit: the compaction overwrote the images snapshot AND
-        # expired its predecessors — a resume against the stale
-        # checkpoint.json would roll images back to an expired snapshot id
-        # and silently destroy the landed table (ADVICE r6, reproduced:
-        # 93 images -> 0 after takedown + compact + resume)
+            written.append((store, store.overwrite(live, meta=meta)))
+        # commit the checkpoint BEFORE clearing the takedown set or expiring
+        # anything: resume rolls images back to it, and a checkpoint naming
+        # an expired snapshot would empty the landed table (ADVICE r6)
         self._commit_checkpoint()
+        tstore = self._takedown_store()
+        written.append((tstore, tstore.clear(meta={"stage": "cleared"})))
+        for store, sid in written:
+            store.expire_before(sid)
 
     def image_dedup_report(self, max_hamming: int = 7) -> DataFrame:
         """Post-crawl image dedup over the landed images table: phash

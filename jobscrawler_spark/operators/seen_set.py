@@ -34,7 +34,6 @@ the last compaction; the probe stays a co-partitioned grouped map on
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import numpy as np
@@ -204,18 +203,9 @@ class SeenSet:
         if compact:
             self.compact(spark, min_round_added, rows, {round_no: n_new})
             return
-        # the exact-set append and the segment append are independent jobs:
-        # run them concurrently (latency, not CPU, dominates small rounds)
-        with ThreadPoolExecutor(2) as ex:
-            f_seen = ex.submit(
-                self.seen.append,
-                self._clustered(rows),
-                {"round": round_no, "rows": n_new},
-                "shard",  # hive-partitioned: the probe prunes to hit shards
-            )
-            f_bloom = ex.submit(self.bloom.append, self._segments(rows), {"round": round_no})
-            f_seen.result()
-            f_bloom.result()
+        # hive-partitioned: the probe prunes to hit shards
+        self.seen.append(self._clustered(rows), {"round": round_no, "rows": n_new}, "shard")
+        self.bloom.append(self._segments(rows), {"round": round_no})
 
     def _segments(self, rows: DataFrame) -> DataFrame:
         """One filter segment per shard of ``rows`` (url_hash, shard,
@@ -272,7 +262,8 @@ class SeenSet:
     def expire(self, spark: SparkSession, round_added: int) -> DataFrame | None:
         """Forget the URLs fetched in exactly ``round_added`` (the engine's
         re-crawl policy calls this once per round value): their exact-set
-        rows (url_hash, url, shard), for the caller to re-enqueue, or None
+        rows (url_hash, url, shard, round_added), for the caller to
+        re-enqueue, or None
         when the manifest's per-round row counts say there are none — no
         Spark job either way.
 
@@ -285,7 +276,7 @@ class SeenSet:
         return (
             self.seen.read(spark)
             .filter(F.col("round_added") == round_added)
-            .select("url_hash", "url", "shard")
+            .select("url_hash", "url", "shard", "round_added")
         )
 
     def compact(
@@ -324,16 +315,12 @@ class SeenSet:
             rows = rows.unionByName(new_rows)
         if min_round_added is not None:
             rows = rows.filter(F.col("round_added") >= min_round_added)
-        with ThreadPoolExecutor(2) as ex:
-            f_seen = ex.submit(
-                self.seen.overwrite,
-                self._clustered(rows).sortWithinPartitions("round_added"),
-                {"compact": True, "round_rows": kept},
-                "shard",
-            )
-            f_bloom = ex.submit(self.bloom.overwrite, self._segments(rows), {"compact": True})
-            f_seen.result()
-            f_bloom.result()
+        self.seen.overwrite(
+            self._clustered(rows).sortWithinPartitions("round_added"),
+            {"compact": True, "round_rows": kept},
+            "shard",
+        )
+        self.bloom.overwrite(self._segments(rows), {"compact": True})
 
     @staticmethod
     def _clustered(rows: DataFrame) -> DataFrame:

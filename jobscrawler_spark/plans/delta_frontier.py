@@ -7,7 +7,9 @@ merge-on-read state in three snapshot tables, so the per-round WRITE is
 O(round size) instead of O(frontier size):
 
 - ``rows``   (FRONTIER_STORED): append-only inserts, each row stamped with
-  the round it was inserted in (``added_in``; bootstrap rows get -1).
+  the round before the first round it is pending in (``added_in``: -1 for
+  bootstrap rows, the discovering round for links, r - 1 for a URL
+  re-enqueued at the start of round r).
   LIVE rows are unique by (url_hash, url): a URL enters the frontier at
   most once while pending (outlinks are anti-joined against seen ∪
   frontier first) and a fetched URL sits in the seen set. Under the
@@ -24,16 +26,21 @@ O(round size) instead of O(frontier size):
   Storing the event once per HOST instead of rewriting every affected row
   is what makes the delta representation exact AND O(hosts) per round.
 
-Read path: ``rows`` ⟕anti ``tombstones`` (tombstone side broadcast — its
-size is bounded by compact_every × round size), then a broadcast join of
-the per-host event arrays and
+Read path: ``rows`` (plus any uncommitted FRONTIER_STORED rows the caller
+passes in, e.g. the round's re-enqueued rows) ⟕anti ``tombstones``
+(tombstone side broadcast — its size is bounded by compact_every × round
+size), then a broadcast join of the per-host event arrays and
 ``not_before_round = greatest(stored, max(until where event_round > added_in))``
 — all Catalyst, no shuffle beyond the pruned-by-broadcast anti-join. A join
 whose delta table the manifest shows empty is skipped (no Spark job).
 
-Compaction every ``compact_every`` rounds folds tombstones and events into
-a fresh base overwrite and clears both delta tables (manifest-only
-commits). Crash-safety: a crash between the three compaction writes is harmless — re-applying tombstones
+Writes to ``rows``: one per round. ``insert`` appends the round's rows
+(links and re-enqueued rows together, each carrying its own added_in);
+a compaction round instead passes them to ``compact``, which folds them
+through the same read path — so they meet the round's tombstones and delay
+events exactly as committed rows would — into a fresh base overwrite, and
+clears both delta tables (manifest-only commits). Crash-safety: a crash
+between the three compaction writes is harmless — re-applying tombstones
 of already-removed rows is a no-op, and re-applying events to compacted
 rows (added_in = compaction round ≥ every event_round) selects nothing;
 resume rolls all three tables back to the checkpoint anyway.
@@ -52,6 +59,7 @@ from ..schemas import FRONTIER, FRONTIER_DELAY, FRONTIER_RM, FRONTIER_STORED
 from .tables import SnapshotTable
 
 FRONTIER_COLS = [f.name for f in FRONTIER.fields]
+STORED_COLS = [f.name for f in FRONTIER_STORED.fields]
 
 
 class DeltaFrontier:
@@ -91,12 +99,7 @@ class DeltaFrontier:
         """Tombstone rows since the last compaction, from snapshot metadata
         (each remove() records its row count) — no table scan, and correct
         across resume because the manifest is the source of truth."""
-        total = 0
-        for s in self.rm.snapshots():
-            if s["mode"] == "overwrite":
-                total = 0
-            total += int(s["meta"].get("rows", 0))
-        return total
+        return sum(int(s["meta"].get("rows", 0)) for s in self.rm._snaps_at(None))
 
     # -- lifecycle -----------------------------------------------------------
     def bootstrap(self, spark: SparkSession, frontier_rows: DataFrame) -> None:
@@ -110,9 +113,16 @@ class DeltaFrontier:
         self.delay.clear(meta={"stage": "bootstrap"})
 
     # -- merge-on-read -------------------------------------------------------
-    def read(self, spark: SparkSession) -> DataFrame:
-        """The effective frontier (FRONTIER columns, pushbacks folded in)."""
+    def read(self, spark: SparkSession, extra: DataFrame | None = None) -> DataFrame:
+        """The effective frontier (FRONTIER columns, pushbacks folded in).
+        ``extra``: uncommitted FRONTIER_STORED rows, merged like stored ones.
+        Their added_in should come from their data, not a literal: Spark
+        pushes the anti-join into each union branch, where a literal
+        added_in turns the round-aware condition into a filter on the
+        tombstone side — a broadcast of its own, one more Spark job."""
         live = self.rows.read(spark)
+        if extra is not None:
+            live = live.unionByName(extra.select(STORED_COLS))
         if not self.rm.is_empty():
             rm = self.rm.read(spark).select(
                 F.col("url_hash").alias("__rm_hash"),
@@ -170,13 +180,12 @@ class DeltaFrontier:
         )
         return self.delay.append(events, meta={"round": round_no})
 
-    def insert(self, new_rows: DataFrame, round_no: int) -> int:
-        """Append FRONTIER-shaped rows discovered during ``round_no``
-        (exempt from round_no's own pushback events)."""
+    def insert(self, rows: DataFrame, round_no: int) -> int:
+        """Append round ``round_no``'s FRONTIER_STORED rows. The caller
+        stamps ``added_in``: a row is exempt from the pushback events of
+        rounds up to its added_in."""
         return self.rows.append(
-            self._clustered(
-                new_rows.select(FRONTIER_COLS).withColumn("added_in", F.lit(round_no))
-            ),
+            self._clustered(rows),
             meta={"round": round_no},
             partition_by="shard",
         )
@@ -188,13 +197,11 @@ class DeltaFrontier:
         by_cadence = self.compact_every > 0 and (round_no + 1) % self.compact_every == 0
         return by_cadence or self.tombstone_rows() + pending_rows > self.max_tombstone_rows
 
-    def compact(self, spark: SparkSession, round_no: int, new_rows: DataFrame | None = None) -> None:
-        """Fold deltas into a fresh base; clear the delta tables.
-        ``new_rows`` (FRONTIER-shaped, from ``round_no``) fold in directly
-        instead of being appended first."""
-        eff = self.read(spark)
-        if new_rows is not None:
-            eff = eff.unionByName(new_rows.select(FRONTIER_COLS))
+    def compact(self, spark: SparkSession, round_no: int, rows: DataFrame | None = None) -> None:
+        """Fold deltas into a fresh base; clear the delta tables. ``rows``
+        (FRONTIER_STORED, the round's uncommitted rows) fold in through the
+        read path instead of being appended first."""
+        eff = self.read(spark, rows)
         self.rows.overwrite(
             self._clustered(eff.withColumn("added_in", F.lit(round_no))),
             meta={"compact": round_no},

@@ -223,19 +223,17 @@ class SnapshotTable:
         """Drop snapshots (and data dirs) no longer reachable — keeps the
         frontier's overwrite-per-round history from growing unboundedly."""
         snaps = self._load()
-        keep: list[dict] = []
         # find last overwrite at-or-before snapshot_id: everything before it
         # is unreachable for reads >= snapshot_id
         cut = 0
         for i, s in enumerate(snaps):
             if s["mode"] == "overwrite" and s["id"] <= snapshot_id:
                 cut = i
-        for i, s in enumerate(snaps):
-            if i < cut:
-                shutil.rmtree(os.path.join(self.path, s["dir"]), ignore_errors=True)
-            else:
-                keep.append(s)
-        self._commit(keep)
+        # commit before deleting: a crash in between leaves orphan dirs,
+        # never a manifest that lists deleted ones
+        self._commit(snaps[cut:])
+        for s in snaps[:cut]:
+            shutil.rmtree(os.path.join(self.path, s["dir"]), ignore_errors=True)
 
 
 def snapshot_diff(

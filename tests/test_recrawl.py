@@ -29,7 +29,7 @@ def _no_delay_politeness(n_hosts: int, seed: int) -> pd.DataFrame:
     return pol
 
 
-def _run_engine(spark, tmp_path, prefilter: str, pol) -> tuple[list, list]:
+def _run_engine(spark, tmp_path, prefilter: str, pol, compact_every: int = 8) -> tuple[list, list]:
     eng = CrawlEngine(
         spark,
         str(tmp_path / prefilter),
@@ -39,6 +39,7 @@ def _run_engine(spark, tmp_path, prefilter: str, pol) -> tuple[list, list]:
         fetch_partitions=4,
         prefilter=prefilter,
         recrawl_after=RECRAWL,
+        compact_every=compact_every,
     )
     eng.bootstrap(gen_seeds(n=60, n_hosts=6, seed=13), pol, gen_robots(6, seed=13))
     eng.run(N_ROUNDS)
@@ -92,12 +93,16 @@ def test_recrawl_matches_oracle(spark, tmp_path, prefilter):
             assert b >= a + RECRAWL + 1, (u, rs)
 
 
-def test_recrawl_with_delays_matches_oracle(spark, tmp_path):
+@pytest.mark.parametrize("compact_every", [8, 2])
+def test_recrawl_with_delays_matches_oracle(spark, tmp_path, compact_every):
     """Same equivalence with crawl delays active: a re-enqueued row is
     subject to its host's round-r pushback (it was 'present before the
-    round'), exactly like the simulator's end-of-round pushback loop."""
+    round'), exactly like the simulator's end-of-round pushback loop.
+    With ``compact_every=2`` rounds 3 and 5 both re-enqueue and compact,
+    so the compaction fold applies the round's tombstones and delay
+    events to the re-enqueued rows."""
     pol = gen_politeness(6, seed=13)  # has genuine delays
-    log, seen = _run_engine(spark, tmp_path, "cuckoo", pol)
+    log, seen = _run_engine(spark, tmp_path, "cuckoo", pol, compact_every)
     olog, oseen = _run_oracle(pol)
     assert log == olog
     assert seen == oseen

@@ -10,7 +10,6 @@ status tracker. The crawl must still equal the oracle's.
 
 import collections
 import threading
-import time
 
 import pandas as pd
 import pytest
@@ -22,10 +21,11 @@ from jobscrawler_spark.oracle.simulator import OracleCrawler
 from jobscrawler_spark.plans.tables import SnapshotTable
 from jobscrawler_spark.schemas import ROUND_METRICS
 
-# measured on this crawl: 20-22 jobs per round, the most in round 3, which
-# both expires and compacts (24 while expiry deleted cuckoo fingerprints:
-# a shuffle and a filter write); before the job cuts it was 43-80 per round
-MAX_JOBS_PER_ROUND = 22
+# measured on this crawl: 18-20 jobs per round (20-22 while re-enqueued
+# rows had an append of their own, whose shuffle and write cost 2 jobs;
+# 24 while expiry deleted cuckoo fingerprints: a shuffle and a filter
+# write); before the job cuts it was 43-80 per round
+MAX_JOBS_PER_ROUND = 20
 ROUNDS = 4
 ARGS = dict(
     n_shards=4,
@@ -137,53 +137,43 @@ def test_expire_of_a_round_that_fetched_nothing(spark, tmp_path):
 def test_round_writes_never_share_a_table(spark, tmp_path, monkeypatch):
     """A round's parallel phases never write one table at the same time (a
     snapshot write is load manifest -> write dir -> commit, unlocked: two
-    at once would share a snapshot dir and lose one commit). The
-    re-enqueue append is held until the round's link probe has returned,
-    so a links append not ordered after it would overlap it."""
+    at once would share a snapshot dir and lose one commit), and a round
+    writes the frontier rows at most once: its re-enqueued rows ride the
+    links append (round 2) or the compaction fold (round 3)."""
     seeds, pol, rob = gen_seeds(n=60, n_hosts=6, seed=3), _politeness(6, 3, 0), gen_robots(6, 3)
-    args = {**ARGS, "compact_every": 0}  # links go through insert every round
-    eng = CrawlEngine(spark, str(tmp_path / "writes"), **args)
+    eng = CrawlEngine(spark, str(tmp_path / "writes"), **ARGS)
     eng.bootstrap(seeds, pol, rob)
 
-    write, probe = SnapshotTable._write, eng.seen.filter_unseen
-    lock, active, overlaps, appends = threading.Lock(), {}, [], []
-    probed = collections.defaultdict(threading.Event)  # per round
-
-    def tracked_probe(*args, **kw):
-        out = probe(*args, **kw)
-        probed[eng.next_round].set()
-        return out
+    write = SnapshotTable._write
+    lock, active, overlaps = threading.Lock(), {}, []
+    rows_writes = collections.Counter()  # (round, mode) of frontier-rows writes
 
     def tracked_write(self, df, mode, meta, partition_by=None):
-        renew = False
-        if self.path == eng.frontier.rows.path and mode == "append":
-            renew = meta["round"] < eng.next_round
-            appends.append((eng.next_round, "renew" if renew else "links"))
+        if self.path == eng.frontier.rows.path:
+            rows_writes[eng.next_round, mode] += 1
         with lock:
             active[self.path] = active.get(self.path, 0) + 1
             if active[self.path] > 1:
                 overlaps.append(self.path)
         try:
-            if renew:
-                probed[eng.next_round].wait(60)
-                time.sleep(1)  # room for an unordered links append to start
             return write(self, df, mode, meta, partition_by)
         finally:
             with lock:
                 active[self.path] -= 1
 
     monkeypatch.setattr(SnapshotTable, "_write", tracked_write)
-    monkeypatch.setattr(eng.seen, "filter_unseen", tracked_probe)
-    stats = eng.run(3)
+    stats = eng.run(ROUNDS)
     monkeypatch.undo()
 
-    assert (2, "renew") in appends and (2, "links") in appends, appends
+    assert rows_writes[2, "append"] == 1 and rows_writes[3, "overwrite"] == 1, rows_writes
+    per_round = collections.Counter(r for r, _ in rows_writes.elements())
+    assert max(per_round.values()) == 1, rows_writes
     assert overlaps == []
     ora = _oracle(
-        seeds, pol, rob, 3, default_budget=3, max_depth=1, n_shards=4, recrawl_after=1
+        seeds, pol, rob, ROUNDS, default_budget=3, max_depth=1, n_shards=4, recrawl_after=1
     )
     assert [s["selected"] for s in stats] == [
-        sum(fr == r for fr, _ in ora.fetch_log) for r in range(3)
+        sum(fr == r for fr, _ in ora.fetch_log) for r in range(ROUNDS)
     ]
     log = [(r["round"], r["priority"], r["url"]) for r in eng.fetch_log().collect()]
     assert log == [(d["round"], d["priority"], d["url"]) for d in ora.landed]

@@ -116,9 +116,10 @@ def test_frontier_empty_insert_then_read(spark, tmp_path):
     )
     f.bootstrap(spark, rows)
     assert f.read(spark).count() == 30
-    f.insert(rows.filter(F.lit(False)), 0)  # empty insert, still committed
+    stored = rows.withColumn("added_in", F.lit(0))  # insert takes FRONTIER_STORED rows
+    f.insert(stored.filter(F.lit(False)), 0)  # empty insert, still committed
     assert f.read(spark).count() == 30
-    f.insert(rows.limit(0), 1)
+    f.insert(stored.limit(0), 1)
     f.compact(spark, 1)  # compaction across the fileless snapshots
     assert f.read(spark).count() == 30
 
