@@ -29,10 +29,15 @@ globally — never task completion order. The single-threaded oracle
 equivalence tests require exact match of both the ordered fetch list and
 the final URL-seen set.
 
-Checkpointing: every table is a SnapshotTable; a round commits all writes,
-then atomically updates ``checkpoint.json`` with the snapshot ids. Resume
-rolls every table back to the checkpointed ids and continues — a crash
-mid-round is invisible.
+Checkpointing: every table the engine persists is a SnapshotTable. The
+round state (frontier rows, tombstones and delays, images, metrics, seen
+set and filter, host edges) is named once, in ``self.tables``: a round
+commits its writes, then ``checkpoint.json`` records every table's snapshot
+id atomically, and (with ``expire_history``) each table drops the history
+its last overwrite made unreachable. Resume rolls every table back to the
+recorded ids and continues — a crash at any commit point mid-round is
+invisible. The politeness and robots dims are inputs, not round state:
+they are overwritten whole (one snapshot each) and resume keeps them.
 """
 
 from __future__ import annotations
@@ -115,7 +120,6 @@ class CrawlEngine:
         fetch_partitions: int | None = None,
         expire_history: bool = False,
         compact_every: int = 8,
-        max_tombstone_rows: int = 10_000_000,
         prefilter: str = "bloom",  # or "cuckoo" (north_star's alternative)
         recrawl_after: int | None = None,
         priority_mode: str = "hash",
@@ -126,19 +130,14 @@ class CrawlEngine:
         self.default_budget = default_budget
         self.max_depth = max_depth
         # bounded-history mode: after each checkpoint, drop snapshots made
-        # unreachable by the latest overwrite of each overwrite-mode table
-        # (a long crawl would otherwise keep dead copies on disk). Resume
-        # only ever rolls back to the LATEST checkpoint, so expiring
-        # pre-overwrite history is safe.
+        # unreachable by each table's latest overwrite (a long crawl would
+        # otherwise keep dead copies on disk). Resume only ever rolls back
+        # to the LATEST checkpoint, so expiring that history is safe.
         self.expire_history = expire_history
         self.fetch_partitions = fetch_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
-        self.frontier = DeltaFrontier(
-            f"{base_path}/frontier",
-            compact_every=compact_every,
-            max_tombstone_rows=max_tombstone_rows,
-        )
+        self.frontier = DeltaFrontier(f"{base_path}/frontier", compact_every=compact_every)
         self.images = SnapshotTable(f"{base_path}/images", IMAGES_LANDED)
         self.metrics = SnapshotTable(f"{base_path}/metrics", ROUND_METRICS)
         self.seen = SeenSet(base_path, n_shards, prefilter=prefilter)
@@ -164,27 +163,34 @@ class CrawlEngine:
         )
         self._ranks_cache: tuple[int | None, DataFrame] | None = None
         self.next_round = 0
+        # every table a checkpoint pins, by its name in checkpoint.json
+        self.tables = {
+            "frontier_rows": self.frontier.rows,
+            "tombstones": self.frontier.rm,
+            "delays": self.frontier.delay,
+            "images": self.images,
+            "metrics": self.metrics,
+            "seen": self.seen.seen,
+            "bloom": self.seen.bloom,
+        }
+        if self.host_edges is not None:
+            self.tables["host_edges"] = self.host_edges
+        # the dims are inputs, not round state: each write is a pyarrow
+        # overwrite (no Spark job) that expires the old snapshot, and resume
+        # keeps the current one
+        self.politeness_dim = SnapshotTable(f"{base_path}/dim_politeness", POLITENESS)
+        self.robots_dim = SnapshotTable(f"{base_path}/dim_robots", ROBOTS)
 
     # ------------------------------------------------------------------ dims
-    def _dim_path(self, name: str) -> str:
-        return os.path.join(self.base, f"dim_{name}")
-
-    def _write_dim(self, name: str, pdf: pd.DataFrame, schema) -> None:
-        self.spark.createDataFrame(pdf, schema).coalesce(1).write.mode("overwrite").parquet(
-            self._dim_path(name)
-        )
-
     def _politeness(self) -> DataFrame:
-        return self.spark.read.schema(POLITENESS).parquet(self._dim_path("politeness"))
+        return self.politeness_dim.read(self.spark)
 
     def _robots(self) -> DataFrame:
         """Grouped robots dim, cached once per engine (reused every round)."""
         if getattr(self, "_robots_grouped", None) is None:
             from .operators.frontier import group_robots
 
-            self._robots_grouped = group_robots(
-                self.spark.read.schema(ROBOTS).parquet(self._dim_path("robots"))
-            ).cache()
+            self._robots_grouped = group_robots(self.robots_dim.read(self.spark)).cache()
         return self._robots_grouped
 
     # ------------------------------------------------------------- bootstrap
@@ -194,8 +200,8 @@ class CrawlEngine:
         politeness: pd.DataFrame,
         robots: pd.DataFrame,
     ) -> None:
-        self._write_dim("politeness", politeness, POLITENESS)
-        self._write_dim("robots", robots, ROBOTS)
+        for dim, pdf in ((self.politeness_dim, politeness), (self.robots_dim, robots)):
+            dim.expire_before(dim.overwrite(pdf))
         if isinstance(seeds, pd.DataFrame):
             seeds = self.spark.createDataFrame(seeds[["url", "priority", "depth"]])
         canon = with_canonical(seeds.select("url", "priority", "depth"), n_shards=self.n_shards)
@@ -219,7 +225,7 @@ class CrawlEngine:
         (operators.frontier.parse_robots_crawl_delay), which feeds back into
         this dim. Takes effect from the NEXT round (the dim is re-read per
         round); the cached dim facts are dropped so they re-derive."""
-        self._write_dim("politeness", politeness, POLITENESS)
+        self.politeness_dim.expire_before(self.politeness_dim.overwrite(politeness))
         self._dim_facts = None
 
     def _politeness_facts(self):
@@ -503,17 +509,6 @@ class CrawlEngine:
         fetched.unpersist()
         self.next_round = r + 1
         self._commit_checkpoint()
-        if self.expire_history:
-            # drop snapshots unreachable since each table's last overwrite
-            # (frontier / seen-set compaction); resume only ever rolls back
-            # to the LATEST checkpoint, so expiry is safe
-            self.frontier.expire_history()
-            if self.seen.bloom.current_snapshot is not None:
-                self.seen.bloom.expire_before(self.seen.bloom.current_snapshot)
-            if self.seen.seen.current_snapshot is not None:
-                # drops pre-compaction seen snapshots (unreachable since the
-                # last overwrite); plain appends are all kept
-                self.seen.seen.expire_before(self.seen.seen.current_snapshot)
         return stats
 
     def run(self, n_rounds: int) -> list[dict]:
@@ -537,18 +532,15 @@ class CrawlEngine:
         return os.path.join(self.base, "checkpoint.json")
 
     def _commit_checkpoint(self) -> None:
-        state = {
-            "next_round": self.next_round,
-            "frontier": self.frontier.state(),
-            "images": self.images.current_snapshot,
-            "metrics": self.metrics.current_snapshot,
-            "seen": self.seen.seen.current_snapshot,
-            "bloom": self.seen.bloom.current_snapshot,
-        }
-        if self.host_edges is not None:
-            state["host_edges"] = self.host_edges.current_snapshot
-            state["priority_mode"] = self.priority_mode
-        commit_json(self._ckpt_path(), state)
+        ids = {name: t.current_snapshot for name, t in self.tables.items()}
+        commit_json(
+            self._ckpt_path(),
+            {"next_round": self.next_round, "priority_mode": self.priority_mode, "tables": ids},
+        )
+        if self.expire_history:
+            for name, t in self.tables.items():
+                if ids[name] is not None:
+                    t.expire_before(ids[name])
 
     @classmethod
     def resume(cls, spark: SparkSession, base_path: str, **kwargs) -> "CrawlEngine":
@@ -556,18 +548,18 @@ class CrawlEngine:
         table writes (a crash mid-round leaves orphan snapshots)."""
         with open(os.path.join(base_path, "checkpoint.json")) as f:
             state = json.load(f)
+        # checked before any table is opened: a state dir written before
+        # the dims were snapshot tables has no dim manifest, so its dims
+        # would read as empty
+        ids = state["tables"]
         # the checkpoint remembers the priority mode, so resume callers
         # don't have to repeat it (an explicit kwarg still wins)
-        if "priority_mode" in state:
-            kwargs.setdefault("priority_mode", state["priority_mode"])
+        kwargs.setdefault("priority_mode", state["priority_mode"])
         eng = cls(spark, base_path, **kwargs)
-        if eng.host_edges is not None:
-            eng.host_edges.rollback_to(state.get("host_edges"))  # None = drop all
-        eng.frontier.rollback_to(state["frontier"])  # dict of 3 table ids
-        eng.images.rollback_to(state["images"])
-        eng.metrics.rollback_to(state["metrics"])
-        eng.seen.seen.rollback_to(state["seen"])
-        eng.seen.bloom.rollback_to(state["bloom"])
+        for name, t in eng.tables.items():
+            t.rollback_to(ids[name])  # None = drop all
+        for dim in (eng.politeness_dim, eng.robots_dim):
+            dim.rollback_to(dim.current_snapshot)  # drops a crashed write's dir
         eng.next_round = state["next_round"]
         return eng
 

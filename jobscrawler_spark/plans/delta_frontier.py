@@ -28,8 +28,8 @@ O(round size) instead of O(frontier size):
 
 Read path: ``rows`` (plus any uncommitted FRONTIER_STORED rows the caller
 passes in, e.g. the round's re-enqueued rows) ⟕anti ``tombstones``
-(tombstone side broadcast — its size is bounded by compact_every × round
-size), then a broadcast join of the per-host event arrays and
+(tombstone side broadcast — compaction keeps it under MAX_TOMBSTONE_ROWS),
+then a broadcast join of the per-host event arrays and
 ``not_before_round = greatest(stored, max(until where event_round > added_in))``
 — all Catalyst, no shuffle beyond the pruned-by-broadcast anti-join. A join
 whose delta table the manifest shows empty is skipped (no Spark job).
@@ -39,11 +39,12 @@ Writes to ``rows``: one per round. ``insert`` appends the round's rows
 a compaction round instead passes them to ``compact``, which folds them
 through the same read path — so they meet the round's tombstones and delay
 events exactly as committed rows would — into a fresh base overwrite, and
-clears both delta tables (manifest-only commits). Crash-safety: a crash
-between the three compaction writes is harmless — re-applying tombstones
-of already-removed rows is a no-op, and re-applying events to compacted
-rows (added_in = compaction round ≥ every event_round) selects nothing;
-resume rolls all three tables back to the checkpoint anyway.
+clears both delta tables (manifest-only commits). Crash-safety: the
+engine pins all three tables in its checkpoint, and resume rolls each back
+to it, so a crash between the compaction writes leaves nothing behind
+(and replaying them would be harmless: re-applying tombstones of removed
+rows is a no-op, and events select no compacted row, whose added_in = the
+compaction round ≥ every event_round).
 
 Reference analogue: the reference keeps its whole "frontier" as the config
 list re-read every cron run (reference: src/crawler.py:322-349); a
@@ -60,24 +61,17 @@ from .tables import SnapshotTable
 
 FRONTIER_COLS = [f.name for f in FRONTIER.fields]
 STORED_COLS = [f.name for f in FRONTIER_STORED.fields]
+# the broadcast-safety bound: at ~30 B/row 10^7 tombstones are ~300 MB, near
+# the practical broadcast ceiling. Above it the read path's anti-join
+# shuffles instead, and compaction fires at the next round end whatever
+# compact_every says (cadence follows tombstone mass, so a huge round budget
+# cannot push the broadcast past the driver limit)
+MAX_TOMBSTONE_ROWS = 10_000_000
 
 
 class DeltaFrontier:
-    def __init__(
-        self,
-        base_path: str,
-        compact_every: int = 8,
-        max_tombstone_rows: int = 10_000_000,
-    ):
-        """``max_tombstone_rows`` is the broadcast-safety bound: at ~30 B/row
-        10^7 tombstones are ~300 MB — near the practical broadcast ceiling.
-        Below it the read-path anti-join broadcasts the tombstones; above it
-        the read falls back to a shuffle anti-join AND compaction fires at
-        the NEXT round end regardless of ``compact_every`` (cadence derives
-        from tombstone mass, not a fixed round count — a huge round budget
-        can no longer push the broadcast past the driver limit).
-
-        The ``rows`` store is hive-partitioned by ``shard`` (as the seen
+    def __init__(self, base_path: str, compact_every: int = 8):
+        """The ``rows`` store is hive-partitioned by ``shard`` (as the seen
         set is), so shard-filtered reads — the engine's per-round
         pending-dedupe anti-join prunes to the link batch's hit shards —
         are FILE-LEVEL prunes instead of full-frontier scans (the last
@@ -86,7 +80,6 @@ class DeltaFrontier:
         self.rm = SnapshotTable(f"{base_path}/tombstones", FRONTIER_RM)
         self.delay = SnapshotTable(f"{base_path}/delays", FRONTIER_DELAY)
         self.compact_every = compact_every
-        self.max_tombstone_rows = max_tombstone_rows
 
     @staticmethod
     def _clustered(df: DataFrame) -> DataFrame:
@@ -129,7 +122,7 @@ class DeltaFrontier:
                 F.col("url").alias("__rm_url"),
                 "removed_in",
             )
-            if self.tombstone_rows() <= self.max_tombstone_rows:
+            if self.tombstone_rows() <= MAX_TOMBSTONE_ROWS:
                 rm = F.broadcast(rm)  # else a shuffle anti-join: same rows
             # ROUND-AWARE removal (r5 re-crawl): a tombstone only kills rows
             # inserted at or before it, so a URL re-enqueued by seen-set
@@ -159,12 +152,10 @@ class DeltaFrontier:
         return live.select(FRONTIER_COLS)
 
     # -- per-round deltas (each O(round size), not O(frontier size)) ---------
-    def remove(self, fetched: DataFrame, round_no: int, n_rows: int | None = None) -> int:
-        """Tombstone the round's fetched URLs. ``n_rows`` (the engine already
-        knows it) is recorded in the snapshot meta — it drives the
-        mass-based compaction trigger without a count action."""
-        if n_rows is None:
-            n_rows = fetched.count()
+    def remove(self, fetched: DataFrame, round_no: int, n_rows: int) -> int:
+        """Tombstone the round's ``n_rows`` fetched URLs. The count goes into
+        the snapshot meta: it drives the mass-based compaction trigger
+        without a count action."""
         return self.rm.append(
             fetched.select("url_hash", "url").withColumn("removed_in", F.lit(round_no)),
             meta={"round": round_no, "rows": int(n_rows)},
@@ -195,7 +186,7 @@ class DeltaFrontier:
         """Compact on the round cadence OR once tombstone mass (plus
         ``pending_rows`` about to be added) exceeds the broadcast-safe bound."""
         by_cadence = self.compact_every > 0 and (round_no + 1) % self.compact_every == 0
-        return by_cadence or self.tombstone_rows() + pending_rows > self.max_tombstone_rows
+        return by_cadence or self.tombstone_rows() + pending_rows > MAX_TOMBSTONE_ROWS
 
     def compact(self, spark: SparkSession, round_no: int, rows: DataFrame | None = None) -> None:
         """Fold deltas into a fresh base; clear the delta tables. ``rows``
@@ -210,27 +201,6 @@ class DeltaFrontier:
         self.rm.clear(meta={"compact": round_no})
         self.delay.clear(meta={"compact": round_no})
 
-    # -- checkpoint surface ---------------------------------------------------
-    def state(self) -> dict:
-        return {
-            "rows": self.rows.current_snapshot,
-            "rm": self.rm.current_snapshot,
-            "delay": self.delay.current_snapshot,
-        }
-
-    def rollback_to(self, state: dict) -> None:
-        self.rows.rollback_to(state["rows"])
-        self.rm.rollback_to(state["rm"])
-        self.delay.rollback_to(state["delay"])
-
-    def expire_history(self) -> None:
-        """Drop snapshots made unreachable by the last overwrite of each
-        table (bootstrap/compaction); appends since then stay — disk usage
-        between compactions is O(compact_every × round size)."""
-        for t in (self.rows, self.rm, self.delay):
-            if t.current_snapshot is not None:
-                t.expire_before(t.current_snapshot)
-
     def version(self) -> str:
-        s = self.state()
-        return f"rows@{s['rows']}+rm@{s['rm']}+delay@{s['delay']}"
+        ids = (t.current_snapshot for t in (self.rows, self.rm, self.delay))
+        return "rows@{}+rm@{}+delay@{}".format(*ids)

@@ -6,13 +6,18 @@ minimal table layer with the same contract the north rule needs:
 - **atomic append / overwrite**: data files are written to a fresh
   ``snap-NNNNN`` directory first; the manifest (``_snapshots.json``) is then
   swapped atomically and durably. Readers only ever see committed
-  snapshots. A ``clear`` is a manifest-only overwrite.
+  snapshots. A ``clear`` is a manifest-only overwrite. A small pandas
+  frame is written with pyarrow, no Spark job.
 - **declared schema**: writes conform to it and reads pin it (no
   schema-inference job).
 - **time travel**: ``read(spark, snapshot_id=k)`` reconstructs the table as
   of snapshot k — the checkpoint/resume path replays from recorded ids.
-- **lineage**: each snapshot records its mode, row estimate and caller
-  metadata (round number, shard, etc.).
+- **rollback**: ``rollback_to(k)`` commits the manifest cut at k, then
+  deletes every ``snap-NNNNN`` dir numbered above k, listed or not — a
+  crash between a snapshot's data write and its commit leaves an
+  unlisted dir whose id the next write would reuse.
+- **lineage**: each snapshot records its mode, whether it holds data
+  files, and caller metadata (round number, row count, etc.).
 
 Swappable for real Iceberg (``MERGE INTO`` / snapshot ids) where the jar
 exists; the engine only touches this narrow surface.
@@ -210,14 +215,14 @@ class SnapshotTable:
 
         Resume-from-checkpoint calls this to discard writes from a round
         that crashed after some table writes but before the checkpoint
-        commit — the atomicity story for the round loop.
+        commit — the atomicity story for the round loop. Dirs above the
+        kept id go after the commit, listed or not (see the module doc).
         """
-        snaps = self._load()
-        keep = [s for s in snaps if snapshot_id is not None and s["id"] <= snapshot_id]
-        for s in snaps:
-            if snapshot_id is None or s["id"] > snapshot_id:
-                shutil.rmtree(os.path.join(self.path, s["dir"]), ignore_errors=True)
-        self._commit(keep)
+        floor = -1 if snapshot_id is None else snapshot_id
+        self._commit([s for s in self._load() if s["id"] <= floor])
+        for d in os.listdir(self.path):
+            if d.startswith("snap-") and int(d[5:]) > floor:
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def expire_before(self, snapshot_id: int) -> None:
         """Drop snapshots (and data dirs) no longer reachable — keeps the
@@ -229,6 +234,8 @@ class SnapshotTable:
         for i, s in enumerate(snaps):
             if s["mode"] == "overwrite" and s["id"] <= snapshot_id:
                 cut = i
+        if cut == 0:
+            return  # nothing precedes the last overwrite: no commit
         # commit before deleting: a crash in between leaves orphan dirs,
         # never a manifest that lists deleted ones
         self._commit(snaps[cut:])

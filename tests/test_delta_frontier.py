@@ -63,16 +63,17 @@ def test_round_writes_are_append_only_and_o_round_size(spark, tmp_path):
     assert eng.frontier.rm.read(spark).count() == eng.seen.seen.read(spark).count()
 
 
-def test_mass_based_compaction_fires_early(spark, tmp_path):
+def test_mass_based_compaction_fires_early(spark, tmp_path, monkeypatch):
     """With the cadence effectively off (compact_every=100) and a tiny
     broadcast-safety bound, every round's tombstone mass exceeds the bound
     so compaction must fire at each round's end — and while above the
     bound the read path's anti-join (shuffle fallback) must stay exact:
     the whole crawl matches the oracle."""
+    from jobscrawler_spark.plans import delta_frontier
+
+    monkeypatch.setattr(delta_frontier, "MAX_TOMBSTONE_ROWS", 20)
     seeds, pol, rob = _fixtures()
-    eng = CrawlEngine(
-        spark, str(tmp_path / "m"), compact_every=100, max_tombstone_rows=20, **ARGS
-    )
+    eng = CrawlEngine(spark, str(tmp_path / "m"), compact_every=100, **ARGS)
     eng.bootstrap(seeds, pol, rob)
     eng.run(3)
     ora = _oracle(seeds, pol, rob, 3)

@@ -34,7 +34,8 @@ def test_expire_history_bounds_disk_and_preserves_results(spark, tmp_path):
     # empty insert entirely — with max_depth=1 only round 0 discovers)
     assert len(b.frontier.rows.snapshots()) == 1
     assert len(a.frontier.rows.snapshots()) >= 2
-    # the bloom table is overwrite-per-round — bounded too
+    # the filter segments are appended per round and rewritten by the
+    # seen-set compaction (which rides the frontier's): bounded too
     assert len(b.seen.bloom.snapshots()) == 1
     assert len(a.seen.bloom.snapshots()) >= 2  # one per non-empty round
     a_dirs = len(os.listdir(a.frontier.rows.path))

@@ -134,6 +134,59 @@ def test_expire_of_a_round_that_fetched_nothing(spark, tmp_path):
     assert _live_seen(eng, spark) == sorted(ora.seen)
 
 
+def test_politeness_update_runs_no_job_and_steers_the_next_round(spark, tmp_path, monkeypatch):
+    """``update_politeness`` writes the dim with pyarrow, so it submits no
+    Spark job, and the next round selects under the new budgets as the
+    oracle does: a host whose budget drops to 0 keeps all its pending rows."""
+    seeds, pol, rob = gen_seeds(n=60, n_hosts=6, seed=3), _politeness(6, 3, 0), gen_robots(6, 3)
+    kw = dict(default_budget=3, max_depth=1, n_shards=4)
+    eng = CrawlEngine(spark, str(tmp_path / "dim"), fetch_partitions=4, **kw)
+    eng.bootstrap(seeds, pol, rob)
+    eng.run_round()
+    pol1 = pol.assign(max_fetches_per_round=[0, 1, 3, 3, 5, 3])
+    sc = spark.sparkContext
+    sc.setJobGroup("dim-update", "update_politeness")
+    try:
+        eng.update_politeness(pol1)
+        jobs = sc.statusTracker().getJobIdsForGroup("dim-update")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+
+    def pending(host):
+        return {r["url"] for r in eng.frontier.read(spark).filter(F.col("host") == host).collect()}
+
+    held = pending(pol1["host"][0])
+    assert held
+    eng.run_round()
+    assert held <= pending(pol1["host"][0])
+    ora = OracleCrawler(pol, rob, **kw)
+    ora.bootstrap(seeds)
+    ora.run(1)
+    ora.update_politeness(pol1)
+    ora.run(1)
+    log = [(r["round"], r["priority"], r["url"]) for r in eng.fetch_log().collect()]
+    assert log == [(d["round"], d["priority"], d["url"]) for d in ora.landed]
+    assert {r["url"] for r in eng.seen.all_urls(spark).collect()} == ora.seen
+
+    # an update that crashed before its commit: resume keeps the committed
+    # dim and drops the crashed write's dir, so the update can be redone
+    def crash(self, snapshots):
+        raise RuntimeError("crash before the commit")
+
+    pol2 = pol1.assign(max_fetches_per_round=2)
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "_commit", crash)
+        with pytest.raises(RuntimeError):
+            eng.update_politeness(pol2)
+    eng = CrawlEngine.resume(spark, eng.base, fetch_partitions=4, **kw)
+    assert sorted(map(tuple, eng._politeness().collect())) == sorted(pol1.itertuples(False, None))
+    eng.update_politeness(pol2)
+    assert sorted(map(tuple, eng._politeness().collect())) == sorted(pol2.itertuples(False, None))
+    assert len(eng.politeness_dim.snapshots()) == 1
+
+
 def test_round_writes_never_share_a_table(spark, tmp_path, monkeypatch):
     """A round's parallel phases never write one table at the same time (a
     snapshot write is load manifest -> write dir -> commit, unlocked: two

@@ -42,6 +42,44 @@ def test_rollback(spark, tmp_path):
     assert t.read(spark).count() == 0
 
 
+def test_rollback_drops_the_dir_of_a_crashed_write(spark, tmp_path, monkeypatch):
+    """A write that crashed before its manifest commit leaves a snapshot
+    dir no manifest lists, under the id the next write takes. Rollback
+    deletes it, so the next pandas write (which refuses an existing dir)
+    commits."""
+    import os
+
+    import pandas as pd
+    import pytest
+
+    t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
+    s0 = t.append(pd.DataFrame({"k": [1], "v": ["a"]}))
+
+    def crash(self, snapshots):
+        raise RuntimeError("crash before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "_commit", crash)
+        with pytest.raises(RuntimeError):
+            t.append(pd.DataFrame({"k": [2], "v": ["b"]}))
+    assert t.current_snapshot == s0
+    t.rollback_to(s0)
+    assert t.append(pd.DataFrame({"k": [3], "v": ["c"]})) == s0 + 1
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [1, 3]
+    t.rollback_to(None)
+    assert t.snapshots() == [] and not [d for d in os.listdir(t.path) if d.startswith("snap-")]
+
+
+def test_expire_before_without_history_commits_nothing(spark, tmp_path, monkeypatch):
+    t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
+    t.overwrite(_df(spark, [(1, "a")]))
+    s1 = t.append(_df(spark, [(2, "b")]))
+    commits = []
+    monkeypatch.setattr(SnapshotTable, "_commit", lambda self, snaps: commits.append(snaps))
+    t.expire_before(s1)
+    assert commits == [] and len(t.snapshots()) == 2
+
+
 def test_expire_before(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
     t.overwrite(_df(spark, [(1, "a")]))
