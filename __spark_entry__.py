@@ -3227,15 +3227,21 @@ def q_text_profile(spark, sf):
 def q_text_repetition(spark, sf):
     """Gopher-style repetition signals: duplicate-line fraction, top bi-/
     tri-gram occupancy, and the composed reject flag — all map-side array
-    expressions (no shuffle for a per-document statistic)."""
+    expressions (no shuffle for a per-document statistic). The flag reads
+    the selected fractions, so each n-gram scan runs once per row."""
     d = _t(spark, sf, "documents")
     t = F.col("text")
-    return d.select(
+    fracs = d.select(
         "doc_id",
         T.dup_line_fraction(t).alias("dup_line_frac"),
         T.top_ngram_fraction(t, 2).alias("top_bigram_frac"),
         T.top_ngram_fraction(t, 3).alias("top_trigram_frac"),
-        T.repetition_flag(t).alias("rejected"),
+    )
+    return fracs.withColumn(
+        "rejected",
+        T.repetition_reject(
+            F.col("dup_line_frac"), F.col("top_bigram_frac"), F.col("top_trigram_frac")
+        ),
     )
 
 

@@ -33,11 +33,13 @@ Checkpointing: every table the engine persists is a SnapshotTable. The
 round state (frontier rows, tombstones and delays, images, metrics, seen
 set and filter, host edges) is named once, in ``self.tables``: a round
 commits its writes, then ``checkpoint.json`` records every table's snapshot
-id atomically, and (with ``expire_history``) each table drops the history
-its last overwrite made unreachable. Resume rolls every table back to the
-recorded ids and continues — a crash at any commit point mid-round is
-invisible. The politeness and robots dims are inputs, not round state:
-they are overwritten whole (one snapshot each) and resume keeps them.
+id (and the shard count and prefilter the seen set is stored by)
+atomically, then each table expires the history its last overwrite made
+unreachable: resume rolls every table back to the latest checkpoint's ids
+and continues, so nothing reads older history — a crash at any commit
+point mid-round is invisible. The politeness and robots dims are inputs,
+not round state: they are overwritten whole (one snapshot each) and
+resume keeps them.
 """
 
 from __future__ import annotations
@@ -118,7 +120,6 @@ class CrawlEngine:
         default_budget: int = 8,
         max_depth: int = 2,
         fetch_partitions: int | None = None,
-        expire_history: bool = False,
         compact_every: int = 8,
         prefilter: str = "bloom",  # or "cuckoo" (north_star's alternative)
         recrawl_after: int | None = None,
@@ -129,11 +130,7 @@ class CrawlEngine:
         self.n_shards = n_shards
         self.default_budget = default_budget
         self.max_depth = max_depth
-        # bounded-history mode: after each checkpoint, drop snapshots made
-        # unreachable by each table's latest overwrite (a long crawl would
-        # otherwise keep dead copies on disk). Resume only ever rolls back
-        # to the LATEST checkpoint, so expiring that history is safe.
-        self.expire_history = expire_history
+        self.prefilter = prefilter
         self.fetch_partitions = fetch_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
@@ -533,14 +530,15 @@ class CrawlEngine:
 
     def _commit_checkpoint(self) -> None:
         ids = {name: t.current_snapshot for name, t in self.tables.items()}
-        commit_json(
-            self._ckpt_path(),
-            {"next_round": self.next_round, "priority_mode": self.priority_mode, "tables": ids},
-        )
-        if self.expire_history:
-            for name, t in self.tables.items():
-                if ids[name] is not None:
-                    t.expire_before(ids[name])
+        commit_json(self._ckpt_path(), {
+            "next_round": self.next_round, "priority_mode": self.priority_mode,
+            "n_shards": self.n_shards, "prefilter": self.prefilter, "tables": ids,
+        })
+        # after the commit, so a crash before it still finds every snapshot
+        # the previous checkpoint names
+        for name, t in self.tables.items():
+            if ids[name] is not None:
+                t.expire_before(ids[name])
 
     @classmethod
     def resume(cls, spark: SparkSession, base_path: str, **kwargs) -> "CrawlEngine":
@@ -552,9 +550,12 @@ class CrawlEngine:
         # the dims were snapshot tables has no dim manifest, so its dims
         # would read as empty
         ids = state["tables"]
-        # the checkpoint remembers the priority mode, so resume callers
-        # don't have to repeat it (an explicit kwarg still wins)
-        kwargs.setdefault("priority_mode", state["priority_mode"])
+        # the checkpoint remembers the crawl's settings, so resume callers
+        # don't have to repeat them; a different one would misread the state
+        # (the seen set is stored by shard and prefilter backend)
+        for key in ("n_shards", "prefilter", "priority_mode"):
+            if kwargs.setdefault(key, state[key]) != state[key]:
+                raise ValueError(f"{key}={kwargs[key]!r}, the checkpoint's is {state[key]!r}")
         eng = cls(spark, base_path, **kwargs)
         for name, t in eng.tables.items():
             t.rollback_to(ids[name])  # None = drop all
@@ -761,7 +762,8 @@ class CrawlEngine:
         tstore = self._takedown_store()
         written.append((tstore, tstore.clear(meta={"stage": "cleared"})))
         for store, sid in written:
-            store.expire_before(sid)
+            if store is not self.images:  # the checkpoint expired it
+                store.expire_before(sid)
 
     def image_dedup_report(self, max_hamming: int = 7) -> DataFrame:
         """Post-crawl image dedup over the landed images table: phash

@@ -147,18 +147,17 @@ def top_ngram_fraction(text: Column, k: int = 2) -> Column:
     return F.when(n > 0, F.round(F.array_max(counts) / n, 6)).otherwise(F.lit(0.0))
 
 
-def repetition_flag(
-    text: Column,
-    max_dup_line: float = 0.30,
-    max_top_bigram: float = 0.18,
-    max_top_trigram: float = 0.16,
-) -> Column:
-    """True = document fails the repetition filter (thresholds follow the
-    published Gopher-rule magnitudes; tune per corpus)."""
-    return (
-        (dup_line_fraction(text) > max_dup_line)
-        | (top_ngram_fraction(text, 2) > max_top_bigram)
-        | (top_ngram_fraction(text, 3) > max_top_trigram)
+def repetition_reject(dup_line: Column, top_bigram: Column, top_trigram: Column) -> Column:
+    """True = a document with these repetition fractions fails the filter
+    (thresholds follow the published Gopher-rule magnitudes; tune per
+    corpus)."""
+    return (dup_line > 0.30) | (top_bigram > 0.18) | (top_trigram > 0.16)
+
+
+def repetition_flag(text: Column) -> Column:
+    """repetition_reject over ``text``'s fractions."""
+    return repetition_reject(
+        dup_line_fraction(text), top_ngram_fraction(text, 2), top_ngram_fraction(text, 3)
     )
 
 

@@ -360,11 +360,7 @@ class SeenSet:
         """
         seen_df, bloom_df = tables or (self.seen.read(spark), self.bloom.read(spark))
         if min_round_added is not None:
-            # a segment written before segments carried round_added (null)
-            # may hold live URLs: it stays
-            bloom_df = bloom_df.filter(
-                F.col("round_added").isNull() | (F.col("round_added") >= min_round_added)
-            )
+            bloom_df = bloom_df.filter(F.col("round_added") >= min_round_added)
         cand_cols = candidates.columns
         backend = self.backend  # local bind: the probe closure ships to executors
         out_schema = ", ".join(

@@ -12,10 +12,11 @@ minimal table layer with the same contract the north rule needs:
   schema-inference job).
 - **time travel**: ``read(spark, snapshot_id=k)`` reconstructs the table as
   of snapshot k — the checkpoint/resume path replays from recorded ids.
-- **rollback**: ``rollback_to(k)`` commits the manifest cut at k, then
-  deletes every ``snap-NNNNN`` dir numbered above k, listed or not — a
-  crash between a snapshot's data write and its commit leaves an
-  unlisted dir whose id the next write would reuse.
+- **rollback / expiry**: ``rollback_to`` and ``expire_before`` commit the
+  cut manifest, then delete every ``snap-NNNNN`` dir it does not list — so
+  the dirs a crash left unlisted (a write before its commit, a cut before
+  its deletes) go with the next cut. One writer per table: a dir being
+  written is unlisted until its commit.
 - **lineage**: each snapshot records its mode, whether it holds data
   files, and caller metadata (round number, row count, etc.).
 
@@ -215,14 +216,10 @@ class SnapshotTable:
 
         Resume-from-checkpoint calls this to discard writes from a round
         that crashed after some table writes but before the checkpoint
-        commit — the atomicity story for the round loop. Dirs above the
-        kept id go after the commit, listed or not (see the module doc).
+        commit — the atomicity story for the round loop.
         """
         floor = -1 if snapshot_id is None else snapshot_id
-        self._commit([s for s in self._load() if s["id"] <= floor])
-        for d in os.listdir(self.path):
-            if d.startswith("snap-") and int(d[5:]) > floor:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        self._cut([s for s in self._load() if s["id"] <= floor])
 
     def expire_before(self, snapshot_id: int) -> None:
         """Drop snapshots (and data dirs) no longer reachable — keeps the
@@ -236,11 +233,16 @@ class SnapshotTable:
                 cut = i
         if cut == 0:
             return  # nothing precedes the last overwrite: no commit
-        # commit before deleting: a crash in between leaves orphan dirs,
-        # never a manifest that lists deleted ones
-        self._commit(snaps[cut:])
-        for s in snaps[:cut]:
-            shutil.rmtree(os.path.join(self.path, s["dir"]), ignore_errors=True)
+        self._cut(snaps[cut:])
+
+    def _cut(self, kept: list[dict]) -> None:
+        """Commit ``kept``, then delete the dirs it does not list: a crash in
+        between leaves unlisted dirs, never a manifest listing deleted ones."""
+        self._commit(kept)
+        listed = {s["dir"] for s in kept}
+        for d in os.listdir(self.path):
+            if d.startswith("snap-") and d not in listed:
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
 
 def snapshot_diff(

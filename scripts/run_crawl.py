@@ -31,7 +31,10 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=2)
     ap.add_argument("--budget", type=int, default=64)
     ap.add_argument("--max-depth", type=int, default=1)
-    ap.add_argument("--n-shards", type=int, default=64)
+    ap.add_argument(
+        "--n-shards", type=int, default=None,
+        help="seen-set shards (default 64; a resumed crawl keeps its own)",
+    )
     ap.add_argument("--resume", action="store_true", help="resume from checkpoint in --base")
     args = ap.parse_args()
 
@@ -46,17 +49,14 @@ def main() -> None:
 
         spark = get_spark("run_crawl")
 
+    kw = dict(default_budget=args.budget, max_depth=args.max_depth)
+    if args.n_shards is not None:
+        kw["n_shards"] = args.n_shards
     if args.resume or os.path.exists(os.path.join(args.base, "checkpoint.json")):
-        eng = CrawlEngine.resume(
-            spark, args.base, n_shards=args.n_shards, default_budget=args.budget,
-            max_depth=args.max_depth,
-        )
+        eng = CrawlEngine.resume(spark, args.base, **kw)
         print(f"resumed at round {eng.next_round}", file=sys.stderr)
     else:
-        eng = CrawlEngine(
-            spark, args.base, n_shards=args.n_shards, default_budget=args.budget,
-            max_depth=args.max_depth,
-        )
+        eng = CrawlEngine(spark, args.base, **{"n_shards": 64, **kw})
         eng.bootstrap(
             gen_seeds_fast(args.seeds, args.hosts),
             gen_politeness(args.hosts),

@@ -3,20 +3,27 @@
 A test-side failpoint raises before the k-th manifest commit
 (``SnapshotTable._commit``) or checkpoint commit
 (``CrawlEngine._commit_checkpoint``) of one round, for k = 1, 2, ... until
-the round completes. After each crash the state dir is resumed and must
-read as the oracle's crawl before the round: fetch log ``(round, priority,
-url)``, live seen set and effective frontier. The resumed engine then
-reruns the round with the crash armed one commit later, so each rerun
-passes the commit its predecessor crashed at (and writes over whatever
-that crash left) before it crashes; the last rerun completes the round,
-the crawl is finished, and its end state must equal the oracle's. Chaining
-the reruns runs each crash point's round once, not twice: the crawl's
-rounds are Spark-latency bound, ~6-12 s each at this size.
+the round completes. After each crash the state dir is resumed, and each
+table's dir must hold exactly the snapshot dirs its manifest lists. A
+crash before the checkpoint must read as the oracle's crawl before the
+round: fetch log ``(round, priority, url)``, live seen set and effective
+frontier. The resumed engine then reruns the round with the crash armed
+one commit later, so each rerun passes the commit its predecessor crashed
+at (and writes over whatever that crash left) before it crashes. A crash
+after the checkpoint, before one of the history expiries that follow it,
+must read as the oracle's crawl after the round; the resumed engine then
+reruns the checkpoint commit and the expiries not yet done, again with
+the crash one commit later. The last rerun completes the round, the crawl
+is finished, and its end state must equal the oracle's. Chaining the
+reruns runs each crash point's round once, not twice: the crawl's rounds
+are Spark-latency bound, ~6-12 s each at this size.
 
 Swept: an append round with re-enqueued rows (round 2) and a compaction
 round (round 3) of the tiny re-crawl crawl of ``test_round_jobs``, and a
 round of a pagerank crawl, whose checkpoint also pins the host-edge table.
 """
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,6 +68,17 @@ def _engine_state(spark, eng: CrawlEngine, kwargs: dict, rounds: int):
     return log, sorted(r["url"] for r in seen.collect()), sorted(map(tuple, frontier))
 
 
+def assert_only_listed_dirs(eng: CrawlEngine) -> None:
+    """Every table's snapshot dirs on disk are listed in its manifest (a
+    listed one may have none: a manifest-only clear), and every listed
+    snapshot that holds data has its dir."""
+    for name, t in eng.tables.items():
+        on_disk = {d for d in os.listdir(t.path) if d.startswith("snap-")}
+        snaps = t.snapshots()
+        assert on_disk <= {s["dir"] for s in snaps}, name
+        assert {s["dir"] for s in snaps if s["has_data"]} <= on_disk, name
+
+
 @pytest.fixture
 def failpoint(monkeypatch):
     """``steps["k"] = k`` arms a crash before the k-th commit (0 = off)."""
@@ -94,20 +112,31 @@ def _sweep_round(spark, failpoint, eng: CrawlEngine, kwargs: dict) -> tuple[Craw
     points."""
     crash_round = eng.next_round
     before = _oracle_state(kwargs, crash_round)
-    k = 0
+    after = _oracle_state(kwargs, crash_round + 1)
+    k, armed, rerun = 0, 0, eng.run_round
     while True:
         k += 1
-        failpoint.update(n=0, k=k)
+        armed += 1
+        failpoint.update(n=0, k=armed)
         try:
-            eng.run_round()
+            rerun()
             return eng, k - 1
         except Crash:
             pass
         finally:
             failpoint["k"] = 0
         eng = CrawlEngine.resume(spark, eng.base, **kwargs)
-        assert eng.next_round == crash_round, k
-        assert _engine_state(spark, eng, kwargs, crash_round) == before, k
+        assert_only_listed_dirs(eng)
+        if eng.next_round == crash_round:
+            assert _engine_state(spark, eng, kwargs, crash_round) == before, k
+            rerun = eng.run_round
+        else:
+            # crashed in the expiry after the checkpoint: rerun the
+            # checkpoint commit. The expiries done before the crash commit
+            # nothing again, so one commit later is its third commit
+            assert eng.next_round == crash_round + 1, k
+            assert _engine_state(spark, eng, kwargs, crash_round + 1) == after, k
+            armed, rerun = 2, eng._commit_checkpoint
 
 
 def test_recrawl_rounds_resume_after_a_crash_at_any_commit(spark, tmp_path, failpoint):
@@ -115,12 +144,13 @@ def test_recrawl_rounds_resume_after_a_crash_at_any_commit(spark, tmp_path, fail
     compaction round (compact_every=2). Crash points: the metrics append,
     the images append, the seen-set and filter appends (round 3: their
     compaction overwrites), the tombstone append, the frontier-rows append
-    (round 3: the fold's overwrite and the two delta clears) and the
-    checkpoint."""
+    (round 3: the fold's overwrite and the two delta clears), the
+    checkpoint and (round 3) the expiry of each table the compaction
+    overwrote: frontier rows, tombstones, delays, seen set and filter."""
     eng = _crawl(spark, str(tmp_path / "crawl"), ARGS, 2)
     eng, append_points = _sweep_round(spark, failpoint, eng, ARGS)
     eng, compaction_points = _sweep_round(spark, failpoint, eng, ARGS)
-    assert (append_points, compaction_points) == (7, 9)
+    assert (append_points, compaction_points) == (7, 14)
     assert _engine_state(spark, eng, ARGS, 4) == _oracle_state(ARGS, 4)
 
 

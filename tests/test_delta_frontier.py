@@ -40,10 +40,10 @@ def test_compaction_preserves_crawl_and_frontier_state(spark, tmp_path):
     }
     want_frontier = {(u, e.not_before_round) for u, e in ora.frontier.items()}
     assert got_frontier == want_frontier
-    # two compactions happened: the rows table's history starts at an
-    # overwrite newer than bootstrap
-    modes = [s["mode"] for s in eng.frontier.rows.snapshots()]
-    assert modes.count("overwrite") >= 2  # bootstrap + >=1 compaction
+    # the live rows are the round-3 compaction's overwrite (the second
+    # compaction; the checkpoint expired everything before it)
+    snaps = eng.frontier.rows.snapshots()
+    assert snaps[0]["mode"] == "overwrite" and snaps[0]["meta"] == {"compact": 3}
 
 
 def test_round_writes_are_append_only_and_o_round_size(spark, tmp_path):
@@ -70,8 +70,17 @@ def test_mass_based_compaction_fires_early(spark, tmp_path, monkeypatch):
     bound the read path's anti-join (shuffle fallback) must stay exact:
     the whole crawl matches the oracle."""
     from jobscrawler_spark.plans import delta_frontier
+    from jobscrawler_spark.plans.delta_frontier import DeltaFrontier
 
     monkeypatch.setattr(delta_frontier, "MAX_TOMBSTONE_ROWS", 20)
+    compactions = []
+    compact = DeltaFrontier.compact
+
+    def spy(self, spark, round_no, rows=None):
+        compactions.append(round_no)
+        return compact(self, spark, round_no, rows)
+
+    monkeypatch.setattr(DeltaFrontier, "compact", spy)
     seeds, pol, rob = _fixtures()
     eng = CrawlEngine(spark, str(tmp_path / "m"), compact_every=100, **ARGS)
     eng.bootstrap(seeds, pol, rob)
@@ -85,10 +94,9 @@ def test_mass_based_compaction_fires_early(spark, tmp_path, monkeypatch):
         (r["url"], r["not_before_round"]) for r in eng.frontier.read(spark).collect()
     }
     assert got_frontier == {(u, e.not_before_round) for u, e in ora.frontier.items()}
-    # compaction fired well before the round-100 cadence: one overwrite of
-    # the rows table per round (mass trigger), tombstones folded away
-    overwrites = [s for s in eng.frontier.rows.snapshots() if s["mode"] == "overwrite"]
-    assert len(overwrites) >= 3  # bootstrap + a compaction per round
+    # compaction fired well before the round-100 cadence: once per round
+    # (mass trigger), tombstones folded away
+    assert compactions == [0, 1, 2]
     assert eng.frontier.tombstone_rows() == 0
 
 

@@ -156,3 +156,30 @@ def test_resume_equals_uninterrupted(spark, fixtures, tmp_path_factory):
     assert fa == fb
     shutil.rmtree(base_a, ignore_errors=True)
     shutil.rmtree(base_b, ignore_errors=True)
+
+
+def test_resume_keeps_the_crawls_shards_and_prefilter(spark, fixtures, tmp_path_factory):
+    """The seen set is stored by shard and in the prefilter backend's
+    format: resume takes both from the checkpoint when the caller omits
+    them (a 4-shard set probed as 16 shards reports seen URLs as unseen),
+    and refuses a different value."""
+    seeds, pol, rob = fixtures
+    base = str(tmp_path_factory.mktemp("settings"))
+    eng = CrawlEngine(
+        spark, base, n_shards=4, prefilter="cuckoo", default_budget=8, max_depth=2
+    )
+    eng.bootstrap(seeds, pol, rob)
+    eng.run(1)
+    for key, bad in (("n_shards", 16), ("prefilter", "bloom")):
+        with pytest.raises(ValueError, match=key):
+            CrawlEngine.resume(spark, base, **{key: bad})
+    eng2 = CrawlEngine.resume(spark, base, default_budget=8, max_depth=2)
+    assert (eng2.n_shards, eng2.prefilter) == (4, "cuckoo")
+    eng2.run(1)
+    o = OracleCrawler(pol, rob, default_budget=8, max_depth=2, n_shards=4)
+    o.bootstrap(seeds)
+    o.run(2)
+    got = [(r["round"], r["url"]) for r in eng2.fetch_log().select("round", "url").collect()]
+    assert got == [(d["round"], d["url"]) for d in o.landed]
+    assert {r["url"] for r in eng2.seen.all_urls(spark).collect()} == o.seen
+    shutil.rmtree(base, ignore_errors=True)

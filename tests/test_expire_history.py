@@ -1,53 +1,53 @@
-"""Bounded-history mode: snapshots unreachable after the latest overwrite
-(frontier compaction, bloom fold) are expired, results unchanged, resume
-still works."""
+"""History expiry at every checkpoint: each table keeps only the snapshots
+since its last overwrite (frontier compaction, filter fold), its dir holds
+exactly the snapshot dirs its manifest lists, and the crawl equals the
+oracle's, also across a resume."""
 
-import os
+from test_crash_sweep import assert_only_listed_dirs
 
 from jobscrawler_spark.engine import CrawlEngine
 from jobscrawler_spark.generators import gen_politeness, gen_robots, gen_seeds
+from jobscrawler_spark.oracle.simulator import OracleCrawler
+
+ARGS = dict(n_shards=4, max_depth=1, compact_every=2)
+
+
+def _fixtures():
+    return gen_seeds(n=200, n_hosts=8, seed=5), gen_politeness(8, 5), gen_robots(8, 5)
+
+
+def _oracle_state(rounds: int):
+    seeds, pol, rob = _fixtures()
+    o = OracleCrawler(pol, rob, default_budget=8, max_depth=1, n_shards=4)
+    o.bootstrap(seeds)
+    o.run(rounds)
+    return [(d["round"], d["url"]) for d in o.landed], o.seen
+
+
+def _engine_state(spark, eng: CrawlEngine):
+    log = [(r["round"], r["url"]) for r in eng.fetch_log().select("round", "url").collect()]
+    return log, {r["url"] for r in eng.seen.all_urls(spark).collect()}
 
 
 def test_expire_history_bounds_disk_and_preserves_results(spark, tmp_path):
-    seeds = gen_seeds(n=200, n_hosts=8, seed=5)
-    pol, rob = gen_politeness(8, 5), gen_robots(8, 5)
+    seeds, pol, rob = _fixtures()
+    base = str(tmp_path / "crawl")
+    eng = CrawlEngine(spark, base, **ARGS)
+    eng.bootstrap(seeds, pol, rob)
+    eng.run(3)
+    assert _engine_state(spark, eng) == _oracle_state(3)
 
-    a = CrawlEngine(spark, str(tmp_path / "a"), n_shards=4, max_depth=1)
-    a.bootstrap(seeds, pol, rob)
-    a.run(3)
-
-    b = CrawlEngine(
-        spark, str(tmp_path / "b"), n_shards=4, max_depth=1,
-        expire_history=True, compact_every=2,
-    )
-    b.bootstrap(seeds, pol, rob)
-    b.run(3)
-
-    # identical results
-    sa = {r["url"] for r in a.seen.all_urls(spark).collect()}
-    sb = {r["url"] for r in b.seen.all_urls(spark).collect()}
-    assert sa == sb
-
-    # bounded history: expiry keeps only snapshots since the last overwrite
-    # (the round-1 compaction); without it, bootstrap + one append per
-    # round WITH discovered links stay live (r4: link-less rounds skip the
-    # empty insert entirely — with max_depth=1 only round 0 discovers)
-    assert len(b.frontier.rows.snapshots()) == 1
-    assert len(a.frontier.rows.snapshots()) >= 2
-    # the filter segments are appended per round and rewritten by the
-    # seen-set compaction (which rides the frontier's): bounded too
-    assert len(b.seen.bloom.snapshots()) == 1
-    assert len(a.seen.bloom.snapshots()) >= 2  # one per non-empty round
-    a_dirs = len(os.listdir(a.frontier.rows.path))
-    b_dirs = len(os.listdir(b.frontier.rows.path))
-    assert b_dirs < a_dirs
+    # bounded history: only the snapshots since the last overwrite (the
+    # round-1 compaction) stay, for the rows and for the filter segments,
+    # which the seen-set compaction riding the frontier's rewrites
+    assert len(eng.frontier.rows.snapshots()) == 1
+    assert len(eng.seen.bloom.snapshots()) == 1
+    assert_only_listed_dirs(eng)
 
     # resume still works after expiry + compaction
-    b2 = CrawlEngine.resume(spark, str(tmp_path / "b"), n_shards=4, max_depth=1,
-                            expire_history=True, compact_every=2)
-    assert b2.next_round == 3
-    b2.run(1)
-    a.run(1)
-    sa2 = {r["url"] for r in a.seen.all_urls(spark).collect()}
-    sb2 = {r["url"] for r in b2.seen.all_urls(spark).collect()}
-    assert sa2 == sb2
+    eng2 = CrawlEngine.resume(spark, base, max_depth=1, compact_every=2)
+    assert eng2.next_round == 3
+    assert_only_listed_dirs(eng2)
+    eng2.run(1)
+    assert _engine_state(spark, eng2) == _oracle_state(4)
+    assert_only_listed_dirs(eng2)

@@ -70,6 +70,39 @@ def test_rollback_drops_the_dir_of_a_crashed_write(spark, tmp_path, monkeypatch)
     assert t.snapshots() == [] and not [d for d in os.listdir(t.path) if d.startswith("snap-")]
 
 
+def test_a_cut_deletes_the_dirs_an_interrupted_cut_left(spark, tmp_path, monkeypatch):
+    """Expiry commits its cut manifest, then deletes the dirs it no longer
+    lists. A crash in between leaves them on disk; the next cut, a
+    rollback or an expiry, deletes every dir its manifest does not list."""
+    import os
+    import shutil
+
+    import pandas as pd
+    import pytest
+
+    def snap_dirs(t):
+        return sorted(d for d in os.listdir(t.path) if d.startswith("snap-"))
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the deletes")
+
+    for cut in ("rollback_to", "expire_before"):
+        t = SnapshotTable(str(tmp_path / cut), SCHEMA)
+        t.overwrite(pd.DataFrame({"k": [1], "v": ["a"]}))
+        s1 = t.overwrite(pd.DataFrame({"k": [2], "v": ["b"]}))
+        with monkeypatch.context() as m:
+            m.setattr(shutil, "rmtree", crash)
+            with pytest.raises(RuntimeError):
+                t.expire_before(s1)
+        assert [s["id"] for s in t.snapshots()] == [s1]
+        assert snap_dirs(t) == ["snap-00000", "snap-00001"]  # one unlisted
+        if cut == "rollback_to":
+            t.rollback_to(s1)
+        else:
+            t.expire_before(t.overwrite(pd.DataFrame({"k": [3], "v": ["c"]})))
+        assert snap_dirs(t) == [s["dir"] for s in t.snapshots()]
+
+
 def test_expire_before_without_history_commits_nothing(spark, tmp_path, monkeypatch):
     t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
     t.overwrite(_df(spark, [(1, "a")]))
