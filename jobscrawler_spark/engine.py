@@ -256,10 +256,11 @@ class CrawlEngine:
         host graph — recomputed only when the edge table advanced
         (cached per snapshot id), localCheckpointed because the rank
         table is dimension-sized (hosts, not URLs) and re-joined by
-        every priority assignment until the next edge append."""
-        snap = self.host_edges.current_snapshot
-        if snap is None:
+        every priority assignment until the next edge append. None while
+        the graph holds no rows (manifest-only check, no Spark job)."""
+        if self.host_edges.is_empty():
             return None
+        snap = self.host_edges.current_snapshot
         if self._ranks_cache is not None and self._ranks_cache[0] == snap:
             return self._ranks_cache[1]
         from .operators.components import pagerank
@@ -267,9 +268,6 @@ class CrawlEngine:
         edges = self.host_edges.read(self.spark).select(
             F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
         )
-        if edges.isEmpty():
-            self._ranks_cache = (snap, None)
-            return None
         ranks = pagerank(edges, iters=PR_ITERS, scale=PR_SPAN).select(
             F.col("node").alias("host"), "rank"
         ).localCheckpoint()
@@ -590,13 +588,9 @@ class CrawlEngine:
         return SnapshotTable(f"{self.base}/takedowns")
 
     def _takedown_ids(self) -> DataFrame | None:
-        """Live takedown set, or None. Only APPEND snapshots count —
-        compact_takedowns clears the store with an empty overwrite
-        marker, and empty non-partitioned writes still carry one
-        schema-only parquet file (the ann_store._tombstone_ids rule)."""
+        """Live takedown set, or None when the store holds no rows."""
         store = self._takedown_store()
-        live = store._snaps_at(None)
-        if not any(s["mode"] == "append" and s.get("has_data") for s in live):
+        if store.is_empty():
             return None
         return store.read(self.spark).select("image_id").distinct()
 
@@ -713,7 +707,7 @@ class CrawlEngine:
             (SnapshotTable(f"{self.base}/phash_bands"), "image_id"),
             (SnapshotTable(f"{self.base}/dedup_labels"), "node"),
         ):
-            if not any(s.get("has_data") for s in store._snaps_at(None)):
+            if store.is_empty():
                 continue
             live = store.read(self.spark).join(
                 F.broadcast(dead.withColumnRenamed("image_id", key)),
@@ -813,8 +807,7 @@ class CrawlEngine:
             .select("image_id", "phash")
         )
         nb = phash_bands(new_imgs).localCheckpoint()
-        has_old = any(s.get("has_data") for s in store.snapshots())
-        ob = store.read(self.spark) if has_old else nb.limit(0)
+        ob = nb.limit(0) if store.is_empty() else store.read(self.spark)
         # taken-down images must stop matching immediately — their bands
         # stay in the store until compact_takedowns, so mask the read
         # (images_df already masks the new side)
@@ -877,8 +870,7 @@ class CrawlEngine:
                 F.col("image_id").alias("src"), F.col("image_id").alias("dst")
             )
         )
-        has_old = any(s.get("has_data") for s in lstore.snapshots())
-        if has_old:
+        if not lstore.is_empty():
             old_labels = lstore.read(self.spark)
             # drop taken-down nodes from the folded-forward state (their
             # star edges would otherwise resurrect them in the new label

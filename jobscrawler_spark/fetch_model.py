@@ -48,11 +48,6 @@ def url_digest(url: str) -> int:
     return spark_xxhash64_str(url) % _U64
 
 
-def digest_from_hash(url_hash: int) -> int:
-    """Signed Spark xxhash64 -> the unsigned digest the model is keyed on."""
-    return url_hash % _U64
-
-
 # -- digest-keyed model (the fetch stage's hot path takes these) -------------
 
 
@@ -122,11 +117,6 @@ def fetch_status(url: str) -> int:
     return status_from_digest(url_digest(url))
 
 
-def image_params(url: str) -> tuple[int, int, str]:
-    """(w, h, fmt) for the synthetic image behind a URL."""
-    return params_from_digest(url_digest(url))
-
-
 def caption_for(url: str) -> str:
     return caption_from_digest(url_digest(url), url)
 
@@ -150,12 +140,6 @@ def expected_pixels(url: str) -> np.ndarray:
     d = url_digest(url)
     w, h, _ = params_from_digest(d)
     return codecs.synth_pixels(d, w, h)
-
-
-def link_priority(url: str) -> float:
-    """Deterministic frontier priority for a discovered link (lower = sooner).
-    Matches the engine's F.pmod(url_hash, 1e6) on the SIGNED hash."""
-    return (spark_xxhash64_str(url) % 1_000_000) / 1_000_000.0
 
 
 def user_agent_idx(url: str, round_no: int) -> int:

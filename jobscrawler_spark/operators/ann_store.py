@@ -40,7 +40,7 @@ from .similarity import _dot, ivf_assign, ivf_centroids, kmeans_codebook
 class IvfIndexStore:
     def __init__(self, base_path: str):
         self.centroids = SnapshotTable(f"{base_path}/centroids")
-        self.assignments = SnapshotTable(f"{base_path}/assignments")
+        self.assignments = SnapshotTable(f"{base_path}/assignments", partition_by="centroid_id")
         self.tombstones = SnapshotTable(f"{base_path}/tombstones")
         # collected codebook rows keyed by centroid snapshot id: the
         # codebook is frozen between build()s, so append/search reuse one
@@ -59,14 +59,8 @@ class IvfIndexStore:
         return self._cent_cache[1]
 
     def _tombstone_ids(self, spark: SparkSession) -> DataFrame | None:
-        # live chain only (since the last overwrite) — after compact()
-        # clears the set, superseded append snapshots must not resurrect
-        # deletions (the incremental_image_dedup_report _snaps_at rule).
-        # Only APPEND snapshots count as evidence: the cleared-overwrite
-        # marker compact() commits is an empty non-partitioned write, and
-        # those still carry one schema-only parquet file (has_data=True).
-        live = self.tombstones._snaps_at(None)
-        if not any(s["mode"] == "append" and s.get("has_data") for s in live):
+        """The live tombstoned ids, or None when the set holds no rows."""
+        if self.tombstones.is_empty():
             return None
         return self.tombstones.read(spark).select("vec_id").distinct()
 
@@ -99,13 +93,9 @@ class IvfIndexStore:
         live = self.assignments.read(spark).join(
             F.broadcast(tomb), "vec_id", "left_anti"
         ).localCheckpoint()
-        sid = self.assignments.overwrite(
-            live, meta={"stage": "compact"}, partition_by="centroid_id"
-        )
+        sid = self.assignments.overwrite(live, meta={"stage": "compact"})
         self.assignments.expire_before(sid)
-        tsid = self.tombstones.overwrite(
-            tomb.limit(0), meta={"stage": "cleared"}
-        )
+        tsid = self.tombstones.clear(meta={"stage": "cleared"})
         self.tombstones.expire_before(tsid)
 
     def build(
@@ -132,9 +122,7 @@ class IvfIndexStore:
         self._cent_cache = (self.centroids.current_snapshot, rows)
         assigned = ivf_assign(embeddings, cents, 1, vec_col, id_col, cent_rows=rows)
         self.assignments.overwrite(
-            assigned.withColumnRenamed(id_col, "vec_id"),
-            meta={"stage": "build"},
-            partition_by="centroid_id",
+            assigned.withColumnRenamed(id_col, "vec_id"), meta={"stage": "build"}
         )
 
     def append(
@@ -152,9 +140,7 @@ class IvfIndexStore:
             cent_rows=self._cent_rows(spark),
         )
         self.assignments.append(
-            assigned.withColumnRenamed(id_col, "vec_id"),
-            meta={"stage": "append"},
-            partition_by="centroid_id",
+            assigned.withColumnRenamed(id_col, "vec_id"), meta={"stage": "append"}
         )
 
     def search(

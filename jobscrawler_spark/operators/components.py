@@ -277,6 +277,8 @@ def pagerank(
         .localCheckpoint()
     )
     n = nodes.count()
+    if n == 0:  # no edges: no ranks (and no scale // n)
+        return nodes.select("node", F.lit(0).cast("long").alias("rank"))
     outdeg = e.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint()
     init = scale // n
     base = (init * (100 - damping_pct)) // 100

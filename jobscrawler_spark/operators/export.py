@@ -91,6 +91,10 @@ def _pfx(shard: str) -> str:
     return hashlib.md5(shard.encode()).hexdigest()[:N_PREFIX_CHARS]
 
 
+def _shards(base_path: str) -> SnapshotTable:
+    return SnapshotTable(os.path.join(base_path, "shards"), partition_by="shard_pfx")
+
+
 def export_training_shards(
     docs: DataFrame,
     base_path: str,
@@ -113,11 +117,11 @@ def export_training_shards(
             id_col,
         )
         .withColumn("shard_pfx", F.substring(F.md5("shard"), 1, N_PREFIX_CHARS))
-        .repartition("shard_pfx")
-        .sortWithinPartitions("shard", id_col)
     )
-    data = SnapshotTable(os.path.join(base_path, "shards"))
-    sid = data.overwrite(payload, meta={"budget": budget}, partition_by="shard_pfx")
+    data = _shards(base_path)
+    sid = data.overwrite(
+        data.clustered(payload).sortWithinPartitions("shard", id_col), meta={"budget": budget}
+    )
     manifest = SnapshotTable(os.path.join(base_path, "manifest"))
     mid = manifest.overwrite(
         shard_manifest(assigned, id_col, group_col),
@@ -130,7 +134,6 @@ def read_shard(spark: SparkSession, base_path: str, shard: str) -> DataFrame:
     """One shard's rows, pruned to its single shard_pfx hive dir (the
     prefix predicate is computed driver-side; the shard equality then
     row-group-skips within the dir)."""
-    data = SnapshotTable(os.path.join(base_path, "shards"))
-    return data.read(spark).filter(
+    return _shards(base_path).read(spark).filter(
         (F.col("shard_pfx") == _pfx(shard)) & (F.col("shard") == shard)
     )

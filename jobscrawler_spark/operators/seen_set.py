@@ -152,7 +152,7 @@ def _built_row(backend, shard: int, hashes: np.ndarray, round_added: int) -> pd.
         bits = backend.build(hashes, size)
     return pd.DataFrame(
         [{"shard": shard, "bits": bits, "n_items": len(hashes), "n_bits": size,
-          "n_hashes": N_HASHES, "round_added": round_added}]
+          "round_added": round_added}]
     )
 
 
@@ -172,7 +172,8 @@ def _shard_summary(batches):
 class SeenSet:
     def __init__(self, base_path: str, n_shards: int = 16, prefilter: str = "bloom"):
         self.n_shards = n_shards
-        self.seen = SnapshotTable(f"{base_path}/seen_set", SEEN_SET)
+        # hive-partitioned: the probe prunes to hit shards
+        self.seen = SnapshotTable(f"{base_path}/seen_set", SEEN_SET, partition_by="shard")
         self.bloom = SnapshotTable(f"{base_path}/seen_bloom", SEEN_BLOOM)
         self.backend = PREFILTERS[prefilter]
 
@@ -203,8 +204,7 @@ class SeenSet:
         if compact:
             self.compact(spark, min_round_added, rows, {round_no: n_new})
             return
-        # hive-partitioned: the probe prunes to hit shards
-        self.seen.append(self._clustered(rows), {"round": round_no, "rows": n_new}, "shard")
+        self.seen.append(self.seen.clustered(rows), {"round": round_no, "rows": n_new})
         self.bloom.append(self._segments(rows), {"round": round_no})
 
     def _segments(self, rows: DataFrame) -> DataFrame:
@@ -316,17 +316,10 @@ class SeenSet:
         if min_round_added is not None:
             rows = rows.filter(F.col("round_added") >= min_round_added)
         self.seen.overwrite(
-            self._clustered(rows).sortWithinPartitions("round_added"),
+            self.seen.clustered(rows).sortWithinPartitions("round_added"),
             {"compact": True, "round_rows": kept},
-            "shard",
         )
         self.bloom.overwrite(self._segments(rows), {"compact": True})
-
-    @staticmethod
-    def _clustered(rows: DataFrame) -> DataFrame:
-        """Cluster rows by shard before a hive-partitioned write: each task
-        then writes whole shards, not a file per task per shard."""
-        return rows.repartition(F.col("shard"))
 
     # -- probe ---------------------------------------------------------------
     def filter_unseen(

@@ -76,17 +76,10 @@ class DeltaFrontier:
         pending-dedupe anti-join prunes to the link batch's hit shards —
         are FILE-LEVEL prunes instead of full-frontier scans (the last
         O(frontier)-per-round read path at 10^10 rows)."""
-        self.rows = SnapshotTable(f"{base_path}/rows", FRONTIER_STORED)
+        self.rows = SnapshotTable(f"{base_path}/rows", FRONTIER_STORED, partition_by="shard")
         self.rm = SnapshotTable(f"{base_path}/tombstones", FRONTIER_RM)
         self.delay = SnapshotTable(f"{base_path}/delays", FRONTIER_DELAY)
         self.compact_every = compact_every
-
-    @staticmethod
-    def _clustered(df: DataFrame) -> DataFrame:
-        """Cluster rows by shard before a hive-partitioned write so each
-        task writes whole shards instead of spraying a file per shard dir
-        (the seen set's measured ~0.4 s/round layout, SCALING.md)."""
-        return df.repartition(F.col("shard"))
 
     def tombstone_rows(self) -> int:
         """Tombstone rows since the last compaction, from snapshot metadata
@@ -98,9 +91,8 @@ class DeltaFrontier:
     def bootstrap(self, spark: SparkSession, frontier_rows: DataFrame) -> None:
         """frontier_rows: FRONTIER-shaped seeds; deltas start empty."""
         self.rows.overwrite(
-            self._clustered(frontier_rows.withColumn("added_in", F.lit(-1))),
+            self.rows.clustered(frontier_rows.withColumn("added_in", F.lit(-1))),
             meta={"stage": "bootstrap"},
-            partition_by="shard",
         )
         self.rm.clear(meta={"stage": "bootstrap"})
         self.delay.clear(meta={"stage": "bootstrap"})
@@ -175,11 +167,7 @@ class DeltaFrontier:
         """Append round ``round_no``'s FRONTIER_STORED rows. The caller
         stamps ``added_in``: a row is exempt from the pushback events of
         rounds up to its added_in."""
-        return self.rows.append(
-            self._clustered(rows),
-            meta={"round": round_no},
-            partition_by="shard",
-        )
+        return self.rows.append(self.rows.clustered(rows), meta={"round": round_no})
 
     # -- compaction ----------------------------------------------------------
     def compaction_due(self, round_no: int, pending_rows: int = 0) -> bool:
@@ -194,9 +182,8 @@ class DeltaFrontier:
         read path instead of being appended first."""
         eff = self.read(spark, rows)
         self.rows.overwrite(
-            self._clustered(eff.withColumn("added_in", F.lit(round_no))),
+            self.rows.clustered(eff.withColumn("added_in", F.lit(round_no))),
             meta={"compact": round_no},
-            partition_by="shard",
         )
         self.rm.clear(meta={"compact": round_no})
         self.delay.clear(meta={"compact": round_no})

@@ -124,7 +124,6 @@ SEEN_BLOOM = StructType(
         StructField("bits", BinaryType(), True),
         StructField("n_items", LongType(), True),
         StructField("n_bits", IntegerType(), True),
-        StructField("n_hashes", IntegerType(), True),
         # the newest round whose URLs the segment holds
         StructField("round_added", IntegerType(), True),
     ]

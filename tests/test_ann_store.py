@@ -129,6 +129,28 @@ def test_delete_masks_immediately_and_compact_is_equivalent(spark, embs, queries
     assert _res(store.search(spark, queries, k=5, nprobe=2)) == masked
 
 
+def test_compact_clears_tombstones_without_a_job(spark, embs, tmp_path):
+    """compact() clears the tombstone set with a manifest-only commit: the
+    clear submits no Spark job, and the set then reads as empty."""
+    from test_tables import _jobs_during
+
+    store = IvfIndexStore(str(tmp_path / "ivf_clear"))
+    store.build(spark, embs, n_centroids=4)
+    store.delete(spark, [1, 2])
+    tomb_writes = []
+    write = store.tombstones._write
+
+    def counted_write(*args):
+        sid, jobs = _jobs_during(spark, lambda: write(*args))
+        tomb_writes.append(jobs)
+        return sid
+
+    store.tombstones._write = counted_write
+    store.compact(spark)
+    assert tomb_writes == [[]]
+    assert store.tombstones.is_empty() and store._tombstone_ids(spark) is None
+
+
 def test_delete_then_append_keeps_serving_consistent(spark, embs, queries, tmp_path):
     """Interleaving takedowns with ingest: delete, then append a new
     batch — the new rows serve, the dead ones stay dead."""

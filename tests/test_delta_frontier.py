@@ -169,6 +169,7 @@ def test_frontier_store_shard_partitioned_and_pruned(spark, tmp_path):
     file-level pruning, not a full-frontier scan."""
     import contextlib
     import io
+    import os
 
     from pyspark.sql import functions as F
 
@@ -177,8 +178,11 @@ def test_frontier_store_shard_partitioned_and_pruned(spark, tmp_path):
     eng.bootstrap(seeds, pol, rob)
     eng.run(2)  # bootstrap overwrite + per-round inserts, all partitioned
 
-    snaps = eng.frontier.rows.snapshots()
-    assert all(s.get("partition_by") == "shard" for s in snaps), snaps
+    rows = eng.frontier.rows
+    assert rows.partition_by == "shard"
+    for s in rows.snapshots():  # each snapshot holding rows is laid out in shard dirs
+        data = [d for d in os.listdir(os.path.join(rows.path, s["dir"])) if d[0] not in "._"]
+        assert not s["has_data"] or data and all(d.startswith("shard=") for d in data), (s, data)
 
     pruned = eng.frontier.read(spark).filter(F.col("shard").isin([1, 2]))
     buf = io.StringIO()

@@ -48,6 +48,26 @@ def oracle(fixtures):
     return o
 
 
+def test_empty_host_graph_is_known_without_a_job(spark, tmp_path):
+    """A round's rank lookup finds out from the manifest that the host
+    graph holds no rows (an empty edge append leaves a 0-row file): no
+    Spark job, no ranks."""
+    from test_tables import _jobs_during
+
+    from jobscrawler_spark.schemas import HOST_EDGES
+
+    eng = CrawlEngine(spark, str(tmp_path / "pr_empty"), n_shards=4, priority_mode="pagerank")
+    eng.host_edges.append(spark.createDataFrame([], HOST_EDGES), {"round": 0})
+    ranks, jobs = _jobs_during(spark, eng._host_ranks)
+    assert ranks is None and jobs == []
+    # a state dir written when has_data meant "holds a file" marks that
+    # snapshot has_data true: it reads as 0 rows, which rank no host
+    snaps = eng.host_edges.snapshots()
+    snaps[-1]["has_data"] = True
+    eng.host_edges._commit(snaps)
+    assert eng._host_ranks().count() == 0
+
+
 def test_pagerank_fetch_order_exact(spark, engine, oracle):
     eng_order = [
         (r["round"], r["url"])

@@ -201,7 +201,7 @@ def test_round_writes_never_share_a_table(spark, tmp_path, monkeypatch):
     lock, active, overlaps = threading.Lock(), {}, []
     rows_writes = collections.Counter()  # (round, mode) of frontier-rows writes
 
-    def tracked_write(self, df, mode, meta, partition_by=None):
+    def tracked_write(self, df, mode, meta):
         if self.path == eng.frontier.rows.path:
             rows_writes[eng.next_round, mode] += 1
         with lock:
@@ -209,7 +209,7 @@ def test_round_writes_never_share_a_table(spark, tmp_path, monkeypatch):
             if active[self.path] > 1:
                 overlaps.append(self.path)
         try:
-            return write(self, df, mode, meta, partition_by)
+            return write(self, df, mode, meta)
         finally:
             with lock:
                 active[self.path] -= 1

@@ -124,11 +124,13 @@ def test_expire_before(spark, tmp_path):
 
 
 def test_empty_partitioned_snapshot_does_not_brick_reads(spark, tmp_path):
-    """R4 regression (review-found): an EMPTY DataFrame appended with
-    partition_by writes only _SUCCESS; the per-snapshot union read of a
+    """R4 regression (review-found): an EMPTY DataFrame appended to a
+    partitioned table writes only _SUCCESS; the per-snapshot union read of a
     partitioned table must skip such fileless dirs instead of raising
     UNABLE_TO_INFER_SCHEMA. A crawl legitimately commits one when a
-    round's discovered links were all already pending."""
+    round's discovered links were all already pending. A flat table's
+    empty write leaves one 0-row file: it too commits has_data false, so
+    is_empty() is exact either way."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -137,12 +139,10 @@ def test_empty_partitioned_snapshot_does_not_brick_reads(spark, tmp_path):
     schema = StructType(
         [StructField("k", StringType()), StructField("shard", IntegerType())]
     )
-    t = SnapshotTable(str(tmp_path / "t"), schema)
-    t.overwrite(
-        spark.createDataFrame([("a", 1), ("b", 2)], schema), partition_by="shard"
-    )
-    t.append(spark.createDataFrame([], schema), partition_by="shard")  # fileless
-    t.append(spark.createDataFrame([("c", 1)], schema), partition_by="shard")
+    t = SnapshotTable(str(tmp_path / "t"), schema, partition_by="shard")
+    t.overwrite(spark.createDataFrame([("a", 1), ("b", 2)], schema))
+    t.append(spark.createDataFrame([], schema))  # fileless
+    t.append(spark.createDataFrame([("c", 1)], schema))
 
     rows = {(r["k"], r["shard"]) for r in t.read(spark).collect()}
     assert rows == {("a", 1), ("b", 2), ("c", 1)}
@@ -152,9 +152,18 @@ def test_empty_partitioned_snapshot_does_not_brick_reads(spark, tmp_path):
         "c",
     }
     # an all-empty table still reads as the schema'd empty frame
-    t2 = SnapshotTable(str(tmp_path / "t2"), schema)
-    t2.overwrite(spark.createDataFrame([], schema), partition_by="shard")
-    assert t2.read(spark).count() == 0
+    t2 = SnapshotTable(str(tmp_path / "t2"), schema, partition_by="shard")
+    t2.overwrite(spark.createDataFrame([], schema))
+    assert t2.is_empty() and t2.read(spark).count() == 0
+
+    # the flat case: the 0-row file does not count as rows
+    t3 = SnapshotTable(str(tmp_path / "t3"), schema)
+    t3.append(spark.createDataFrame([], schema))
+    assert t3.snapshots()[-1]["has_data"] is False and t3.is_empty()
+    empty, jobs = _jobs_during(spark, lambda: t3.read(spark))
+    assert jobs == [] and empty.schema == schema and empty.count() == 0
+    t3.append(spark.createDataFrame([("d", 3)], schema))
+    assert not t3.is_empty() and [r["k"] for r in t3.read(spark).collect()] == ["d"]
 
 
 def test_frontier_empty_insert_then_read(spark, tmp_path):
@@ -195,53 +204,6 @@ def test_frontier_empty_insert_then_read(spark, tmp_path):
     assert f.read(spark).count() == 30
 
 
-# -------------------------------------------------------- snapshot diff
-
-
-def test_snapshot_diff_insert_delete_update(spark, tmp_path):
-    from jobscrawler_spark.plans.tables import SnapshotTable, snapshot_diff
-
-    t = SnapshotTable(str(tmp_path / "cdc"))
-    s0 = t.append(spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k int, v string"))
-    s1 = t.append(spark.createDataFrame([(4, "d")], "k int, v string"))
-    # compaction overwrite: 2 deleted, 3 updated, 1/4 unchanged
-    s2 = t.overwrite(spark.createDataFrame(
-        [(1, "a"), (3, "C"), (4, "d"), (5, "e")], "k int, v string"))
-
-    def diff(a, b, cmp=("v",)):
-        return {
-            (r["k"], r["change"])
-            for r in snapshot_diff(t, spark, a, b, ["k"], list(cmp)).collect()
-        }
-
-    assert diff(s0, s1) == {(4, "insert")}
-    assert diff(s1, s2) == {(2, "delete"), (3, "update"), (5, "insert")}
-    assert diff(s0, s2) == {(2, "delete"), (3, "update"), (4, "insert"), (5, "insert")}
-    # reversed direction mirrors
-    assert diff(s2, s0) == {(2, "insert"), (3, "update"), (4, "delete"), (5, "delete")}
-    # identical snapshots -> empty diff
-    assert diff(s2, s2) == set()
-    # key-presence-only mode never reports updates
-    assert {
-        (r["k"], r["change"])
-        for r in snapshot_diff(t, spark, s1, s2, ["k"]).collect()
-    } == {(2, "delete"), (5, "insert")}
-
-
-def test_snapshot_diff_plan_is_single_keyed_join(spark, tmp_path):
-    from jobscrawler_spark.plans.tables import SnapshotTable, snapshot_diff
-
-    t = SnapshotTable(str(tmp_path / "cdcp"))
-    a = t.append(spark.createDataFrame([(i, str(i)) for i in range(50)], "k int, v string"))
-    b = t.append(spark.createDataFrame([(99, "x")], "k int, v string"))
-    p = (
-        snapshot_diff(t, spark, a, b, ["k"], ["v"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-
-
 # ------------------------------------------- declared schema + manifest
 
 
@@ -268,13 +230,11 @@ def test_partitioned_read_runs_no_job_and_keeps_types(spark, tmp_path):
     schema = StructType(
         [StructField("k", StringType()), StructField("v", LongType()), StructField("shard", IntegerType())]
     )
-    t = SnapshotTable(str(tmp_path / "t"), schema)
-    t.overwrite(spark.createDataFrame([("a", 1, 1), ("b", 2, 2)], schema), partition_by="shard")
-    t.append(spark.createDataFrame([], schema), partition_by="shard")
+    t = SnapshotTable(str(tmp_path / "t"), schema, partition_by="shard")
+    t.overwrite(spark.createDataFrame([("a", 1, 1), ("b", 2, 2)], schema))
+    t.append(spark.createDataFrame([], schema))
     # written with wider/narrower physical types: conformed to the declaration
-    t.append(
-        spark.createDataFrame([("c", 3, 1)], "k string, v int, shard long"), partition_by="shard"
-    )
+    t.append(spark.createDataFrame([("c", 3, 1)], "k string, v int, shard long"))
 
     df, jobs = _jobs_during(spark, lambda: t.read(spark))
     assert jobs == []
