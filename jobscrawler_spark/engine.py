@@ -404,8 +404,9 @@ class CrawlEngine:
         def _links_job() -> DataFrame:
             # discovered outlinks -> new frontier rows, CONCURRENTLY with the
             # seen update. The round-start seen set is exact: expired rows are
-            # skipped by round_added, the fetch batch is blocked, and no other
-            # URL's membership changes within the round
+            # skipped by round_added, the fetch batch is among the pending rows
+            # it was selected from, and no other URL's membership changes
+            # within the round
             links = (
                 fetched.filter(F.col("status") == 200)
                 .select(
@@ -432,13 +433,13 @@ class CrawlEngine:
                 self.host_edges.append(new_edges, {"round": r})
             links = self._link_priority(links.drop("__src_host"))
             # one probe dedupes within the batch (min depth), against the
-            # seen set, and against the pending frontier + fetch batch
+            # seen set, and against the pending frontier (fetch batch included)
             fresh = self.seen.filter_unseen(
                 self.spark,
                 links,
                 dedupe_min_depth=True,
                 min_round_added=self._seen_min_round(),
-                blocked=fetched_keys.unionByName(pending),
+                blocked=pending,
                 tables=seen_tables,
             )
             new_rows = fresh.withColumns(
@@ -743,7 +744,7 @@ class CrawlEngine:
             live = live.localCheckpoint()
             # carry the watermark forward: clearing it would make the next
             # incremental call re-ingest every round
-            metas = [s["meta"] for s in store._snaps_at(None)]
+            metas = [s["meta"] for s in store.live_snapshots()]
             upto = max((m.get("upto_round", -1) for m in metas), default=-1)
             meta = {"stage": "takedown_compact"}
             if upto >= 0:
@@ -817,14 +818,14 @@ class CrawlEngine:
         pairs = incremental_phash_pairs(nb, ob, max_hamming=max_hamming).localCheckpoint()
         # append-heavy store hygiene (the delta_frontier compaction
         # argument): every call adds a snapshot whose files read() must
-        # union, so after compact_every LIVE appends rewrite the store as
+        # scan, so after compact_every LIVE appends rewrite the store as
         # ONE overwrite snapshot. Count only snapshots reachable since the
-        # last overwrite (_snaps_at), not the whole manifest — otherwise
+        # last overwrite (live_snapshots), not the whole manifest — otherwise
         # once total commits ever reach compact_every every later call
         # would be an O(corpus) rewrite (ADVICE r5). After compacting,
         # expire the superseded dirs so disk stays O(store), not
         # O(store x compactions).
-        if len(store._snaps_at(None)) + 1 >= compact_every:
+        if len(store.live_snapshots()) + 1 >= compact_every:
             sid = store.overwrite(ob.unionByName(nb), meta={"upto_round": upto})
             store.expire_before(sid)
         else:

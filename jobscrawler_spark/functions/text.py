@@ -13,7 +13,7 @@ without the Python tokenizer dependency.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # tiny public stopword samples per language (heuristic, not a model)
@@ -53,10 +53,6 @@ def _stopword_hits(text: Column, lang: str) -> Column:
     toks = tokens_col(F.lower(text))
     stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     return F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    return {lang: _stopword_hits(text, lang) for lang in STOPWORDS}
 
 
 def lang_id(text: Column) -> Column:
@@ -187,20 +183,6 @@ def pii_counts(text: Column) -> tuple[Column, Column]:
         )
     )
     return n_email, n_phone
-
-
-def with_text_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return docs.select(
-        "doc_id",
-        token_count(t).alias("n_tokens"),
-        subtoken_count(t).alias("n_subtokens"),
-        lang_id(t).alias("pred_lang"),
-        punct_ratio(t).alias("punct_ratio"),
-        stopword_ratio(t).alias("stopword_ratio"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fingerprint"),
-    )
 
 
 def c4_line_keep(line: Column, min_words: int = 3) -> Column:

@@ -188,22 +188,17 @@ def politeness_select(
     )
 
 
-def salted_repartition(
-    selected: DataFrame, n_partitions: int, n_salts: int | None = None
-) -> DataFrame:
+def salted_repartition(selected: DataFrame, n_partitions: int) -> DataFrame:
     """Spread the selected round across workers by (host, salt) so one hot
     host cannot serialize the fetch stage. Budgets were already enforced,
     so the fetch salt is DECOUPLED from the politeness salt (r4): it has
-    no correctness role — it only controls distribution — and defaults to
-    16 buckets per partition, which drops a 50%-one-host round's
-    max/median partition wall from ~2.6 to ~1.3 (balls-into-bins: hot-row
-    std per partition ~ H/sqrt(salts x partitions); measured in
+    no correctness role — it only controls distribution — and is
+    fetch_salt_buckets (16 per partition), which drops a 50%-one-host
+    round's max/median partition wall from ~2.6 to ~1.3 (balls-into-bins:
+    hot-row std per partition ~ H/sqrt(salts x partitions); measured in
     BENCH/BASELINE.md "Adversarial host skew")."""
-    if n_salts is None:
-        n_salts = fetch_salt_buckets(n_partitions)
-    return selected.repartition(
-        n_partitions, F.col("host"), F.pmod(F.col("url_hash"), F.lit(n_salts))
-    )
+    salt = F.pmod(F.col("url_hash"), F.lit(fetch_salt_buckets(n_partitions)))
+    return selected.repartition(n_partitions, F.col("host"), salt)
 
 
 # crawl-delay pushback lives in plans.delta_frontier (host-level delay

@@ -251,7 +251,7 @@ class SeenSet:
         """Live exact-set rows per round_added, from the manifest: appends
         record their round's row count, compactions the counts they kept."""
         counts: dict[int, int] = {}
-        for s in self.seen._snaps_at(None):
+        for s in self.seen.live_snapshots():
             meta = s["meta"]
             if "round_rows" in meta:
                 counts.update({int(k): v for k, v in meta["round_rows"].items()})
@@ -291,9 +291,10 @@ class SeenSet:
         rows here) into one overwrite of the exact set, and the filter
         into one segment per shard built from the same rows.
 
-        A partitioned table reads as a UNION of per-snapshot scans, so the
-        probe plan grows with appended rounds; the engine compacts on the
-        frontier's cadence (real Iceberg manifests make this unneeded).
+        Every append adds files to each shard it touches and a filter
+        segment per shard that the probe tests, so the engine compacts on
+        the frontier's cadence: the exact set's files and the live segments
+        stay bounded.
 
         ``min_round_added`` (re-crawl mode): physically drop the
         logically-expired rows while rewriting anyway. The fold is sorted

@@ -85,7 +85,7 @@ class DeltaFrontier:
         """Tombstone rows since the last compaction, from snapshot metadata
         (each remove() records its row count) — no table scan, and correct
         across resume because the manifest is the source of truth."""
-        return sum(int(s["meta"].get("rows", 0)) for s in self.rm._snaps_at(None))
+        return sum(int(s["meta"].get("rows", 0)) for s in self.rm.live_snapshots())
 
     # -- lifecycle -----------------------------------------------------------
     def bootstrap(self, spark: SparkSession, frontier_rows: DataFrame) -> None:

@@ -4,17 +4,20 @@ No Iceberg runtime is available in this container, so the engine carries a
 minimal table layer with the same contract the north rule needs:
 
 - **atomic append / overwrite**: data files are written to a fresh
-  ``snap-NNNNN`` directory first; the manifest (``_snapshots.json``) is then
+  ``snap=NNNNN`` directory first; the manifest (``_snapshots.json``) is then
   swapped atomically and durably. Readers only ever see committed
   snapshots. A ``clear`` is a manifest-only overwrite. A small pandas
   frame is written with pyarrow, no Spark job.
-- **declared schema and layout**: writes conform to the schema and reads
-  pin it (no schema-inference job); a table's partition column, if any,
-  is declared once with it and every write hive-partitions by it.
-- **time travel**: ``read(spark, snapshot_id=k)`` reconstructs the table as
-  of snapshot k — the checkpoint/resume path replays from recorded ids.
+- **one read path**: each snapshot dir is a ``snap`` partition of the
+  table, so the live snapshots read as one multi-root scan (partition
+  pruning below them included) under the table's schema, with no
+  schema-inference job.
+- **schema and layout**: the manifest records the table's schema — the
+  declared one, or else the one its first Spark write had — and every
+  write conforms to it. A table's partition column, if any, is declared
+  once and every Spark write hive-partitions by it.
 - **rollback / expiry**: ``rollback_to`` and ``expire_before`` commit the
-  cut manifest, then delete every ``snap-NNNNN`` dir it does not list — so
+  cut manifest, then delete every ``snap=NNNNN`` dir it does not list — so
   the dirs a crash left unlisted (a write before its commit, a cut before
   its deletes) go with the next cut. One writer per table: a dir being
   written is unlisted until its commit.
@@ -36,7 +39,6 @@ import json
 import os
 import shutil
 import uuid
-from functools import reduce
 
 import pandas as pd
 import pyarrow as pa
@@ -71,6 +73,8 @@ class SnapshotTable:
         self, path: str, schema: StructType | None = None, partition_by: str | None = None
     ):
         self.path = path
+        # the declared schema, else the recorded one once _load or the
+        # first write (_conform) sets it
         self.schema = schema
         # hive layout: a filter on the partition column prunes files
         # (SCALING.md "Seen-set")
@@ -82,14 +86,25 @@ class SnapshotTable:
         return os.path.join(self.path, _MANIFEST)
 
     def _load(self) -> list[dict]:
+        """The manifest's snapshots; a table declared without a schema
+        takes the one the manifest records."""
         p = self._manifest_path()
         if not os.path.exists(p):
             return []
         with open(p) as f:
-            return json.load(f)["snapshots"]
+            manifest = json.load(f)
+        if any(s["dir"].startswith("snap-") for s in manifest["snapshots"]):
+            raise ValueError(
+                f"{self.path} lists snap-NNNNN dirs: written before snapshot dirs "
+                "became snap=NNNNN partitions of their table, and not readable now"
+            )
+        if self.schema is None and manifest.get("schema") is not None:
+            self.schema = StructType.fromJson(manifest["schema"])
+        return manifest["snapshots"]
 
     def _commit(self, snapshots: list[dict]) -> None:
-        commit_json(self._manifest_path(), {"snapshots": snapshots})
+        schema = None if self.schema is None else self.schema.jsonValue()
+        commit_json(self._manifest_path(), {"schema": schema, "snapshots": snapshots})
 
     # -- public api --------------------------------------------------------
     @property
@@ -106,7 +121,7 @@ class SnapshotTable:
         manifest-only snapshot."""
         snaps = self._load()
         sid = (snaps[-1]["id"] + 1) if snaps else 0
-        rel = f"snap-{sid:05d}"
+        rel = f"snap={sid:05d}"
         out = os.path.join(self.path, rel)
         has_data = False
         if isinstance(df, pd.DataFrame) and not df.empty:
@@ -125,10 +140,11 @@ class SnapshotTable:
         return sid
 
     def _conform(self, df: DataFrame) -> DataFrame:
-        """The declared columns by name, cast to the declared types (reads
-        pin the schema, so files must match it); a missing one raises."""
+        """The table's columns by name, cast to its types (reads pin the
+        schema, so files must match it); a missing one raises. The first
+        write of a table without a schema records its own."""
         if self.schema is None:
-            return df
+            self.schema = df.schema
         missing = [f.name for f in self.schema.fields if f.name not in df.columns]
         if missing:
             raise ValueError(f"write to {self.path} lacks declared columns {missing}")
@@ -148,25 +164,22 @@ class SnapshotTable:
 
     def clear(self, meta: dict | None = None) -> int:
         """Empty the table with a manifest-only overwrite: no Spark job and
-        no data dir, yet rollback/time travel treat it like any snapshot."""
+        no data dir, yet rollback treats it like any snapshot."""
         return self._write(None, "overwrite", meta)
 
-    def _snaps_at(self, snapshot_id: int | None) -> list[dict]:
-        snaps = self._load()
-        if snapshot_id is not None:
-            snaps = [s for s in snaps if s["id"] <= snapshot_id]
+    def live_snapshots(self) -> list[dict]:
+        """The snapshots a read scans: the last overwrite and the appends
+        after it."""
         live: list[dict] = []
-        for s in snaps:
+        for s in self._load():
             if s["mode"] == "overwrite":
                 live = []
             live.append(s)
         return live
 
-    def _data_dirs(self, snapshot_id: int | None = None) -> list[str]:
+    def _data_dirs(self) -> list[str]:
         """Dirs of the live snapshots that hold rows, from the manifest."""
-        return [
-            os.path.join(self.path, s["dir"]) for s in self._snaps_at(snapshot_id) if s["has_data"]
-        ]
+        return [os.path.join(self.path, s["dir"]) for s in self.live_snapshots() if s["has_data"]]
 
     def is_empty(self) -> bool:
         """True when no live snapshot holds a row — from the manifest, no
@@ -184,28 +197,25 @@ class SnapshotTable:
                     return True
         return False
 
-    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        dirs = self._data_dirs(snapshot_id)
+    def read(self, spark: SparkSession) -> DataFrame:
+        """The live snapshots as one scan under the table's schema. The
+        snapshot dirs are ``snap=`` partitions below the table's path, so
+        Spark discovers one layout across them (a partition filter prunes
+        in every snapshot); the select drops the ``snap`` column."""
+        dirs = self._data_dirs()
+        if self.schema is None:
+            raise ValueError(f"table {self.path} declares no schema and was never written")
         if not dirs:
-            if self.schema is None:
-                raise ValueError(f"empty table {self.path} with no schema")
             # folds to an empty local relation: plans over it run no job
             return spark.range(1).select(
                 [F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema.fields]
             ).limit(0)
-        # the declared schema (partition column included): no inference job
-        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
-        if len(dirs) > 1 and self.partition_by is not None:
-            # hive-partitioned snapshots cannot share one multi-root read
-            # (partition discovery needs a common base); union per-snapshot
-            # reads — partition pruning still applies within each
-            df = reduce(DataFrame.unionByName, [reader.parquet(d) for d in dirs])
-        else:
-            df = reader.parquet(*dirs)
-        if self.schema is not None:
-            # stable column order regardless of file layout
-            df = df.select(self.schema.fieldNames())
-        return df
+        return (
+            spark.read.schema(self.schema)
+            .option("basePath", self.path)
+            .parquet(*dirs)
+            .select(self.schema.fieldNames())
+        )
 
     def rollback_to(self, snapshot_id: int | None) -> None:
         """Drop snapshots newer than ``snapshot_id`` (None = drop all).
@@ -221,8 +231,8 @@ class SnapshotTable:
         """Drop snapshots (and data dirs) no longer reachable — keeps the
         frontier's overwrite-per-round history from growing unboundedly."""
         snaps = self._load()
-        # find last overwrite at-or-before snapshot_id: everything before it
-        # is unreachable for reads >= snapshot_id
+        # find the last overwrite at-or-before snapshot_id: everything
+        # before it is unreachable
         cut = 0
         for i, s in enumerate(snaps):
             if s["mode"] == "overwrite" and s["id"] <= snapshot_id:
@@ -237,5 +247,5 @@ class SnapshotTable:
         self._commit(kept)
         listed = {s["dir"] for s in kept}
         for d in os.listdir(self.path):
-            if d.startswith("snap-") and d not in listed:
+            if d.startswith("snap=") and d not in listed:
                 shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)

@@ -1,8 +1,11 @@
-"""Fixed StructTypes for every engine table.
+"""Fixed StructTypes for the engine's tables.
 
 The reference hard-codes its six job columns in four places
 (reference: src/crawler.py:335-345, src/crawlers/async_bs4.py:122-129);
-here every schema is declared exactly once.
+here every schema is declared exactly once. A store declared without one
+(the dedup band and label stores, takedowns, the IVF index, export
+shards) records its first write's schema in its snapshot manifest
+(plans/tables.py); later writes conform to it.
 """
 
 from __future__ import annotations

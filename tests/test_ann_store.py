@@ -169,3 +169,18 @@ def test_delete_then_append_keeps_serving_consistent(spark, embs, queries, tmp_p
     ref.append(spark, rest)
     ref.delete(spark, [0, 3])
     assert got == _res(ref.search(spark, queries, k=5, nprobe=2))
+
+
+def test_search_after_deleting_every_vector_returns_nothing(spark, embs, queries, tmp_path):
+    """Delete every vec_id and compact: the assignment lists hold no rows,
+    yet they still read under the schema their build recorded, so a
+    store opened afresh serves an empty answer instead of raising."""
+    path = str(tmp_path / "ivf_empty")
+    store = IvfIndexStore(path)
+    small = embs.filter(F.col("vec_id") < 20)
+    store.build(spark, small, n_centroids=4)
+    store.delete(spark, small.select("vec_id"))
+    store.compact(spark)
+    reopened = IvfIndexStore(path)
+    assert reopened.assignments.is_empty() and reopened.tombstones.is_empty()
+    assert reopened.search(spark, queries, k=5).count() == 0

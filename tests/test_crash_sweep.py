@@ -73,7 +73,7 @@ def assert_only_listed_dirs(eng: CrawlEngine) -> None:
     listed one may have none: a manifest-only clear), and every listed
     snapshot that holds data has its dir."""
     for name, t in eng.tables.items():
-        on_disk = {d for d in os.listdir(t.path) if d.startswith("snap-")}
+        on_disk = {d for d in os.listdir(t.path) if d.startswith("snap=")}
         snaps = t.snapshots()
         assert on_disk <= {s["dir"] for s in snaps}, name
         assert {s["dir"] for s in snaps if s["has_data"]} <= on_disk, name

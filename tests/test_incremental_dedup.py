@@ -177,7 +177,7 @@ def test_engine_incremental_dedup_report(spark, tmp_path):
     import os
 
     assert len(store.snapshots()) == 1
-    on_disk = sorted(d for d in os.listdir(store.path) if d.startswith("snap-"))
+    on_disk = sorted(d for d in os.listdir(store.path) if d.startswith("snap="))
     assert on_disk == [store.snapshots()[0]["dir"]]
     assert eng.incremental_image_dedup_report(max_hamming=20, compact_every=8).count() == 0
     assert store.snapshots()[-1]["mode"] == "append"

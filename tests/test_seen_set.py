@@ -180,7 +180,7 @@ def test_seen_table_partitioned_and_probe_prunes(spark, tmp_path):
 
     s = SeenSet(str(tmp_path / "seen"), n_shards=8)
     s.add(spark, _urls(spark, 0, 300), round_no=0)
-    snap0 = os.path.join(s.seen.path, "snap-00000")
+    snap0 = os.path.join(s.seen.path, "snap=00000")
     assert any(d.startswith("shard=") for d in os.listdir(snap0))
 
     out = s.filter_unseen(spark, _urls(spark, 150, 500))

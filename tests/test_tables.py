@@ -1,4 +1,4 @@
-"""Snapshot table layer: atomic append/overwrite, time travel, rollback."""
+"""Snapshot table layer: atomic append/overwrite, one-scan reads, rollback."""
 
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -11,24 +11,22 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def test_append_and_time_travel(spark, tmp_path):
+def test_append_and_current_snapshot(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
     assert t.read(spark).count() == 0
-    s0 = t.append(_df(spark, [(1, "a")]))
+    t.append(_df(spark, [(1, "a")]))
     s1 = t.append(_df(spark, [(2, "b")]))
     assert t.read(spark).count() == 2
-    assert t.read(spark, snapshot_id=s0).count() == 1
     assert t.current_snapshot == s1
 
 
 def test_overwrite_resets(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
     t.append(_df(spark, [(1, "a"), (2, "b")]))
-    s1 = t.overwrite(_df(spark, [(9, "z")]))
+    t.overwrite(_df(spark, [(9, "z")]))
     assert [r["k"] for r in t.read(spark).collect()] == [9]
     t.append(_df(spark, [(10, "y")]))
     assert t.read(spark).count() == 2
-    assert t.read(spark, snapshot_id=s1).count() == 1
 
 
 def test_rollback(spark, tmp_path):
@@ -67,7 +65,7 @@ def test_rollback_drops_the_dir_of_a_crashed_write(spark, tmp_path, monkeypatch)
     assert t.append(pd.DataFrame({"k": [3], "v": ["c"]})) == s0 + 1
     assert sorted(r["k"] for r in t.read(spark).collect()) == [1, 3]
     t.rollback_to(None)
-    assert t.snapshots() == [] and not [d for d in os.listdir(t.path) if d.startswith("snap-")]
+    assert t.snapshots() == [] and not [d for d in os.listdir(t.path) if d.startswith("snap=")]
 
 
 def test_a_cut_deletes_the_dirs_an_interrupted_cut_left(spark, tmp_path, monkeypatch):
@@ -81,7 +79,7 @@ def test_a_cut_deletes_the_dirs_an_interrupted_cut_left(spark, tmp_path, monkeyp
     import pytest
 
     def snap_dirs(t):
-        return sorted(d for d in os.listdir(t.path) if d.startswith("snap-"))
+        return sorted(d for d in os.listdir(t.path) if d.startswith("snap="))
 
     def crash(*args, **kwargs):
         raise RuntimeError("crash before the deletes")
@@ -95,7 +93,7 @@ def test_a_cut_deletes_the_dirs_an_interrupted_cut_left(spark, tmp_path, monkeyp
             with pytest.raises(RuntimeError):
                 t.expire_before(s1)
         assert [s["id"] for s in t.snapshots()] == [s1]
-        assert snap_dirs(t) == ["snap-00000", "snap-00001"]  # one unlisted
+        assert snap_dirs(t) == ["snap=00000", "snap=00001"]  # one unlisted
         if cut == "rollback_to":
             t.rollback_to(s1)
         else:
@@ -125,7 +123,7 @@ def test_expire_before(spark, tmp_path):
 
 def test_empty_partitioned_snapshot_does_not_brick_reads(spark, tmp_path):
     """R4 regression (review-found): an EMPTY DataFrame appended to a
-    partitioned table writes only _SUCCESS; the per-snapshot union read of a
+    partitioned table writes only _SUCCESS; the one-scan read of a
     partitioned table must skip such fileless dirs instead of raising
     UNABLE_TO_INFER_SCHEMA. A crawl legitimately commits one when a
     round's discovered links were all already pending. A flat table's
@@ -262,7 +260,6 @@ def test_clear_is_manifest_only_and_round_trips(spark, tmp_path):
     assert jobs == []
     assert not os.path.exists(os.path.join(t.path, t.snapshots()[-1]["dir"]))
     assert t.is_empty() and t.read(spark).count() == 0
-    assert t.read(spark, snapshot_id=s0).count() == 1  # time travel past it
     t.append(_df(spark, [(2, "b")]))
     assert [r["k"] for r in t.read(spark).collect()] == [2]
     t.rollback_to(s1)
@@ -316,3 +313,73 @@ def test_commit_json_leaves_no_temp_files(tmp_path):
     with open(path) as f:
         assert json.load(f) == {"a": 2}
     assert os.listdir(tmp_path) == ["state.json"]
+
+
+# ------------------------------------------------------ one read path
+
+
+def test_partitioned_snapshots_read_as_one_pruned_scan(spark, tmp_path):
+    """The live snapshots of a partitioned table are ``snap=`` partitions
+    of one layout: three of them plan as ONE FileScan whose partition
+    filter prunes in every snapshot, not a union of per-snapshot scans."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    schema = StructType([StructField("k", StringType()), StructField("shard", IntegerType())])
+    t = SnapshotTable(str(tmp_path / "t"), schema, partition_by="shard")
+    t.overwrite(spark.createDataFrame([("a", 1), ("b", 2)], schema))
+    t.append(spark.createDataFrame([("c", 1)], schema))
+    t.append(spark.createDataFrame([("d", 2), ("e", 1)], schema))
+    assert [s["mode"] for s in t.snapshots()] == ["overwrite", "append", "append"]
+    df = t.read(spark).filter(F.col("shard") == 1)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan and plan.count("FileScan") == 1, plan
+    assert re.search(r"PartitionFilters: \[isnotnull\(shard#\d+\), \(shard#\d+ = 1\)\]", plan), plan
+    assert df.columns == ["k", "shard"]
+    assert sorted(r["k"] for r in df.collect()) == ["a", "c", "e"]
+
+
+def test_undeclared_table_records_its_schema(spark, tmp_path):
+    """A table declared without a schema records its first write's in the
+    manifest: a new handle reads it pinned, with no inference job, and
+    it stays readable once no live snapshot holds a row. Only a table
+    that was never written has no schema to read with."""
+    import pytest
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(_df(spark, [(1, "a")]))
+    df, jobs = _jobs_during(spark, lambda: SnapshotTable(t.path).read(spark))
+    assert jobs == [] and df.schema == SCHEMA
+    assert [tuple(r) for r in df.collect()] == [(1, "a")]
+    # later writes conform to the recorded schema
+    t.append(spark.createDataFrame([("b", 2)], "v string, k long"))
+    assert sorted(tuple(r) for r in SnapshotTable(t.path).read(spark).collect()) == [
+        (1, "a"),
+        (2, "b"),
+    ]
+    t.clear()
+    empty, jobs = _jobs_during(spark, lambda: SnapshotTable(t.path).read(spark))
+    assert jobs == [] and empty.schema == SCHEMA and empty.count() == 0
+    with pytest.raises(ValueError, match="declares no schema and was never written"):
+        SnapshotTable(str(tmp_path / "never")).read(spark)
+
+
+def test_a_manifest_listing_old_snapshot_dirs_fails_with_the_format_message(tmp_path):
+    """State written before snapshot dirs became ``snap=`` partitions lists
+    ``snap-NNNNN`` dirs. Opening it raises, naming the layout change, and
+    neither a read nor a cut touches its dirs."""
+    import os
+
+    import pytest
+
+    from jobscrawler_spark.plans.tables import commit_json
+
+    t = SnapshotTable(str(tmp_path / "t"), SCHEMA)
+    os.makedirs(os.path.join(t.path, "snap-00000"))
+    snap = {"id": 0, "dir": "snap-00000", "mode": "append", "meta": {}, "has_data": True}
+    commit_json(os.path.join(t.path, "_snapshots.json"), {"snapshots": [snap]})
+    for call in (t.snapshots, t.is_empty, lambda: t.rollback_to(None), lambda: t.expire_before(0)):
+        with pytest.raises(ValueError, match="snap=NNNNN partitions"):
+            call()
+    assert sorted(os.listdir(t.path)) == ["_snapshots.json", "snap-00000"]
