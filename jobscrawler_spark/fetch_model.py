@@ -11,6 +11,13 @@ URL string. The SAME function backs
 so the equivalence tests compare two executions of identical semantics —
 exactly how the reference's live HTTP fetch would be mocked.
 
+Payloads have two entry points with one answer. ``payload_from_digest`` is
+the scalar reference: the oracle simulator, ``oracle/expected.py`` and the
+generators call it (through ``fetch_payload``). ``payloads_from_digests``
+is the batched form the fetch stage calls once per Arrow batch; it is
+bit-identical (``tests/test_fetch_batch.py`` compares every field on 20k
+digests) and shares numpy's per-call overhead across the batch.
+
 Reference analogues: per-URL GET with rotating User-Agent (reference:
 src/crawler.py:306-319), non-200 pages logged and skipped
 (src/crawler.py:313-317), follow-link discovery (src/utils/FollowLink.py:8-39).
@@ -103,10 +110,31 @@ def outlinks_from_digest(
 
 
 def payload_from_digest(d: int, url: str) -> tuple[bytes, int, int, str, str, int]:
+    """The scalar reference payload: the oracle simulator, the expected
+    results and the fixture generators take it, and tests compare
+    ``payloads_from_digests`` against it."""
     w, h, fmt = params_from_digest(d)
     img = codecs.synth_pixels(d, w, h)
     data = codecs.encode(img, fmt)
     return data, w, h, fmt, caption_from_digest(d, url), codecs.phash(img)
+
+
+def payloads_from_digests(
+    d: np.ndarray, urls
+) -> tuple[list[bytes], np.ndarray, np.ndarray, list[str], list[str], np.ndarray]:
+    """``payload_from_digest`` over a uint64 digest array, as the columns
+    (bytes, w, h, fmt, caption, phash), bit for bit: the fetch stage makes
+    one such call per Arrow batch, so the numpy per-call overhead of synth,
+    codec encode and phash is paid per batch, not per URL. w and h are
+    int32, phash int64."""
+    w = (8 + (d >> np.uint64(8)) % np.uint64(57)).astype(np.int32)
+    h = (8 + (d >> np.uint64(16)) % np.uint64(57)).astype(np.int32)
+    fmts = [FMTS[i] for i in ((d >> np.uint64(24)) % np.uint64(len(FMTS))).tolist()]
+    ds = d.tolist()
+    imgs = codecs.synth_pixels_batch(ds, w.tolist(), h.tolist())
+    captions = [caption_from_digest(x, url) for x, url in zip(ds, urls)]
+    data = [codecs.encode_dct_stacked(img) if f == "dct" else codecs.encode(img, f) for img, f in zip(imgs, fmts)]
+    return data, w, h, fmts, captions, codecs.phash_batch(imgs)
 
 
 # -- url-keyed wrappers (oracle simulator + generators + invariant checks) ---

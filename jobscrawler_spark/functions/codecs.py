@@ -254,11 +254,12 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
 
 _PHASH_DCT32 = _dct_matrix(32)
 _PHASH_DCT32_8 = _PHASH_DCT32[:8].copy()  # only the low-frequency rows are used
+_GRAY = np.array([0.299, 0.587, 0.114])
 
 
 def _area_resize_gray(img: np.ndarray, size: int = 32) -> np.ndarray:
     """Area-average resize of the grayscale image to size x size (numpy only)."""
-    gray = img.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
+    gray = img.astype(np.float64) @ _GRAY
     h, w = gray.shape
     # integer-bin area averaging via bincount on target indices
     yi = (np.arange(h) * size // h).astype(np.int64)
@@ -270,16 +271,20 @@ def _area_resize_gray(img: np.ndarray, size: int = 32) -> np.ndarray:
     return out / np.maximum(cnt, 1.0)
 
 
-def phash(img: np.ndarray) -> int:
-    """64-bit perceptual hash (classic pHash construction)."""
+def _phash_dct8(img: np.ndarray) -> np.ndarray:
+    """The low-frequency 8x8 DCT block of the 32x32 gray resize."""
     small = _area_resize_gray(img, 32)
     # einsum (non-BLAS, sequential) + coarse rounding: BLAS matmul summation
     # order varies with thread count across driver/executor processes, and
     # bits flipping at the median would break cross-process determinism.
     # Two-step 8x32 einsum: only the low-frequency 8x8 block is needed.
     tmp = np.einsum("ij,jk->ik", _PHASH_DCT32_8, small, optimize=False)
-    dct8 = np.einsum("ik,lk->il", tmp, _PHASH_DCT32_8, optimize=False)
-    low = np.round(dct8.flatten(), 2)
+    return np.einsum("ik,lk->il", tmp, _PHASH_DCT32_8, optimize=False)
+
+
+def phash(img: np.ndarray) -> int:
+    """64-bit perceptual hash (classic pHash construction)."""
+    low = np.round(_phash_dct8(img).flatten(), 2)
     med = np.median(low[1:])  # exclude DC term from the median
     bits = (low > med).astype(np.uint64)
     bits[0] = 0  # DC bit pinned for stability
@@ -291,6 +296,128 @@ def phash(img: np.ndarray) -> int:
 
 def hamming64(a: int, b: int) -> int:
     return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
+
+
+# ---------------------------------------------------------------------------
+# Batched twins of synth_pixels / encode_dct / phash (the fetch stage's hot
+# path). Each returns exactly what its scalar reference returns, bit for bit:
+# every float op runs in the reference's order and dtype, and only the
+# per-call numpy overhead is shared across a batch. The scalar functions
+# above stay the reference (oracle, generators, tests compare against them).
+# ---------------------------------------------------------------------------
+
+_LINSPACE32 = [np.linspace(0, 1, n, dtype=np.float32) for n in range(65)]
+# synth_pixels' four rng.uniform(lo, hi, 3) draws as one random(12):
+# Generator.uniform computes lo + (hi - lo) * next_double
+_SYNTH_LO = np.repeat([0.5, 0.5, 0.0, 64.0], 3)
+_SYNTH_SPAN = np.repeat([2.5, 2.5, 6.28, 128.0], 3)
+_TWO_PI32 = 2 * np.float32(np.pi)
+
+
+def synth_pixels_batch(seeds, ws, hs) -> list[np.ndarray]:
+    """``[synth_pixels(s, w, h) ...]`` for sides of at most 64 pixels,
+    computed channel-first so every broadcast runs along a row instead of
+    along the 3 channels."""
+    out = []
+    for seed, w, h in zip(seeds, ws, hs):
+        r = np.random.default_rng(np.uint64(seed & 0xFFFFFFFFFFFFFFFF)).random(12)
+        v = (_SYNTH_LO + _SYNTH_SPAN * r).astype(np.float32)[:, None, None]
+        x = _LINSPACE32[w][None, None, :]
+        y = _LINSPACE32[h][None, :, None]
+        t = v[0:3] * x + v[3:6] * y  # (3, h, w)
+        t *= _TWO_PI32
+        t += v[6:9]
+        np.sin(t, out=t)
+        t *= 60
+        t += v[9:12]
+        t += 20 * (x - y)
+        np.rint(t, out=t)
+        np.maximum(t, 0, out=t)  # np.clip, without its per-call errstate
+        np.minimum(t, 255, out=t)
+        out.append(np.ascontiguousarray(t.transpose(1, 2, 0), dtype=np.uint8))
+    return out
+
+
+def encode_dct_stacked(img: np.ndarray) -> bytes:
+    """``encode_dct(img)`` with the three channels in one stacked matmul.
+    Each 8x8 block keeps a unit inner stride (row stride W), as in
+    ``_to_blocks``, so numpy hands every block to the same BLAS call; a
+    channel-last block layout falls off BLAS and changes coefficients."""
+    h, w, _ = img.shape
+    H, W = h + (-h) % _B, w + (-w) % _B
+    chans = np.empty((3, H, W), dtype=np.float32)  # edge-padded, like np.pad
+    chans[:, :h, :w] = img.transpose(2, 0, 1)
+    chans[:, h:, :w] = chans[:, h - 1 : h, :w]
+    chans[:, :, w:] = chans[:, :, w - 1 : w]
+    blocks = chans.reshape(3, H // _B, _B, W // _B, _B).transpose(0, 1, 3, 2, 4)
+    q = np.rint(_DCT32F @ blocks @ _IDCT32F / np.float32(_QSTEP)).astype(np.int16)
+    return struct.pack(">II", w, h) + zlib.compress(q.tobytes(), 6)
+
+
+def _area_bins(n: int, size: int = 32) -> tuple[np.ndarray, np.ndarray]:
+    """The first and second source index that ``_area_resize_gray`` adds
+    into each of the ``size`` target bins of an axis of length ``n``
+    (n <= 64, so at most two); ``n`` where a bin gets none."""
+    first, second = np.full(size, n), np.full(size, n)
+    for src, tgt in enumerate(np.arange(n) * size // n):
+        if first[tgt] == n:
+            first[tgt] = src
+        else:
+            second[tgt] = src
+    return first, second
+
+
+_BINS = [_area_bins(n) for n in range(65)]
+_BIN1 = np.stack([b[0] for b in _BINS])
+_BIN2 = np.stack([b[1] for b in _BINS])
+_BIN_CNT = np.stack([(b[0] < n).astype(float) + (b[1] < n) for n, b in enumerate(_BINS)])
+
+
+def phash_batch(imgs: list[np.ndarray]) -> np.ndarray:
+    """int64 array of ``phash(img)`` over images of at most 64 pixels a side."""
+    low = np.round(_phash_dct8_batch(imgs).reshape(len(imgs), 64), 2)
+    bits = low > np.median(low[:, 1:], axis=1)[:, None]
+    bits[:, 0] = False
+    return np.packbits(bits, axis=1).view(">u8").ravel().astype(np.int64)
+
+
+# images per _phash_dct8_batch pass: a 10k-row Arrow batch in one pass
+# peaks at ~430 MB of float64/int64 temporaries, in 256-image passes at
+# ~16 MB, in the same time (tracemalloc and perf_counter, 10k random digests)
+_PHASH_CHUNK = 256
+
+
+def _phash_dct8_batch(imgs: list[np.ndarray]) -> np.ndarray:
+    """(n, 8, 8) stack of ``_phash_dct8(img)``, bit for bit."""
+    chunks = [_phash_dct8_chunk(imgs[i : i + _PHASH_CHUNK]) for i in range(0, len(imgs), _PHASH_CHUNK)]
+    return np.concatenate(chunks) if chunks else np.empty((0, 8, 8))
+
+
+def _phash_dct8_chunk(imgs: list[np.ndarray]) -> np.ndarray:
+    n = len(imgs)
+    hs = np.array([img.shape[0] for img in imgs], dtype=np.int64)
+    ws = np.array([img.shape[1] for img in imgs], dtype=np.int64)
+    # every gray image padded with a zero row and column, end to end: a
+    # bin's missing contribution reads a zero, and x + 0.0 == x
+    sizes = (hs + 1) * (ws + 1)
+    offs = np.zeros(n, dtype=np.int64)
+    np.cumsum(sizes[:-1], out=offs[1:])
+    flat = np.zeros(int(sizes.sum()))
+    for img, o, h, w in zip(imgs, offs.tolist(), hs.tolist(), ws.tolist()):
+        flat[o : o + (h + 1) * (w + 1)].reshape(h + 1, w + 1)[:h, :w] = img.astype(np.float64) @ _GRAY
+    # np.add.at's row-major order for one target cell: (r1,c1) (r1,c2)
+    # (r2,c1) (r2,c2), starting from 0.0 — four ordered passes
+    rows1 = offs[:, None] + _BIN1[hs] * (ws + 1)[:, None]
+    rows2 = offs[:, None] + _BIN2[hs] * (ws + 1)[:, None]
+    c1, c2 = _BIN1[ws][:, None, :], _BIN2[ws][:, None, :]
+    acc = flat[rows1[:, :, None] + c1]
+    acc += flat[rows1[:, :, None] + c2]
+    acc += flat[rows2[:, :, None] + c1]
+    acc += flat[rows2[:, :, None] + c2]
+    cnt = _BIN_CNT[hs][:, :, None] * _BIN_CNT[ws][:, None, :]
+    small = acc / np.maximum(cnt, 1.0)
+    tmp = np.einsum("ij,njk->nik", _PHASH_DCT32_8, small, optimize=False)
+    return np.einsum("nik,lk->nil", tmp, _PHASH_DCT32_8, optimize=False)
 
 
 # ---------------------------------------------------------------------------

@@ -8,9 +8,12 @@ the metrics table.
 
 No Python hashing happens here: the model is keyed on the unsigned view of
 the frontier's ``url_hash`` column (Spark's JVM-side xxhash64), so statuses
-and UA indices are pure numpy over the whole Arrow batch and per-item
-Python remains only for the codec encode of 200-status payloads — the part
-that is network/IO in a real crawler.
+and UA indices are pure numpy over the whole Arrow batch, and the payloads
+of a batch's 200-status rows come from one ``payloads_from_digests`` call,
+bit-identical to the oracle's scalar ``payload_from_digest``. Per-image work
+is left only where each image has its own seed, shape or stream: the
+synth's RNG, the per-image numpy ops and the zlib of each png/dct payload
+(the part that is network/IO in a real crawler); outlinks stay per URL.
 
 Reference analogues: __fetch with UA rotation (reference:
 src/crawler.py:306-319), follow-link discovery (src/utils/FollowLink.py:8-39),
@@ -49,36 +52,33 @@ def make_fetch_batches(round_no: int, max_depth: int):
             urls = pdf["url"].to_numpy()
             depths = pdf["depth"].to_numpy()
 
-            data_c: list = [None] * n
-            w_c: list = [None] * n
-            h_c: list = [None] * n
-            fmt_c: list = [None] * n
-            cap_c: list = [None] * n
-            ph_c: list = [None] * n
-            img_id: list = [None] * n
+            ok = np.flatnonzero(status == 200)
+            data, w, h, fmt, caption, ph = FM.payloads_from_digests(dig[ok], urls[ok])
+            data_c, fmt_c, cap_c, img_id = ([None] * n for _ in range(4))
             outlinks: list = [[]] * n
-            for i in np.flatnonzero(status == 200):
-                d = int(dig[i])
-                url = urls[i]
-                data, w, h, fmt, caption, ph = FM.payload_from_digest(d, url)
-                data_c[i], w_c[i], h_c[i] = data, w, h
-                fmt_c[i], cap_c[i], ph_c[i] = fmt, caption, ph
+            for j, i in enumerate(ok.tolist()):
+                data_c[i], fmt_c[i], cap_c[i] = data[j], fmt[j], caption[j]
                 # frontier URLs are canonical by construction (with_canonical
                 # at bootstrap and outlink ingestion) — image_id IS the url
-                img_id[i] = url
-                outlinks[i] = FM.outlinks_from_digest(d, url, int(depths[i]), max_depth)
+                img_id[i] = urls[i]
+                outlinks[i] = FM.outlinks_from_digest(int(dig[i]), urls[i], int(depths[i]), max_depth)
 
-            # mixed None+int columns coerce to float64 and destroy the low
-            # bits of 64-bit hashes — force nullable integer dtypes
+            def nullable(vals: np.ndarray) -> pd.arrays.IntegerArray:
+                # null where status != 200: a None+int object column would
+                # coerce to float64 and lose the low bits of 64-bit hashes
+                col = np.zeros(n, dtype=vals.dtype)
+                col[ok] = vals
+                return pd.arrays.IntegerArray(col, status != 200)
+
             yield pd.DataFrame(
                 {
                     "image_id": img_id,
                     "bytes": data_c,
-                    "w": pd.array(w_c, dtype="Int32"),
-                    "h": pd.array(h_c, dtype="Int32"),
+                    "w": nullable(w),
+                    "h": nullable(h),
                     "fmt": fmt_c,
                     "caption": cap_c,
-                    "phash": pd.array(ph_c, dtype="Int64"),
+                    "phash": nullable(ph),
                     "url": urls,
                     "url_hash": pdf["url_hash"].to_numpy(),
                     "host": pdf["host"].to_numpy(),

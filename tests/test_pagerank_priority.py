@@ -60,12 +60,6 @@ def test_empty_host_graph_is_known_without_a_job(spark, tmp_path):
     eng.host_edges.append(spark.createDataFrame([], HOST_EDGES), {"round": 0})
     ranks, jobs = _jobs_during(spark, eng._host_ranks)
     assert ranks is None and jobs == []
-    # a state dir written when has_data meant "holds a file" marks that
-    # snapshot has_data true: it reads as 0 rows, which rank no host
-    snaps = eng.host_edges.snapshots()
-    snaps[-1]["has_data"] = True
-    eng.host_edges._commit(snaps)
-    assert eng._host_ranks().count() == 0
 
 
 def test_pagerank_fetch_order_exact(spark, engine, oracle):
