@@ -349,7 +349,6 @@ def run_skew_bench(spark, cores: int) -> dict:
     from jobscrawler_spark.functions.urls import with_canonical
     from jobscrawler_spark.operators import fetch as FETCH
     from jobscrawler_spark.operators.frontier import (
-        auto_salt_buckets,
         fetch_salt_buckets,
         politeness_select,
         salted_repartition,
@@ -368,7 +367,7 @@ def run_skew_bench(spark, cores: int) -> dict:
     pol = spark.createDataFrame(
         pd.DataFrame({"host": ["h0000.example.com"], "max_fetches_per_round": [n]})
     )
-    selected = politeness_select(cand, pol, default_budget=n).persist()
+    selected = politeness_select(cand, pol, default_budget=n, max_budget=n).persist()
     selected.count()  # materialize once; both variants repartition from cache
     # warm the Python UDF worker pool OUTSIDE the timed windows (worker
     # spawn is per-session, not per-stage; without this the first variant
@@ -393,8 +392,7 @@ def run_skew_bench(spark, cores: int) -> dict:
         )
 
     out = {"seeds": n, "hot_share": 0.5, "n_partitions": n_parts,
-           "salt_buckets": fetch_salt_buckets(n_parts),
-           "politeness_salts": auto_salt_buckets(n)}
+           "salt_buckets": fetch_salt_buckets(n_parts)}
     for variant, df in (
         ("salted", salted_repartition(selected, n_parts)),
         ("unsalted", selected.repartition(n_parts, "host")),
@@ -834,8 +832,7 @@ def write_baseline_md(
             "",
             f"{skew['seeds']} selected URLs, hot host share {skew['hot_share']}, "
             f"{skew['n_partitions']} fetch partitions, {skew['salt_buckets']} fetch "
-            f"salts (16/partition, decoupled from the {skew['politeness_salts']} "
-            "budget-derived politeness salts). Per-partition wall of",
+            "salts (16/partition). Per-partition wall of",
             "the REAL fetch compute (make_fetch_batches wrapped with a timer),",
             "salted (host, salt) repartition vs the unsalted (host-only)",
             "counterfactual — the straggler bound the politeness/salting design",

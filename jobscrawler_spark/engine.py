@@ -111,6 +111,15 @@ def _partition_counts(batches):
         )
 
 
+def recrawl_horizon(r: int, recrawl_after: int | None) -> int | None:
+    """Oldest round_added still blocking in round ``r`` (re-crawl mode):
+    rows from earlier rounds are logically expired. None while nothing
+    has expired yet, or without re-crawl."""
+    if recrawl_after is None or r <= recrawl_after:
+        return None
+    return r - recrawl_after
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -227,16 +236,14 @@ class CrawlEngine:
 
     def _politeness_facts(self):
         """One aggregation over the politeness dim, cached per engine
-        (re-derived after update_politeness): ``salts``, the POLITENESS salt
-        count from the dim's MAX budget via auto_salt_buckets (keeps a
-        10^5-budget host's phase-1 windows ~4k rows deep); ``overrides``,
+        (re-derived after update_politeness): ``max_budget``, the largest
+        per-host budget, from which the selection's window plans its
+        partial per-host limit before the host shuffle; ``overrides``,
         whether any budget differs from the default (else the selection's
         budget join, a broadcast job per round, is the identity and is
         skipped); ``delays``, whether any host has a crawl delay (else the
         pushback stage is skipped)."""
         if getattr(self, "_dim_facts", None) is None:
-            from .operators.frontier import auto_salt_buckets
-
             budget = F.coalesce(F.col("max_fetches_per_round"), F.lit(self.default_budget))
             row = self._politeness().agg(
                 F.max(budget).alias("max_budget"),
@@ -244,7 +251,7 @@ class CrawlEngine:
                 F.max((F.col("crawl_delay_rounds") > 0).cast("int")).alias("delays"),
             ).collect()[0]
             self._dim_facts = {
-                "salts": auto_salt_buckets(max(int(row["max_budget"] or 0), self.default_budget)),
+                "max_budget": max(int(row["max_budget"] or 0), self.default_budget),
                 "overrides": bool(row["overrides"]),
                 "delays": bool(row["delays"]),
             }
@@ -299,12 +306,6 @@ class CrawlEngine:
         ).drop("rank")
 
     # ----------------------------------------------------------- round loop
-    def _seen_min_round(self) -> int | None:
-        """Oldest round_added still blocking (re-crawl mode): rows from
-        rounds <= the current cutoff are logically expired."""
-        cutoff = getattr(self, "_recrawl_cutoff", None)
-        return None if cutoff is None or cutoff < 0 else cutoff + 1
-
     def run_round(self) -> dict:
         # phases that do not feed the next run in this pool: latency, not
         # CPU, dominates a small round's Spark jobs
@@ -322,9 +323,9 @@ class CrawlEngine:
         pending = self.frontier.rows.read(self.spark).select("url_hash", "url", "shard")
         seen_tables = (self.seen.seen.read(self.spark), self.seen.bloom.read(self.spark))
         expired = renew = None
-        if self.recrawl_after is not None:
-            self._recrawl_cutoff = cutoff = r - self.recrawl_after - 1
-            expired = self.seen.expire(self.spark, cutoff)
+        min_round_added = recrawl_horizon(r, self.recrawl_after)
+        if min_round_added is not None:
+            expired = self.seen.expire(self.spark, min_round_added - 1)
         if expired is not None:
             # re-crawl policy: the URLs fetched in round r - recrawl_after - 1
             # re-enter the frontier, eligible now (pagerank mode: ranked by
@@ -350,12 +351,12 @@ class CrawlEngine:
             eligible,
             self._politeness() if facts["overrides"] else None,
             self.default_budget,
-            n_salts=facts["salts"],
+            facts["max_budget"],
         )
 
-        # fetch salt intentionally NOT the politeness salt: budgets are
-        # already enforced, so the repartition salt is distribution-only
-        # and auto-scales with fetch_partitions (salted_repartition)
+        # budgets are already enforced, so the fetch salt is
+        # distribution-only and scales with fetch_partitions
+        # (salted_repartition)
         fetched = run_fetch(
             salted_repartition(selected, self.fetch_partitions), r, self.max_depth
         ).persist()
@@ -438,7 +439,7 @@ class CrawlEngine:
                 self.spark,
                 links,
                 dedupe_min_depth=True,
-                min_round_added=self._seen_min_round(),
+                min_round_added=min_round_added,
                 blocked=pending,
                 tables=seen_tables,
             )
@@ -460,7 +461,7 @@ class CrawlEngine:
 
         f_images = ex.submit(self.images.append, landed, {"round": r})
         f_seen = ex.submit(
-            self.seen.add, self.spark, fetched_keys, r, n_selected, compact, self._seen_min_round()
+            self.seen.add, self.spark, fetched_keys, r, n_selected, compact, min_round_added
         )
         f_rm = ex.submit(self.frontier.remove, fetched, r, n_selected)
         f_frontier = ex.submit(_frontier_job)

@@ -21,6 +21,7 @@ from __future__ import annotations
 import numpy as np
 
 SLOTS = 4
+HEADROOM = 1.6  # slots per item the table is sized for
 _FP_MULT = np.uint64(0x5BD1E995)
 MAX_KICKS = 500
 
@@ -42,9 +43,9 @@ def _alt_bucket(bucket: np.ndarray, fp: np.ndarray, n_buckets: int) -> np.ndarra
     return np.bitwise_xor(bucket.astype(np.uint64), mixed).astype(np.int64) % n_buckets
 
 
-def size_for(n_items: int, headroom: float = 1.6) -> int:
+def size_for(n_items: int) -> int:
     """Power-of-two bucket count with load-factor headroom."""
-    target = max(int(n_items * headroom) // SLOTS + 1, 16)
+    target = max(int(n_items * HEADROOM) // SLOTS + 1, 16)
     n = 16
     while n < target:
         n <<= 1

@@ -10,12 +10,11 @@ both are north_rule additions, built as declarative DataFrame stages:
 - **robots gate**: rules pre-grouped per host into an array column and
   broadcast; longest-prefix match is ``array_max`` over the applicable
   rules — zero shuffles, whole-stage codegen.
-- **politeness budget**: two-phase per-host top-k. Phase 1 caps each
-  (host, salt) bucket at the budget (kills the hot-host straggler before
-  the wide window), phase 2 applies the exact per-host
-  ``row_number() <= budget`` on survivors. Correct because the per-host
-  top-B rows under (priority, url) ordering are contained in the union of
-  per-salt top-B rows.
+- **politeness budget**: one exact per-host ``row_number() <= budget``
+  window. A literal bound at the largest budget lets Spark plan a Partial
+  ``WindowGroupLimit`` before the host exchange, so a hot host ships at
+  most that many rows per map partition (no hot-host straggler in the
+  window).
 - **deterministic order**: the fetch-order contract is the data-defined
   sort key ``(round, priority, url)`` — never task completion order.
   URLs are ASCII, so Spark and the Python oracle sort identically.
@@ -26,32 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-SALT_BUCKETS = 16  # floor; auto_salt_buckets scales it with the budget
-TARGET_ROWS_PER_SALT = 4096
-
-
-def auto_salt_buckets(budget: int) -> int:
-    """POLITENESS salt count derived from the per-host BUDGET (r3 verdict:
-    a fixed 16 concentrates the phase-1 cap windows when one host's
-    budget is 10^5). With budget/TARGET_ROWS_PER_SALT salts the phase-1
-    per-(host, salt) windows stay ~TARGET_ROWS_PER_SALT rows deep for a
-    maxed-out host; the floor (16) keeps small-budget crawls parallel and
-    the cap (1024) bounds the phase-2 exact window's input at
-    salts x budget per host. (FETCH spreading is governed separately by
-    fetch_salt_buckets — the two were decoupled in r4.)
-
-    ANY salt count is correct: phase 1 caps each (host, salt) bucket at
-    the full budget, and the per-host top-B under (priority, url) ordering
-    is always contained in the union of per-salt top-Bs (tested over
-    budgets in tests/test_plans.py)."""
-    return max(SALT_BUCKETS, min(1024, budget // TARGET_ROWS_PER_SALT))
-
 
 def fetch_salt_buckets(n_partitions: int) -> int:
     """FETCH-repartition salt count: 16 buckets per fetch partition.
     Exposed so the skew bench reports exactly what salted_repartition
     measures (no hand-copied formula to drift)."""
-    return max(SALT_BUCKETS, 16 * n_partitions)
+    return 16 * max(n_partitions, 1)
 
 
 def robots_like_pattern(p) -> "F.Column":
@@ -151,7 +130,7 @@ def politeness_select(
     candidates: DataFrame,
     politeness: DataFrame,
     default_budget: int = 8,
-    n_salts: int | None = None,
+    max_budget: int | None = None,
 ) -> DataFrame:
     """Per-host top-budget selection ordered by (priority, url).
 
@@ -159,41 +138,39 @@ def politeness_select(
     Hosts missing from the dim get ``default_budget``; ``None`` means every
     host does (no budget join). Budget 0 hosts are never selected.
     Applied BEFORE salting so salts can't violate budgets.
-    ``n_salts`` defaults to auto_salt_buckets(default_budget); the engine
-    passes the dim's max budget through auto_salt_buckets instead.
+
+    ``max_budget`` is the largest per-host budget (``default_budget`` when
+    there is no dim; required with one). The ``rn <= max_budget`` conjunct
+    never changes the result; it is the literal bound from which Spark
+    plans a Partial ``WindowGroupLimit`` below the ``hashpartitioning(host)``
+    exchange (``get_spark`` raises
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` so any budget gets
+    it). A value below some host's budget would truncate that host.
     """
-    if n_salts is None:
-        n_salts = auto_salt_buckets(default_budget)
     if politeness is None:
         cand = candidates.withColumn("__budget", F.lit(default_budget))
+        max_budget = default_budget if max_budget is None else max_budget
+    elif max_budget is None:
+        raise ValueError("politeness_select with a politeness dim needs max_budget")
     else:
         cand = candidates.join(
             F.broadcast(politeness.select("host", "max_fetches_per_round")), "host", "left"
         ).withColumn("__budget", F.coalesce(F.col("max_fetches_per_round"), F.lit(default_budget)))
 
-    # phase 1: cheap local cap per (host, salt) — bounds the skewed host's
-    # contribution to the exact window below
-    salt = F.pmod(F.col("url_hash"), F.lit(n_salts))
-    w1 = Window.partitionBy("host", salt).orderBy("priority", "url")
-    pruned = cand.withColumn("__rn1", F.row_number().over(w1)).filter(
-        F.col("__rn1") <= F.col("__budget")
-    )
-
-    # phase 2: exact per-host budget
-    w2 = Window.partitionBy("host").orderBy("priority", "url")
+    w = Window.partitionBy("host").orderBy("priority", "url")
+    rn = F.col("__rn")
     return (
-        pruned.withColumn("__rn", F.row_number().over(w2))
-        .filter((F.col("__rn") <= F.col("__budget")) & (F.col("__budget") > 0))
-        .drop("__rn1", "__rn", "__budget", "max_fetches_per_round")
+        cand.withColumn("__rn", F.row_number().over(w))
+        .filter((rn <= max_budget) & (rn <= F.col("__budget")) & (F.col("__budget") > 0))
+        .drop("__rn", "__budget", "max_fetches_per_round")
     )
 
 
 def salted_repartition(selected: DataFrame, n_partitions: int) -> DataFrame:
     """Spread the selected round across workers by (host, salt) so one hot
     host cannot serialize the fetch stage. Budgets were already enforced,
-    so the fetch salt is DECOUPLED from the politeness salt (r4): it has
-    no correctness role — it only controls distribution — and is
-    fetch_salt_buckets (16 per partition), which drops a 50%-one-host
+    so the fetch salt has no correctness role — it only controls
+    distribution — and is fetch_salt_buckets (16 per partition), which drops a 50%-one-host
     round's max/median partition wall from ~2.6 to ~1.3 (balls-into-bins:
     hot-row std per partition ~ H/sqrt(salts x partitions); measured in
     BENCH/BASELINE.md "Adversarial host skew")."""

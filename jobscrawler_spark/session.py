@@ -12,11 +12,16 @@ chosen so the same code is correct on a multi-executor cluster:
   re-reading the unchanged ``pyspark.zip``: 0.2-0.35 s per Python task on
   CPython 3.11. The package's parent dir goes on the workers' PYTHONPATH
   so the daemon imports whatever the driver's working dir is.
+- ``spark.sql.optimizer.windowGroupLimitThreshold`` at the int maximum:
+  Spark plans a ``row_number() <= k`` filter's partial per-group limit
+  before the shuffle only for ``k`` up to this threshold (default 1000),
+  and the politeness selection needs it for any per-host budget.
 
 Under spark-submit ``get_spark`` returns the session spark-submit built, so
-pass the daemon there: ``--conf
+pass both there: ``--conf
 spark.python.daemon.module=jobscrawler_spark.worker_daemon`` (the package
-must be importable on the executors, e.g. ``--py-files``).
+must be importable on the executors, e.g. ``--py-files``) and ``--conf
+spark.sql.optimizer.windowGroupLimitThreshold=2147483647``.
 """
 
 from __future__ import annotations
@@ -77,6 +82,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.python.daemon.module", "jobscrawler_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", str(2**31 - 1))
     )
     if extra_conf:
         for k, v in extra_conf.items():

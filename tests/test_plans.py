@@ -1,10 +1,12 @@
 """Physical-plan quality gates: these lock in the performance properties
-the engine is designed around (pushdown to scan, broadcast dims, two-phase
-windows, salted fetch spreading). A regression that silently de-optimizes
-a plan fails here even though results stay correct."""
+the engine is designed around (pushdown to scan, broadcast dims, a
+per-host window limited before its shuffle, salted fetch spreading). A
+regression that silently de-optimizes a plan fails here even though
+results stay correct."""
 
 import contextlib
 import io
+import re
 
 import pandas as pd
 import pytest
@@ -44,17 +46,58 @@ def test_anti_join_strategy(spark):
     assert "LeftAnti" in p
 
 
+def _assert_partial_limit_below_host_exchange(p: str) -> None:
+    """One row_number() window over one host shuffle, and the shuffle's
+    child is Spark's Partial per-host limit (formatted plan: the operator
+    tree, then one "(id) Name" block per operator)."""
+    tree, *nodes = p.split("\n\n")
+    assert sum(n.startswith("(") and n.split("\n")[0].endswith(") Window") for n in nodes) == 1, p
+    shuffles = [l for l in p.splitlines() if "hashpartitioning(" in l]
+    assert len(shuffles) == 1 and "hashpartitioning(host#" in shuffles[0], shuffles
+    lines = tree.splitlines()
+    i = next(i for i, l in enumerate(lines) if "- Exchange (" in l)
+    child = re.search(r"- WindowGroupLimit \((\d+)\)", lines[i + 1])
+    assert child, lines[i : i + 2]
+    node = next(n for n in nodes if n.startswith(f"({child.group(1)}) WindowGroupLimit"))
+    assert node.rstrip().endswith("Partial"), node
+
+
 def test_politeness_two_phase_window(spark):
+    """Two phases of one window: Spark's Partial per-host limit before the
+    host shuffle and its Final limit after it, for a dim-override input
+    and for a literal-budget input."""
     seeds = spark.createDataFrame(
         [(f"http://h{i % 4:02d}.example.com/p/{i}", float(i % 97) / 97, 0) for i in range(500)],
         ["url", "priority", "depth"],
     )
     cand = with_canonical(seeds)
-    pol = spark.createDataFrame(gen_politeness(4))
-    p = _plan(politeness_select(cand, pol))
-    # two row_number windows (salt-local cap, then exact per-host budget)
-    assert p.count("row_number()") == 2
+    pol = gen_politeness(4)
+    max_budget = max(int(pol["max_fetches_per_round"].max()), 8)  # 8: the default budget
+    p = _plan(politeness_select(cand, spark.createDataFrame(pol), 8, max_budget))
+    _assert_partial_limit_below_host_exchange(p)
     assert "BroadcastHashJoin" in p  # politeness dim broadcast
+    # the literal-budget input (no dim) plans the same shape
+    _assert_partial_limit_below_host_exchange(_plan(politeness_select(cand, None, 8)))
+
+
+def test_politeness_partial_limit_for_a_large_budget(spark):
+    """A 10^5 bound is past Spark's default windowGroupLimitThreshold
+    (1000); get_spark raises it, so a hot host is still cut to its budget
+    per map partition before the host shuffle. The input is range-backed:
+    Spark also skips the limit when the input's known row count is below it."""
+    host = F.when(F.col("id") < 1000, "cold.example.com").otherwise("hot.example.com")
+    cand = spark.range(200_000).select(
+        host.alias("host"),
+        F.concat(F.lit("http://"), host, F.lit("/p/"), F.col("id").cast("string")).alias("url"),
+        (F.col("id") % 997 / 997.0).alias("priority"),
+    )
+    pol = spark.createDataFrame(
+        pd.DataFrame(
+            {"host": ["hot.example.com"], "max_fetches_per_round": [10**5], "crawl_delay_rounds": [0]}
+        )
+    )
+    p = _plan(politeness_select(cand, pol, 8, 10**5))
+    _assert_partial_limit_below_host_exchange(p)
 
 
 def test_robots_gate_no_fact_shuffle(spark):
@@ -88,7 +131,7 @@ def test_salting_spreads_hot_host(spark):
             {"host": ["hot.example.com"], "max_fetches_per_round": [512], "crawl_delay_rounds": [0]}
         )
     )
-    selected = politeness_select(cand, pol)
+    selected = politeness_select(cand, pol, max_budget=512)
     parts = (
         salted_repartition(selected, 16)
         .withColumn("pid", F.spark_partition_id())
@@ -97,32 +140,16 @@ def test_salting_spreads_hot_host(spark):
         .count()
     )
     assert parts > 4  # one host spread across many partitions
-    assert selected.count() == 512  # budget exact despite salting
-
-
-def test_auto_salt_buckets_formula():
-    from jobscrawler_spark.operators.frontier import (
-        SALT_BUCKETS,
-        TARGET_ROWS_PER_SALT,
-        auto_salt_buckets,
-    )
-
-    assert auto_salt_buckets(0) == SALT_BUCKETS
-    assert auto_salt_buckets(8) == SALT_BUCKETS  # small budgets keep the floor
-    assert auto_salt_buckets(100_000) == 100_000 // TARGET_ROWS_PER_SALT
-    assert auto_salt_buckets(10**8) == 1024  # capped: phase-2 input bounded
+    assert selected.count() == 512  # budget exact, none cut by the bound
 
 
 @pytest.mark.parametrize("budget", [2, 64, 997])
 def test_politeness_select_exact_across_salt_counts(spark, budget):
-    """Correctness of the two-phase top-k is salt-count INVARIANT: for any
-    budget (and its auto-derived salt count, plus adversarial counts 1 and
-    977-coprime) the selected set equals the direct exact per-host window.
-    Pins r4's budget-derived auto_salt_buckets against the phase-1-cap
-    containment argument (top-B ⊆ union of per-salt top-Bs)."""
+    """The one-window selection (no salts: the id predates their removal)
+    equals the direct exact per-host window for small and large budgets,
+    with a per-host override above the default and a budget-0 host that
+    must never be selected."""
     from pyspark.sql import Window
-
-    from jobscrawler_spark.operators.frontier import auto_salt_buckets
 
     n = 3000
     seeds = pd.DataFrame(
@@ -136,30 +163,32 @@ def test_politeness_select_exact_across_salt_counts(spark, budget):
     pol = spark.createDataFrame(
         pd.DataFrame(
             {
-                "host": ["h00.example.com"],
-                "max_fetches_per_round": [budget * 2],  # per-host override path
-                "crawl_delay_rounds": [0],
+                "host": ["h00.example.com", "h01.example.com"],
+                "max_fetches_per_round": [budget * 2, 0],  # override, budget 0
+                "crawl_delay_rounds": [0, 0],
             }
         )
     )
     w = Window.partitionBy("host").orderBy("priority", "url")
-    budget_col = F.when(
-        F.col("host") == "h00.example.com", F.lit(budget * 2)
-    ).otherwise(F.lit(budget))
+    budget_col = (
+        F.when(F.col("host") == "h00.example.com", F.lit(budget * 2))
+        .when(F.col("host") == "h01.example.com", F.lit(0))
+        .otherwise(F.lit(budget))
+    )
     exact = (
         cand.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= budget_col)
         .select("url")
     )
     expected = sorted(r["url"] for r in exact.collect())
-    for salts in (1, auto_salt_buckets(budget), 977):
-        got = sorted(
-            r["url"]
-            for r in politeness_select(cand, pol, budget, n_salts=salts)
-            .select("url")
-            .collect()
-        )
-        assert got == expected, (budget, salts)
+    assert expected and not any("//h01." in u for u in expected)
+    got = sorted(
+        r["url"]
+        for r in politeness_select(cand, pol, budget, max_budget=budget * 2)
+        .select("url")
+        .collect()
+    )
+    assert got == expected, budget
 
 
 def test_asof_join_single_shuffle_no_range_join(spark):

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from jobscrawler_spark.engine import CrawlEngine
+from jobscrawler_spark.engine import CrawlEngine, recrawl_horizon
 from jobscrawler_spark.generators import gen_politeness, gen_robots, gen_seeds
 from jobscrawler_spark.operators.seen_set import SeenSet
 from jobscrawler_spark.oracle.simulator import OracleCrawler
@@ -27,6 +27,13 @@ def _no_delay_politeness(n_hosts: int, seed: int) -> pd.DataFrame:
     pol = gen_politeness(n_hosts, seed=seed)
     pol["crawl_delay_rounds"] = 0
     return pol
+
+
+def test_recrawl_horizon_is_a_function_of_the_round():
+    """Rows fetched in round f stop blocking from round f + recrawl_after
+    + 1 on: the oldest still-blocking round is r - recrawl_after."""
+    assert [recrawl_horizon(r, None) for r in range(4)] == [None] * 4
+    assert [recrawl_horizon(r, 2) for r in range(6)] == [None, None, None, 1, 2, 3]
 
 
 def _run_engine(spark, tmp_path, prefilter: str, pol, compact_every: int = 8) -> tuple[list, list]:
@@ -47,7 +54,8 @@ def _run_engine(spark, tmp_path, prefilter: str, pol, compact_every: int = 8) ->
         (r["round"], r["url"])
         for r in eng.fetch_log().select("round", "url").collect()
     ]
-    cutoff = eng._recrawl_cutoff
+    # the last round expired the rows of rounds <= this cutoff
+    cutoff = eng.next_round - 1 - eng.recrawl_after - 1
     effective = sorted(
         r["url"]
         for r in eng.seen.all_urls(spark)

@@ -21,11 +21,13 @@ from jobscrawler_spark.oracle.simulator import OracleCrawler
 from jobscrawler_spark.plans.tables import SnapshotTable
 from jobscrawler_spark.schemas import ROUND_METRICS
 
-# measured on this crawl: 18-20 jobs per round (20-22 while re-enqueued
-# rows had an append of their own, whose shuffle and write cost 2 jobs;
-# 24 while expiry deleted cuckoo fingerprints: a shuffle and a filter
-# write); before the job cuts it was 43-80 per round
-MAX_JOBS_PER_ROUND = 20
+# measured on this crawl: 17-19 jobs per round (18-20 while the
+# politeness selection ran a salted window, and its shuffle, before the
+# per-host one; 20-22 while re-enqueued rows had an append of their own,
+# whose shuffle and write cost 2 jobs; 24 while expiry deleted cuckoo
+# fingerprints: a shuffle and a filter write); before the job cuts it was
+# 43-80 per round
+MAX_JOBS_PER_ROUND = 19
 ROUNDS = 4
 ARGS = dict(
     n_shards=4,
@@ -53,7 +55,8 @@ def _oracle(seeds, pol, rob, rounds: int, **kw) -> OracleCrawler:
 
 def _live_seen(eng: CrawlEngine, spark) -> list[str]:
     """The seen set minus the rows re-crawl expiry already forgot."""
-    cutoff = eng._recrawl_cutoff
+    # the last round expired the rows of rounds <= this cutoff
+    cutoff = eng.next_round - 1 - eng.recrawl_after - 1
     return sorted(
         r["url"]
         for r in eng.seen.all_urls(spark).filter(F.col("round_added") > cutoff).collect()
