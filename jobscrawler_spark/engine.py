@@ -130,7 +130,7 @@ class CrawlEngine:
         max_depth: int = 2,
         fetch_partitions: int | None = None,
         compact_every: int = 8,
-        prefilter: str = "bloom",  # or "cuckoo" (north_star's alternative)
+        prefilter: str = "bloom",  # a seen_set.PREFILTERS key: "bloom" or "cuckoo"
         recrawl_after: int | None = None,
         priority_mode: str = "hash",
     ):
@@ -146,7 +146,7 @@ class CrawlEngine:
         self.frontier = DeltaFrontier(f"{base_path}/frontier", compact_every=compact_every)
         self.images = SnapshotTable(f"{base_path}/images", IMAGES_LANDED)
         self.metrics = SnapshotTable(f"{base_path}/metrics", ROUND_METRICS)
-        self.seen = SeenSet(base_path, n_shards, prefilter=prefilter)
+        self.seen = SeenSet(base_path, prefilter=prefilter)
         # re-crawl policy (r5): URLs fetched in round f are forgotten and
         # re-enqueued at the start of round f + recrawl_after + 1. Derived
         # purely from the round number, so resume needs no extra state.

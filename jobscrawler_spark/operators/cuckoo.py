@@ -1,4 +1,4 @@
-"""Cuckoo-filter prefilter — the north_star's alternative to the bloom.
+"""Cuckoo-filter prefilter — the seen set's alternative to the bloom.
 
 Partial-key cuckoo filter (Fan et al., CoNEXT'14 construction): 16-bit
 fingerprints, 4 slots per bucket, the second candidate bucket derived as
@@ -10,6 +10,13 @@ Determinism contract (the whole engine's hashes must replay identically):
 items are inserted in SORTED hash order and the eviction victim slot is
 ``(kick_count % SLOTS)`` — no randomness, so the serialized table bytes
 are a pure function of the hash SET.
+
+Same interface as ``bloom``: a segment is its bytes. ``build`` sizes the
+table from the item count (``HEADROOM`` slots per item, a power-of-two
+bucket count) and doubles the bucket count while an insert exceeds
+``MAX_KICKS``, so it never fails; ``contains`` reads the bucket count back
+as ``len(buf) // (2 * SLOTS)``. A filter is never inserted into after its
+build: the seen set appends new segments instead.
 
 Same exactness stance as the bloom: this is a PREFILTER only — a miss
 proves "never seen" (no false negatives), a hit falls through to the
@@ -43,63 +50,53 @@ def _alt_bucket(bucket: np.ndarray, fp: np.ndarray, n_buckets: int) -> np.ndarra
     return np.bitwise_xor(bucket.astype(np.uint64), mixed).astype(np.int64) % n_buckets
 
 
-def size_for(n_items: int) -> int:
-    """Power-of-two bucket count with load-factor headroom."""
-    target = max(int(n_items * HEADROOM) // SLOTS + 1, 16)
-    n = 16
-    while n < target:
-        n <<= 1
-    return n
+def build(hashes: np.ndarray) -> bytes:
+    """The filter holding ``hashes``: the next power-of-two bucket count
+    (at least 16) with HEADROOM slots per item, doubled while an insert
+    exceeds MAX_KICKS."""
+    hashes = np.sort(hashes.astype(np.uint64))
+    n_buckets = 16
+    while n_buckets < int(len(hashes) * HEADROOM) // SLOTS + 1:
+        n_buckets <<= 1
+    while (table := _insert(hashes, n_buckets)) is None:
+        n_buckets <<= 1
+    return np.array(table, dtype=np.uint16).tobytes()
 
 
-def build(hashes: np.ndarray, n_buckets: int) -> bytes | None:
-    """Serialize a filter containing ``hashes``; None when insertion fails
-    (over capacity — the caller resizes and rebuilds)."""
-    table = np.zeros((n_buckets, SLOTS), dtype=np.uint16)
-    if insert(table, np.sort(hashes.astype(np.uint64))):
-        return table.tobytes()
-    return None
+def _insert(hashes: np.ndarray, n_buckets: int) -> list[int] | None:
+    """The flat (bucket, slot) table holding ``hashes`` in their order, or
+    None when an item exceeds MAX_KICKS. Python ints: the kick loop is
+    per item, where numpy scalars cost more than they save."""
+    table = [0] * (n_buckets * SLOTS)
+    mult = int(_FP_MULT)
 
+    def place(bucket: int, fp: int) -> bool:
+        for slot in range(bucket * SLOTS, (bucket + 1) * SLOTS):
+            if table[slot] == 0:
+                table[slot] = fp
+                return True
+        return False
 
-def load(buf: bytes, n_buckets: int) -> np.ndarray:
-    return np.frombuffer(buf, dtype=np.uint16).reshape(n_buckets, SLOTS).copy()
-
-
-def insert(table: np.ndarray, hashes: np.ndarray) -> bool:
-    """Insert (mutates table); False when any item exceeds MAX_KICKS."""
-    n_buckets = table.shape[0]
-    fps = _fingerprints(hashes)
-    b1s = _bucket1(hashes, n_buckets)
-    for fp, b1 in zip(fps, b1s):
-        fp = np.uint16(fp)
-        b = int(b1)
-        placed = False
-        for cand in (b, int(_alt_bucket(np.array([b]), np.array([fp]), n_buckets)[0])):
-            empty = np.flatnonzero(table[cand] == 0)
-            if len(empty):
-                table[cand, empty[0]] = fp
-                placed = True
+    for fp, b in zip(_fingerprints(hashes).tolist(), _bucket1(hashes, n_buckets).tolist()):
+        cur = (b ^ (fp * mult % n_buckets)) % n_buckets
+        if place(b, fp) or place(cur, fp):
+            continue
+        for kick in range(MAX_KICKS):
+            victim = cur * SLOTS + kick % SLOTS
+            fp, table[victim] = table[victim], fp
+            cur = (cur ^ (fp * mult % n_buckets)) % n_buckets
+            if place(cur, fp):
                 break
-        kicks = 0
-        cur = int(_alt_bucket(np.array([b]), np.array([fp]), n_buckets)[0])
-        while not placed:
-            if kicks >= MAX_KICKS:
-                return False
-            victim_slot = kicks % SLOTS
-            fp, table[cur, victim_slot] = table[cur, victim_slot], fp
-            cur = int(_alt_bucket(np.array([cur]), np.array([fp]), n_buckets)[0])
-            empty = np.flatnonzero(table[cur] == 0)
-            if len(empty):
-                table[cur, empty[0]] = fp
-                placed = True
-            kicks += 1
-    return True
+        else:
+            return None
+    return table
 
 
-def contains(table: np.ndarray, hashes: np.ndarray) -> np.ndarray:
+def contains(buf: bytes, hashes: np.ndarray) -> np.ndarray:
     """Vectorized membership: True = maybe present, False = definitely not."""
     if len(hashes) == 0:
         return np.zeros(0, dtype=bool)
+    table = np.frombuffer(buf, dtype=np.uint16).reshape(-1, SLOTS)
     n_buckets = table.shape[0]
     h = hashes.astype(np.uint64)
     fps = _fingerprints(h)

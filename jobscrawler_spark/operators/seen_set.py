@@ -8,14 +8,17 @@ the engine's core operator at frontier scale:
 
 - the exact set lives in a snapshot table hash-partitioned by
   ``shard = pmod(xxhash64(canonical_url), N_SHARDS)``
-- the prefilter (bloom bit array with double hashing, or a cuckoo
-  filter) is a table of immutable SEGMENTS, one row per (shard, round):
-  each ``add`` appends segments built from that round's URLs alone and
-  never reads or rewrites the existing ones. A miss in every segment of
-  the shard proves "never seen" (no false negatives); a hit falls through
-  to an exact anti-join on ``(url_hash, url)`` — url included so a 64-bit
-  hash collision can never evict a URL. Exactness is what the north rule
-  demands.
+- the prefilter is a table of immutable SEGMENTS, one row per (shard,
+  round): each ``add`` appends segments built from that round's URLs alone
+  and never reads or rewrites the existing ones. A segment is its bytes,
+  built and tested by the backend module ``PREFILTERS`` names (``bloom``,
+  the default, or ``cuckoo``), whose whole interface is
+  ``build(hashes) -> bytes`` and ``contains(bytes, hashes) -> mask``; the
+  backend sizes the segment and reads its size back from the bytes' length.
+  A miss in every segment of the shard proves "never seen" (no false
+  negatives); a hit falls through to an exact anti-join on
+  ``(url_hash, url)`` — url included so a 64-bit hash collision can never
+  evict a URL. Exactness is what the north rule demands.
 - expiry is LOGICAL and per segment: each segment records the newest
   ``round_added`` it holds, and a probe with ``min_round_added`` drops the
   segments below it before testing, the same predicate the exact set's
@@ -44,116 +47,9 @@ from pyspark.sql.types import NumericType
 
 from ..plans.tables import SnapshotTable
 from ..schemas import SEEN_BLOOM, SEEN_SET
+from . import bloom, cuckoo
 
-BITS_PER_ITEM = 16
-N_HASHES = 7
-MIN_BITS = 1 << 13  # 8192 bits minimum per segment
-
-
-# ---------------------------------------------------------------------------
-# numpy bloom primitives (vectorized over whole hash arrays)
-# ---------------------------------------------------------------------------
-
-
-def _mix64(h: np.ndarray) -> np.ndarray:
-    """splitmix64 finalizer — derives the second probe stream."""
-    h = h.astype(np.uint64, copy=True)
-    h ^= h >> np.uint64(30)
-    h *= np.uint64(0xBF58476D1CE4E5B9)
-    h ^= h >> np.uint64(27)
-    h *= np.uint64(0x94D049BB133111EB)
-    h ^= h >> np.uint64(31)
-    return h
-
-
-def _positions(hashes: np.ndarray, n_bits: int, k: int = N_HASHES) -> np.ndarray:
-    """(k, n) probe positions via double hashing."""
-    h1 = hashes.astype(np.uint64)
-    h2 = _mix64(h1) | np.uint64(1)
-    nb = np.uint64(n_bits)
-    return np.stack([(h1 + np.uint64(i) * h2) % nb for i in range(k)])
-
-
-def bloom_build(hashes: np.ndarray, n_bits: int) -> bytes:
-    bits = np.zeros(n_bits // 8, dtype=np.uint8)
-    if len(hashes):
-        pos = _positions(hashes, n_bits).ravel()
-        np.bitwise_or.at(bits, pos >> np.uint64(3), (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)))
-    return bits.tobytes()
-
-
-def bloom_test(bits_buf: bytes, hashes: np.ndarray, n_bits: int) -> np.ndarray:
-    """Boolean array: True = maybe seen, False = definitely unseen."""
-    if len(hashes) == 0:
-        return np.zeros(0, dtype=bool)
-    bits = np.frombuffer(bits_buf, dtype=np.uint8)
-    pos = _positions(hashes, n_bits)
-    probe = (bits[(pos >> np.uint64(3)).astype(np.int64)] >> (pos & np.uint64(7)).astype(np.uint8)) & 1
-    return probe.all(axis=0)
-
-
-# ---------------------------------------------------------------------------
-# prefilter backends: bloom (default) and cuckoo (north_star's alternative —
-# lower FP rate). Same contract: a miss PROVES "never seen"; a cuckoo build
-# may fail (None) over capacity -> _built_row doubles the size. The `size`
-# value is bloom bits or cuckoo bucket count respectively (stored in the
-# table's n_bits column either way).
-# ---------------------------------------------------------------------------
-
-
-class _BloomBackend:
-    @staticmethod
-    def size_for(n_items: int) -> int:
-        target = max(n_items * BITS_PER_ITEM, MIN_BITS)
-        n = MIN_BITS
-        while n < target:
-            n <<= 1
-        return n
-
-    @staticmethod
-    def build(hashes: np.ndarray, size: int) -> bytes | None:
-        return bloom_build(hashes, size)
-
-    @staticmethod
-    def test(buf: bytes, hashes: np.ndarray, size: int) -> np.ndarray:
-        return bloom_test(buf, hashes, size)
-
-
-class _CuckooBackend:
-    @staticmethod
-    def size_for(n_items: int) -> int:
-        from . import cuckoo
-
-        return cuckoo.size_for(max(n_items, 1))
-
-    @staticmethod
-    def build(hashes: np.ndarray, size: int) -> bytes | None:
-        from . import cuckoo
-
-        return cuckoo.build(hashes, size)
-
-    @staticmethod
-    def test(buf: bytes, hashes: np.ndarray, size: int) -> np.ndarray:
-        from . import cuckoo
-
-        return cuckoo.contains(cuckoo.load(buf, size), hashes)
-
-
-PREFILTERS = {"bloom": _BloomBackend, "cuckoo": _CuckooBackend}
-
-
-def _built_row(backend, shard: int, hashes: np.ndarray, round_added: int) -> pd.DataFrame:
-    """A filter segment for ``hashes``, doubling the size until the backend
-    can hold them (cuckoo builds may fail over capacity)."""
-    size = backend.size_for(len(hashes))
-    bits = backend.build(hashes, size)
-    while bits is None:
-        size <<= 1
-        bits = backend.build(hashes, size)
-    return pd.DataFrame(
-        [{"shard": shard, "bits": bits, "n_items": len(hashes), "n_bits": size,
-          "round_added": round_added}]
-    )
+PREFILTERS = {"bloom": bloom, "cuckoo": cuckoo}
 
 
 def _shard_summary(batches):
@@ -170,8 +66,9 @@ def _shard_summary(batches):
 
 
 class SeenSet:
-    def __init__(self, base_path: str, n_shards: int = 16, prefilter: str = "bloom"):
-        self.n_shards = n_shards
+    def __init__(self, base_path: str, prefilter: str = "bloom"):
+        if prefilter not in PREFILTERS:
+            raise ValueError(f"prefilter={prefilter!r}, choose one of {sorted(PREFILTERS)}")
         # hive-partitioned: the probe prunes to hit shards
         self.seen = SnapshotTable(f"{base_path}/seen_set", SEEN_SET, partition_by="shard")
         self.bloom = SnapshotTable(f"{base_path}/seen_bloom", SEEN_BLOOM)
@@ -214,7 +111,10 @@ class SeenSet:
 
         def build(key, pdf):
             hashes = pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-            return _built_row(backend, int(key[0]), hashes, int(pdf["round_added"].max()))
+            return pd.DataFrame(
+                [{"shard": int(key[0]), "bits": backend.build(hashes), "n_items": len(hashes),
+                  "round_added": int(pdf["round_added"].max())}]
+            )
 
         return (
             rows.select("shard", "url_hash", "round_added")
@@ -370,8 +270,8 @@ class SeenSet:
                 ).drop_duplicates(subset=["url"], keep="first")
             hashes = cand_pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
             maybe = np.zeros(len(hashes), dtype=bool)
-            for bits, size in zip(bloom_pdf["bits"], bloom_pdf["n_bits"]):
-                maybe |= backend.test(bytes(bits), hashes, int(size))
+            for bits in bloom_pdf["bits"]:
+                maybe |= backend.contains(bits, hashes)
             return cand_pdf.assign(__maybe=maybe)
 
         # cached for the summary collect and the anti-join; the previous

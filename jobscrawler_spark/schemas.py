@@ -124,9 +124,9 @@ SEEN_SET = StructType(
 SEEN_BLOOM = StructType(
     [
         StructField("shard", IntegerType(), False),
+        # the backend's build() bytes; the filter's size is their length
         StructField("bits", BinaryType(), True),
         StructField("n_items", LongType(), True),
-        StructField("n_bits", IntegerType(), True),
         # the newest round whose URLs the segment holds
         StructField("round_added", IntegerType(), True),
     ]

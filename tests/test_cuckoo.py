@@ -1,6 +1,6 @@
-"""Cuckoo-filter prefilter: no false negatives, low FP rate, incremental
-insert, build determinism, and full engine-vs-oracle equivalence with
-prefilter='cuckoo'."""
+"""Cuckoo-filter prefilter: no false negatives, low FP rate, one build
+over a union, build determinism, and full engine-vs-oracle equivalence
+with prefilter='cuckoo'."""
 
 import numpy as np
 
@@ -16,37 +16,34 @@ def _hashes(n, seed):
 
 def test_no_false_negatives_and_fp_rate():
     items = _hashes(3000, 7)
-    size = CK.size_for(len(items))
-    buf = CK.build(items, size)
-    assert buf is not None
-    table = CK.load(buf, size)
-    assert CK.contains(table, items).all()
+    buf = CK.build(items)
+    assert CK.contains(buf, items).all()
     other = _hashes(3000, 8)
     fresh = other[~np.isin(other, items)]
-    fp = CK.contains(table, fresh).mean()
+    fp = CK.contains(buf, fresh).mean()
     assert fp < 0.01  # 16-bit fingerprints, 2 buckets x 4 slots: ~0.012% expected
 
 
 def test_incremental_insert_and_delete():
+    """A filter is never inserted into after its build: one filter built
+    from a ∪ b holds both, and misses a set it was not built from."""
     a, b = _hashes(500, 1), _hashes(500, 2)
-    size = CK.size_for(1200)
-    table = CK.load(CK.build(a, size), size)
-    assert CK.insert(table, np.sort(b))
-    assert CK.contains(table, a).all() and CK.contains(table, b).all()
+    buf = CK.build(np.concatenate([a, b]))
+    assert CK.contains(buf, a).all() and CK.contains(buf, b).all()
+    assert CK.contains(buf, _hashes(500, 3)).mean() < 0.01
 
 
 def test_build_is_deterministic_over_set_order():
     items = _hashes(2000, 3)
-    size = CK.size_for(len(items))
     shuffled = items.copy()
     np.random.default_rng(0).shuffle(shuffled)
-    assert CK.build(items, size) == CK.build(shuffled, size)
+    assert CK.build(items) == CK.build(shuffled)
 
 
 def test_over_capacity_flags_and_rebuild(spark, tmp_path):
     """A round 9x the previous one gets a segment sized for it (a build
     that fails over capacity doubles), with no false negatives end to end."""
-    s = SeenSet(str(tmp_path / "seen"), n_shards=2, prefilter="cuckoo")
+    s = SeenSet(str(tmp_path / "seen"), prefilter="cuckoo")
     for rnd, (lo, hi) in enumerate([(0, 200), (200, 2000)]):
         df = spark.createDataFrame(
             [(f"http://h{i % 3:02d}.example.com/p/{i}",) for i in range(lo, hi)], ["url"]

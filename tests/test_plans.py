@@ -108,11 +108,13 @@ def test_robots_gate_no_fact_shuffle(spark):
     cand = with_canonical(seeds)
     rob = spark.createDataFrame(gen_robots(4))
     p = _plan(robots_gate(cand, rob))
-    # the only non-broadcast exchange allowed is the tiny dim-side groupBy
-    fact_exchanges = [
-        l for l in p.splitlines() if "Exchange hashpartitioning" in l and "host" not in l
-    ]
-    assert not fact_exchanges, fact_exchanges
+    # a formatted plan prints an exchange's key on its own "Arguments:"
+    # line; the only hash exchange allowed is the tiny dim-side groupBy,
+    # and the fact side meets the dim in one broadcast join
+    keys = [l for l in p.splitlines() if l.startswith("Arguments: hashpartitioning(")]
+    assert len(keys) == 1 and keys[0].startswith("Arguments: hashpartitioning(host#"), p
+    assert len(re.findall(r"^\(\d+\) BroadcastHashJoin", p, re.M)) == 1, p
+    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p
 
 
 def test_salting_spreads_hot_host(spark):

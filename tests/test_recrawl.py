@@ -122,7 +122,7 @@ def test_seen_set_expire_deletes_cuckoo_fingerprints(spark, tmp_path):
     prefilter without the exact backstop."""
     from jobscrawler_spark.functions.urls import with_canonical
 
-    ss = SeenSet(str(tmp_path / "seen"), n_shards=4, prefilter="cuckoo")
+    ss = SeenSet(str(tmp_path / "seen"), prefilter="cuckoo")
     urls = [f"http://h{i % 3:02d}.example.com/p/{i}" for i in range(40)]
     df = with_canonical(
         spark.createDataFrame([(u,) for u in urls], "url string"), n_shards=4

@@ -9,6 +9,7 @@ status tracker. The crawl must still equal the oracle's.
 """
 
 import collections
+import os
 import threading
 
 import pandas as pd
@@ -188,6 +189,38 @@ def test_politeness_update_runs_no_job_and_steers_the_next_round(spark, tmp_path
     eng.update_politeness(pol2)
     assert sorted(map(tuple, eng._politeness().collect())) == sorted(pol2.itertuples(False, None))
     assert len(eng.politeness_dim.snapshots()) == 1
+
+    # an update that crashed in the dim's expiry, after its overwrite
+    # committed: resume reads the new budgets, the next round selects
+    # under them as the oracle does, and the next update expires the
+    # history the crashed one left
+    commit, commits = SnapshotTable._commit, []
+
+    def crash_in_expiry(self, snapshots):
+        commits.append(snapshots)
+        if len(commits) == 2:
+            raise RuntimeError("crash at the expiry's commit")
+        commit(self, snapshots)
+
+    pol3 = pol2.assign(max_fetches_per_round=[1, 0, 2, 4, 3, 2])
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "_commit", crash_in_expiry)
+        with pytest.raises(RuntimeError):
+            eng.update_politeness(pol3)
+    assert len(eng.politeness_dim.snapshots()) == 2
+    eng = CrawlEngine.resume(spark, eng.base, fetch_partitions=4, **kw)
+    assert sorted(map(tuple, eng._politeness().collect())) == sorted(pol3.itertuples(False, None))
+    eng.run_round()
+    ora.update_politeness(pol2)
+    ora.update_politeness(pol3)
+    ora.run(1)
+    log = [(r["round"], r["priority"], r["url"]) for r in eng.fetch_log().collect()]
+    assert log == [(d["round"], d["priority"], d["url"]) for d in ora.landed]
+    assert {r["url"] for r in eng.seen.all_urls(spark).collect()} == ora.seen
+    eng.update_politeness(pol1)
+    assert len(eng.politeness_dim.snapshots()) == 1
+    dirs = [d for d in os.listdir(eng.politeness_dim.path) if d.startswith("snap=")]
+    assert dirs == [eng.politeness_dim.snapshots()[0]["dir"]]
 
 
 def test_round_writes_never_share_a_table(spark, tmp_path, monkeypatch):
